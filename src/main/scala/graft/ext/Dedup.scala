@@ -388,29 +388,14 @@ object Dedup {
     * corpus and batch, and the batch shingled with the index's params
     * (enforced by [[LshIndex.incrementalPairs]] reading them from the
     * index meta).
-    */
-  private[graft] def lshNearDupPairsIncrementalFrames(
-      corpusBase: DataFrame, corpusBanded: DataFrame, corpusBuckets: DataFrame,
-      newDf: DataFrame, textCol: String, idCol: String,
-      shingleWidth: Int, numHashes: Int, numBands: Int,
-      threshold: Double, maxBucketSize: Int,
-      verifyOn: VerifyOn): (DataFrame, LshSkew.CapCensus) = {
-    val (pairs, caches, census) = lshNearDupPairsIncrementalLazy(
-      corpusBase, corpusBanded, corpusBuckets, newDf, textCol, idCol,
-      shingleWidth, numHashes, numBands, threshold, maxBucketSize, verifyOn)
-    try (pairs.localCheckpoint(true), census)
-    finally caches.foreach(_.unpersist())
-  }
-
-  /** Lazy core of the incremental path (same contract as
-    * [[lshNearDupPairsLazy]] vs the fused entry): returns the
-    * un-materialized pair plan, the persisted batch-side intermediates
-    * the caller must unpersist after its action, and the census.
-    * Exists so tests can pin the plan SHAPE — the batch-side
-    * broadcasts and the shuffle-free corpus scans are the operator's
-    * whole scale argument, and a drift there (a dropped hint, a
-    * corpus-side exchange appearing) should fail a spec, not a
-    * 100 TB run.
+    *
+    * Lazy: returns the un-materialized pair plan, the persisted
+    * batch-side intermediates the caller must unpersist after its
+    * action, and the census — so tests can pin the plan SHAPE (the
+    * batch-side broadcasts and the shuffle-free corpus scans are the
+    * operator's whole scale argument, and a drift there should fail a
+    * spec, not a 100 TB run). The persisted index serves the same plan
+    * through [[BandedIndex.incrementalPairs]].
     */
   private[graft] def lshNearDupPairsIncrementalLazy(
       corpusBase: DataFrame, corpusBanded: DataFrame, corpusBuckets: DataFrame,

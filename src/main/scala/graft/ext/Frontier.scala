@@ -8,19 +8,13 @@ import org.apache.spark.sql.functions._
   * system the one-shot q157 round composes into: a real crawl
   * ITERATES, and the state is the SEEN SET (every URL ever enqueued
   * or fetched) plus the per-round frontier election. This store is an
-  * index-family artifact (the [[IndexFiles]] protocol — writer lease,
-  * meta-last completeness marker, append marker with writer identity
-  * for streaming exactly-once), so kills, replays and concurrent
-  * writers behave exactly like the LSH/SRP/IVF/label stores:
-  *
-  *  - `_frontier_meta.json` is deleted first and republished last
-  *    around every mutation — a killed fold leaves a meta-less store
-  *    that refuses to load (rebuild), never a half-written state;
-  *  - `_appended_through` + the streaming query id make a round fold
-  *    a REPLAY no-op when the engine re-delivers a micro-batch after
-  *    a post-fold pre-commit crash ([[IndexFiles.resolveReplay]]);
-  *  - `seen/d{r}` delta frames + `frontier/r{r}` round artifacts are
-  *    immutable once the meta covering them is published.
+  * index-family artifact: `_frontier_meta.json`, `_appended_through`
+  * and `_writer_lock` are the [[IndexFiles]] protocol, so kills,
+  * replays and concurrent writers behave exactly like the
+  * LSH/SRP/IVF/label stores (a replayed micro-batch is a no-op via
+  * [[IndexFiles.resolveReplay]]). `seen/d{r}` delta frames and
+  * `frontier/r{r}` round artifacts are immutable once the meta
+  * covering them is published.
   *
   * Scale shape: [[foldRound]] is O(batch): the round's links are
   * distinct-ed and anti-joined against the seen set, then gated by
@@ -37,35 +31,22 @@ object Frontier {
     */
   final case class RoundReport(round: Long, nNew: Long, nFrontier: Long)
 
-  private def metaPath(path: String) = s"$path/_frontier_meta.json"
-
-  private def writeMetaText(spark: SparkSession, path: String,
-                            rounds: Long, seenFrom: Long): Unit =
-    IndexFiles.publishMetaFile(spark, metaPath(path),
-      s"""{"version":1,"rounds":$rounds,"seenFrom":$seenFrom}""")
-
-  private def readMetaField(spark: SparkSession, path: String,
-                            field: String): Long = {
-    val text = IndexFiles.readMetaFile(spark, path, "_frontier_meta.json",
-      s"frontier at $path: _frontier_meta.json missing — the store was " +
-        "never created or a mutation died mid-transaction; rebuild it")
-    ("\"" + field + "\"\\s*:\\s*(\\d+)").r.findFirstMatchIn(text)
-      .map(_.group(1).toLong)
-      .getOrElse(sys.error(
-        s"frontier at $path: _frontier_meta.json is corrupt ('$text') — " +
-          "rebuild the store"))
+  private[ext] object Kind extends IndexFiles.Kind("frontier",
+      "_frontier_meta.json", 1, 1, Seq("version", "rounds", "seenFrom")) {
+    def missing(dir: String): String =
+      s"frontier at $dir: _frontier_meta.json missing — the store was " +
+        "never created or a mutation died mid-transaction; rebuild it"
+    override def corrupt(dir: String, text: String): String =
+      s"frontier at $dir: _frontier_meta.json is corrupt ('$text') — " +
+        "rebuild the store"
+    override def unreadable(dir: String, v: Int): String =
+      s"frontier at $dir has format version $v; this build reads $version " +
+        "— upgrade the reader, do not mutate"
   }
-
-  private def readRounds(spark: SparkSession, path: String): Long =
-    readMetaField(spark, path, "rounds")
-
-  /** Lowest live seen-delta index ([[compactSeen]] raises it). */
-  private def readSeenFrom(spark: SparkSession, path: String): Long =
-    readMetaField(spark, path, "seenFrom")
 
   /** Rounds folded so far (round 0 = the seeds). */
   def rounds(spark: SparkSession, path: String): Long =
-    readRounds(spark, path)
+    IndexFiles.readMeta(spark, Kind, path).long("rounds")
 
   /** Highest streaming batch id folded; −1 if none. */
   def appendedThrough(spark: SparkSession, path: String): Long =
@@ -73,7 +54,7 @@ object Frontier {
 
   /** The frontier elected at `round` (0 = seeds). */
   def frontier(spark: SparkSession, path: String, round: Long): DataFrame = {
-    val r = readRounds(spark, path)
+    val r = rounds(spark, path)
     require(round >= 0 && round <= r,
       s"frontier at $path: round $round out of range [0, $r]")
     spark.read.parquet(s"$path/frontier/r$round")
@@ -83,10 +64,9 @@ object Frontier {
     * frames — one merged frame plus post-compaction deltas).
     */
   def seen(spark: SparkSession, path: String): DataFrame = {
-    val r = readRounds(spark, path)
-    val s0 = readSeenFrom(spark, path)
-    (s0 to r).map(i => spark.read.parquet(s"$path/seen/d$i"))
-      .reduce(_ unionAll _)
+    val meta = IndexFiles.readMeta(spark, Kind, path)
+    (meta.long("seenFrom") to meta.long("rounds"))
+      .map(i => spark.read.parquet(s"$path/seen/d$i")).reduce(_ unionAll _)
   }
 
   /** Create the store: the distinct seeds become round 0's frontier
@@ -105,24 +85,24 @@ object Frontier {
       "Frontier.create: seeds must carry a 'nurl' column")
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def entries = fs.listStatus(new Path(path)).map(_.getPath.getName).toSeq
     if (!overwrite && fs.exists(new Path(path))) {
-      val frontierEntries =
-        Set("seen", "frontier", "_frontier_meta.json", "_writer.lock",
-          "_appended_through")
-      val foreign = fs.listStatus(new Path(path))
-        .map(_.getPath.getName).filterNot(frontierEntries)
+      val foreign =
+        entries.filterNot((Seq("seen", "frontier") ++ Kind.protocolFiles).contains)
       require(foreign.isEmpty,
         s"Frontier.create at $path: target contains non-frontier " +
           s"entries (${foreign.take(3).mkString(", ")}${
             if (foreign.length > 3) ", …" else ""}) — refusing to " +
           "destroy them; pass overwrite = true to clobber")
     }
-    fs.delete(new Path(path), true)
     IndexFiles.withWriterLease(spark, path, "Frontier create") {
+      // everything but the lease itself: an overwrite clobbers foreign
+      // entries too, and only once no live writer holds the store
+      IndexFiles.reset(spark, Kind, path, entries.filterNot(_ == IndexFiles.LockFile))
       val s = seeds.select("nurl").distinct()
       s.write.parquet(s"$path/seen/d0")
       s.write.parquet(s"$path/frontier/r0")
-      writeMetaText(spark, path, 0L, 0L)
+      IndexFiles.publish(spark, Kind, path, Kind.meta(1, 0L, 0L))
     }
   }
 
@@ -168,9 +148,8 @@ object Frontier {
                 rules: DataFrame, batchMarker: Option[Long] = None,
                 writer: String = IndexFiles.ManualWriter): RoundReport = {
     IndexFiles.requireWriter(spark, path, writer)
-    IndexFiles.withWriterLease(spark, path, "Frontier foldRound") {
-      val r = readRounds(spark, path)
-      val s0 = readSeenFrom(spark, path)
+    IndexFiles.transaction(spark, Kind, path, "Frontier foldRound") { meta =>
+      val r = meta.long("rounds")
       // materialize the anti-join ONCE, before the meta swap: the
       // plan reads the seen frames this transaction is about to
       // extend, and both the robots election and the seen delta
@@ -185,20 +164,14 @@ object Frontier {
         .localCheckpoint(true)
       val nNew = newUrls.count()
       val nFrontier = elected.count()
-      // meta delete IS the transaction-open crash marker (the
-      // meta-last protocol); the append marker persists — writeMarker
-      // is monotonic per writer identity
-      val fs = new Path(metaPath(path))
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(metaPath(path)), false)
-      elected.write.parquet(s"$path/frontier/r${r + 1}")
-      // the seen delta is EVERY newly discovered URL, elected or not:
-      // a disallowed URL must not be re-gated each time a later page
-      // links to it (the docstring's "still not re-discovered")
-      newUrls.write.parquet(s"$path/seen/d${r + 1}")
-      batchMarker.foreach(id =>
-        IndexFiles.writeMarker(spark, path, id, writer))
-      writeMetaText(spark, path, r + 1, s0)
+      IndexFiles.commit(spark, Kind, path, meta.set("rounds" -> (r + 1)),
+        batchMarker.map(_ -> writer)) {
+        elected.write.parquet(s"$path/frontier/r${r + 1}")
+        // the seen delta is EVERY newly discovered URL, elected or not:
+        // a disallowed URL must not be re-gated each time a later page
+        // links to it (the docstring's "still not re-discovered")
+        newUrls.write.parquet(s"$path/seen/d${r + 1}")
+      }
       RoundReport(r + 1, nNew, nFrontier)
     }
   }
@@ -206,41 +179,25 @@ object Frontier {
   /** Merge the live seen-delta frames into ONE frame keyed at the
     * current round — a crawl runs thousands of rounds, and without
     * compaction every [[foldRound]] anti-join unions that many
-    * parquet reads. Same transaction discipline as the index-family
-    * compactions ([[LabelStore.compact]]): merged frame written to a
-    * tmp path first, row-count parity REQUIRED before the swap, meta
-    * deleted only once the replacement is complete on disk, and the
-    * append marker untouched (compaction is maintenance, not a fold —
-    * replay classification must survive it). Frontier round artifacts
+    * parquet reads. The merged frame is written to a tmp path with
+    * row-count parity REQUIRED ([[IndexFiles.writeChecked]]), then
+    * swapped in by [[IndexFiles.swap]] — meta deleted only once the
+    * replacement is complete on disk, append marker untouched
+    * (compaction is maintenance, not a fold — replay classification
+    * must survive it). Frontier round artifacts
     * are not touched either: they are the crawl's history.
     */
   def compactSeen(spark: SparkSession, path: String,
                   targetFileBytes: Long = 128L * 1024 * 1024): Unit =
-    IndexFiles.withWriterLease(spark, path, "Frontier compactSeen") {
-      val r = readRounds(spark, path)
-      val s0 = readSeenFrom(spark, path)
+    IndexFiles.transaction(spark, Kind, path, "Frontier compactSeen") { meta =>
+      val (r, s0) = (meta.long("rounds"), meta.long("seenFrom"))
       if (s0 < r) {
-        val fs = new Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val tmp = s"$path/seen/compact.tmp"
-        fs.delete(new Path(tmp), true)
-        val cur = seen(spark, path)
-        val n = cur.count()
-        // ~64 bytes/URL raw; size output files to the target like the
-        // index compactions do
-        val parts = math.max(1L, n * 64L / targetFileBytes).toInt
-        cur.coalesce(parts).write.parquet(tmp)
-        val nOut = spark.read.parquet(tmp).count()
-        require(nOut == n,
-          s"Frontier.compactSeen at $path: parity check failed ($n rows " +
-            s"in, $nOut rows out) — tmp left for inspection, store " +
-            "unchanged")
-        fs.delete(new Path(metaPath(path)), false)
-        (s0 to r).foreach(i =>
-          fs.delete(new Path(s"$path/seen/d$i"), true))
-        require(fs.rename(new Path(tmp), new Path(s"$path/seen/d$r")),
-          s"Frontier.compactSeen: rename failed at $path")
-        writeMetaText(spark, path, r, r)
+        IndexFiles.clear(spark, path, Seq("seen/compact.tmp"))
+        // ~64 bytes/URL raw
+        IndexFiles.writeChecked(spark, path, "seen/compact.tmp",
+          "Frontier.compactSeen", seen(spark, path), 64L, targetFileBytes)
+        IndexFiles.swap(spark, Kind, path, Seq("seen/compact.tmp" -> s"seen/d$r"),
+          (s0 to r).map(i => s"seen/d$i"), meta.set("seenFrom" -> r))
       }
     }
 
@@ -293,14 +250,11 @@ object Frontier {
   def streamingRoundBatch(spark: SparkSession, path: String,
                           web: DataFrame, rules: DataFrame)(
       batch: DataFrame, batchId: Long): Unit = {
-    val (writerId, alreadyFolded) =
-      IndexFiles.resolveReplay(spark, path, "Frontier", batchId)
-    if (!alreadyFolded) {
+    IndexFiles.resolveReplay(spark, path, batchId).foreach { writerId =>
       val fr = frontier(spark, path, rounds(spark, path))
       val pages = web.join(fr, Seq("nurl"))
       foldRound(spark, path, discoveredLinks(pages), rules,
         Some(batchId), writerId)
     }
-    ()
   }
 }

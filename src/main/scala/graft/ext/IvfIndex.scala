@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,10 +21,10 @@ import org.apache.spark.sql.functions._
   *   <path>/assignments.parquet  (idCol, vecCol, centroid_id), optional
   * }}}
   *
-  * The meta file is written LAST, so a partially-written index (killed
+  * Every mutation runs the [[IndexFiles]] transaction protocol: the
+  * meta is published LAST, so a partially-written index (killed
   * writer) never loads — [[load]] fails on the missing meta, and
-  * [[loadOrTrain]] retrains over it (Overwrite mode replaces the
-  * partial parquet dirs).
+  * [[loadOrTrain]] retrains over it.
   *
   * Parquet round-trips both frames losslessly (float/double columns
   * are stored bit-exact), so search over a loaded index is
@@ -40,17 +39,12 @@ object IvfIndex {
   val FormatVersion = 1
 
   /** Stamped by [[remove]], stamped back by [[compactAssignments]]'
-    * purge — [[LshIndex.TombstoneVersion]]'s exact contract: the
+    * purge — the [[IndexFiles]] tombstone version: the
     * tombstone layout changes read semantics (served assignments),
     * so a pre-tombstone build must refuse the index loudly, not
     * return removed vectors as neighbors.
     */
   val TombstoneVersion = FormatVersion + 1
-
-  private def requireReadable(meta: Meta, path: String): Unit =
-    require(meta.version == FormatVersion || meta.version == TombstoneVersion,
-      s"IvfIndex at $path has format version ${meta.version}; this build " +
-        s"reads $FormatVersion (and $TombstoneVersion = tombstoned)")
 
   final case class Index(centroids: DataFrame,
                          assignments: Option[DataFrame],
@@ -86,9 +80,42 @@ object IvfIndex {
       appendedMeanDist.filter(_ => trainMeanDist > 0).map(_ / trainMeanDist)
   }
 
-  private final case class Meta(version: Int, idCol: String, vecCol: String,
-                                hasAssignments: Boolean,
-                                drift: Option[DriftCounters])
+  private[ext] object Kind extends IndexFiles.Kind("IvfIndex", "_ivf_meta.json",
+      FormatVersion, TombstoneVersion,
+      Seq("version", "idCol", "vecCol", "hasAssignments")) {
+    def missing(dir: String): String =
+      s"no IVF index at $dir: missing/incomplete (no _ivf_meta.json)"
+    override def corrupt(dir: String, text: String): String =
+      s"IvfIndex meta at $dir/$metaFile exists but is truncated/corrupt " +
+        "(killed writer?) — the index is incomplete; loadOrTrain retrains " +
+        "over it, or delete the index directory"
+    override def newer(dir: String, v: Int): String =
+      s"IvfIndex at $dir has format version $v, newer than this build's " +
+        s"$FormatVersion — refusing to overwrite a newer build's index; " +
+        "delete it explicitly to retrain"
+  }
+
+  /** The drift counter fields, appended to the meta after the required
+    * ones (additive, same format version).
+    */
+  private val DriftFields = Seq("trainN", "trainDistSum", "appendN", "appendDistSum")
+
+  /** The meta's drift counters: absent on metas written by a
+    * pre-stats build or saved without assignments. A PARTIALLY-present
+    * counter set is treated as absent rather than half-read.
+    */
+  private def drift(m: IndexFiles.Meta): Option[DriftCounters] = for {
+    trainN <- m.get("trainN").flatMap(_.toLongOption)
+    trainDistSum <- m.get("trainDistSum").flatMap(_.toDoubleOption)
+    appendN <- m.get("appendN").flatMap(_.toLongOption)
+    appendDistSum <- m.get("appendDistSum").flatMap(_.toDoubleOption)
+  } yield DriftCounters(trainN, trainDistSum, appendN, appendDistSum)
+
+  // drift sums are serialized with toString (Scala prints doubles
+  // round-trip-exact since 2.13), so counters survive the meta
+  // rewrite cycle bit-for-bit
+  private def withDrift(m: IndexFiles.Meta, d: DriftCounters): IndexFiles.Meta =
+    m.set(DriftFields.zip(d.productIterator.toSeq): _*)
 
   /** Persist a trained index. `centroids` is the [[Similarity.kmeansTrain]]
     * output (idCol, vecCol); pass `assignments` (the
@@ -107,24 +134,17 @@ object IvfIndex {
         s"IvfIndex.save: $k '$v' contains a quote/backslash — not " +
           "representable in the index meta; rename the column before saving")
     }
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     IndexFiles.withWriterLease(spark, path, "IvfIndex.save") {
-      // overwrite crash-safety: drop the OLD meta before touching the
-      // parquet dirs, so a save killed mid-rewrite leaves the index
-      // marked incomplete (no meta) instead of an old meta pointing at
-      // half-overwritten frames. The append marker goes too — a rebuilt
-      // index contains none of the marked batches, and a stale marker
-      // would tell a retrying caller their batch is already in
-      fs.delete(new Path(s"$path/_ivf_meta.json"), false)
-      IndexFiles.deleteMarker(spark, path)
-      // a killed compactAssignments' leftover — rebuild owns recovery —
-      // and a stale tombstone frame, which would hide freshly-saved ids
-      fs.delete(new Path(s"$path/assignments.parquet.tmp"), true)
-      fs.delete(new Path(s"$path/$Tombstones"), true)
+      // an earlier save at this path may have written assignments — the
+      // corpus-sized artifact; a save without them must not silently
+      // retain it (nothing would ever read OR remove it)
+      IndexFiles.reset(spark, Kind, path,
+        Seq("assignments.parquet.tmp", "assignments.parquet"))
       centroids
         .select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))
         .write.mode(SaveMode.Overwrite).parquet(s"$path/centroids.parquet")
-      val drift = assignments match {
+      val meta = Kind.meta(FormatVersion, idCol, vecCol, assignments.nonEmpty)
+      IndexFiles.publish(spark, Kind, path, assignments match {
         case Some(a) =>
           a.select(col(idCol), col(vecCol), col("centroid_id"))
             .write.mode(SaveMode.Overwrite).parquet(s"$path/assignments.parquet")
@@ -132,20 +152,11 @@ object IvfIndex {
           // (one map-side scan with the centroids broadcast — never
           // re-evaluates the caller's assignment plan): the baseline
           // the append-side counters are compared against
-          Some(distCounters(spark,
+          withDrift(meta, distCounters(spark,
             spark.read.parquet(s"$path/assignments.parquet"),
             spark.read.parquet(s"$path/centroids.parquet"), idCol, vecCol))
-        case None =>
-          // an earlier save at this path may have written assignments —
-          // the corpus-sized artifact; without this delete it would be
-          // silently retained forever (the new meta says hasAssignments
-          // = false, so nothing would ever read OR remove it)
-          fs.delete(new Path(s"$path/assignments.parquet"), true)
-          None
-      }
-      // meta last: its presence marks the index complete
-      writeMeta(spark, s"$path/_ivf_meta.json",
-        Meta(FormatVersion, idCol, vecCol, assignments.nonEmpty, drift))
+        case None => meta
+      })
     }
   }
 
@@ -170,27 +181,17 @@ object IvfIndex {
     * incomplete index or a format-version mismatch.
     */
   def load(spark: SparkSession, path: String): Index = {
-    val meta = readMeta(spark, s"$path/_ivf_meta.json")
-    requireReadable(meta, path)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val assignments =
-      if (!meta.hasAssignments) None
-      else {
-        val a = spark.read.parquet(s"$path/assignments.parquet")
-        // removed vectors invisible map-side (LshIndex.load's tombstone
-        // semantics): a taken-down vector must never come back as a
-        // neighbor; compactAssignments purges physically
-        if (!fs.exists(new Path(s"$path/$Tombstones"))) Some(a)
-        else Some(a.join(
-          broadcast(spark.read.parquet(s"$path/$Tombstones")
-            .withColumnRenamed("id", meta.idCol)),
-          Seq(meta.idCol), "left_anti"))
-      }
+    val meta = IndexFiles.readMeta(spark, Kind, path)
+    val (idCol, vecCol) = (meta.str("idCol"), meta.str("vecCol"))
+    // removed vectors invisible map-side (the IndexFiles tombstone
+    // semantics): a taken-down vector must never come back as a
+    // neighbor; compactAssignments purges physically
+    val assignments = Option.when(meta.bool("hasAssignments"))(
+      IndexFiles.survivors(spark, path,
+        spark.read.parquet(s"$path/assignments.parquet"), idCol))
     Index(spark.read.parquet(s"$path/centroids.parquet"), assignments,
-      meta.idCol, meta.vecCol)
+      idCol, vecCol)
   }
-
-  private val Tombstones = "tombstones.parquet"
 
   /** Take vectors DOWN — the index family's takedown contract
     * ([[LshIndex.remove]]) for the IVF index: append the ids to the
@@ -206,24 +207,15 @@ object IvfIndex {
     * `ids`: any frame whose FIRST column is the vector id.
     */
   def remove(spark: SparkSession, path: String, ids: DataFrame): Unit = {
-    val meta = readMeta(spark, s"$path/_ivf_meta.json")
-    requireReadable(meta, path)
-    require(meta.hasAssignments,
+    require(IndexFiles.readMeta(spark, Kind, path).bool("hasAssignments"),
       s"IvfIndex at $path was saved without assignments — there is " +
         "nothing persisted to remove from; rebuild the corpus instead")
-    IndexFiles.withWriterLease(spark, path, "IvfIndex.remove") {
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tombPath = new Path(s"$path/$Tombstones")
-      val requested = ids.select(col(ids.columns.head).as("id")).distinct()
-      val fresh =
-        if (fs.exists(tombPath))
-          requested.join(spark.read.parquet(tombPath.toString),
-            Seq("id"), "left_anti")
-        else requested
-      fs.delete(new Path(s"$path/_ivf_meta.json"), false)
-      fresh.coalesce(1).write.mode(SaveMode.Append).parquet(tombPath.toString)
-      writeMeta(spark, s"$path/_ivf_meta.json",
-        meta.copy(version = TombstoneVersion))
+    IndexFiles.transaction(spark, Kind, path, "IvfIndex.remove") { meta =>
+      IndexFiles.commit(spark, Kind, path,
+        meta.set("version" -> TombstoneVersion), None) {
+        IndexFiles.appendTombstones(path,
+          IndexFiles.freshTombstones(spark, path, ids))
+      }
     }
   }
 
@@ -241,29 +233,11 @@ object IvfIndex {
   def loadOrTrain(spark: SparkSession, path: String,
                   idCol: String = "vec_id", vecCol: String = "embedding")
                  (train: => (DataFrame, Option[DataFrame])): Index = {
-    val metaPath = new Path(s"$path/_ivf_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cached =
-      if (!fs.exists(metaPath)) None
-      else parseMeta(readMetaText(spark, metaPath.toString)) match {
-        // a meta that EXISTS but does not parse is a writer killed
-        // mid-meta-write — the one window the meta-last protocol
-        // cannot close. That is an INCOMPLETE index (cache miss,
-        // retrain + Overwrite), not a permanent error; only a meta
-        // that parses can assert a version worth protecting.
-        case None => None
-        case Some(meta0) =>
-          // a tombstoned index is the same cache entry (removals are
-          // state, not identity) — load serves the survivor view
-          val meta = if (meta0.version == TombstoneVersion)
-            meta0.copy(version = FormatVersion) else meta0
-          require(meta.version <= FormatVersion,
-            s"IvfIndex at $path has format version ${meta.version}, newer " +
-              s"than this build's $FormatVersion — refusing to overwrite a " +
-              "newer build's index; delete it explicitly to retrain")
-          if (meta.version == FormatVersion) Some(meta) else None
-      }
-    if (cached.isEmpty) {
+    // a meta that exists but does not parse is a writer killed
+    // mid-meta-write: an INCOMPLETE index (cache miss, retrain), not a
+    // permanent error; only a meta that parses can assert a version
+    // worth protecting
+    if (!IndexFiles.cacheHit(spark, Kind, path)(_.version == FormatVersion)) {
       val (centroids, assignments) = train
       save(spark, path, centroids, assignments, idCol, vecCol)
     }
@@ -310,9 +284,9 @@ object IvfIndex {
   private def appendAs(spark: SparkSession, path: String,
                        newVectors: DataFrame, batchMarker: Option[Long],
                        writer: String): Unit = {
-    val meta0 = readMeta(spark, s"$path/_ivf_meta.json")
-    requireReadable(meta0, path)
-    require(meta0.hasAssignments,
+    val meta0 = IndexFiles.readMeta(spark, Kind, path)
+    val (idCol, vecCol) = (meta0.str("idCol"), meta0.str("vecCol"))
+    require(meta0.bool("hasAssignments"),
       s"IvfIndex at $path was saved without assignments — append has " +
         "nothing to fold into; rebuild with save(..., assignments = Some(...))")
     // identity pre-flight BEFORE the transaction: a mismatch must be a
@@ -322,46 +296,36 @@ object IvfIndex {
     // localCheckpoint: the frame feeds both the parquet append and the
     // drift counters — one assignment scan, not two
     val assigned = Similarity.assignToCentroids(
-      newVectors, centroids, meta0.idCol, meta0.vecCol).localCheckpoint(true)
+      newVectors, centroids, idCol, vecCol).localCheckpoint(true)
     try {
       // the BATCH's distance counters are a pure function of the batch
       // and the frozen centroids — computable outside the lease
-      val batchCounters =
-        if (meta0.drift.isEmpty) None
-        else Some(distCounters(spark, assigned, centroids,
-          meta0.idCol, meta0.vecCol))
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // batch-sized write, not partition-count-sized — the LshIndex
-      // appendFrames discipline (un-coalesced, every fold-in wrote 32
-      // files regardless of batch size; measured via IndexMaintProbe).
-      // ~2 M (id, 64-float vector, centroid) rows ≈ 100 MB-class files
-      val parts = math.max(1L, (assigned.count() + RowsPerAppendFile - 1)
-        / RowsPerAppendFile).toInt
-      IndexFiles.withWriterLease(spark, path, "IvfIndex.append") {
-        // the drift read-modify-write commits INSIDE the lease against
-        // a FRESH meta read — folding into the pre-lease meta0 would
-        // lose a concurrent append's counter update (and re-stamp a
-        // concurrent remove()'s TombstoneVersion back to plain, the
-        // LshIndex.appendFrames argument). A params drift means a
+      val batchCounters = drift(meta0).map(_ =>
+        distCounters(spark, assigned, centroids, idCol, vecCol))
+      // batch-sized write, not partition-count-sized (the BandedIndex
+      // append sizing): ~2 M (id, 64-float vector, centroid) rows ≈
+      // 100 MB-class files
+      val parts = IndexFiles.fileCount(assigned.count(), RowsPerAppendFile)
+      IndexFiles.transaction(spark, Kind, path, "IvfIndex.append") { fresh =>
+        // the drift read-modify-write commits against the FRESH meta —
+        // folding into the pre-lease meta0 would lose a concurrent
+        // append's counter update (and re-stamp a concurrent remove's
+        // tombstone version back to plain). A params drift means a
         // concurrent rebuild: this batch was assigned against dead
         // centroids — loud refusal.
-        val fresh = readMeta(spark, s"$path/_ivf_meta.json")
-        require(
-          fresh.copy(version = meta0.version, drift = meta0.drift) == meta0,
+        val volatile = "version" +: DriftFields
+        require(fresh.without(volatile: _*) == meta0.without(volatile: _*),
           s"IvfIndex at $path was rebuilt with different params while " +
             s"this append was assigning its batch (assigned with $meta0, " +
             s"index now $fresh) — re-run the append against the current index")
-        val drift = for { dc <- fresh.drift; b <- batchCounters } yield
-          dc.copy(appendN = dc.appendN + b.trainN,
-            appendDistSum = dc.appendDistSum + b.trainDistSum)
-        fs.delete(new Path(s"$path/_ivf_meta.json"), false)
-        assigned.select(col(meta0.idCol), col(meta0.vecCol), col("centroid_id"))
-          .coalesce(parts)
-          .write.mode(SaveMode.Append).parquet(s"$path/assignments.parquet")
-        batchMarker.foreach(id =>
-          IndexFiles.writeMarker(spark, path, id, writer))
-        writeMeta(spark, s"$path/_ivf_meta.json",
-          fresh.copy(drift = drift.orElse(fresh.drift)))
+        val next = (for { dc <- drift(fresh); b <- batchCounters } yield
+          withDrift(fresh, dc.copy(appendN = dc.appendN + b.trainN,
+            appendDistSum = dc.appendDistSum + b.trainDistSum))).getOrElse(fresh)
+        IndexFiles.commit(spark, Kind, path, next, batchMarker.map(_ -> writer)) {
+          assigned.select(col(idCol), col(vecCol), col("centroid_id"))
+            .coalesce(parts)
+            .write.mode(SaveMode.Append).parquet(s"$path/assignments.parquet")
+        }
       }
     } finally assigned.unpersist()
   }
@@ -378,8 +342,7 @@ object IvfIndex {
     * counters live in the meta; an older meta has none).
     */
   def driftStat(spark: SparkSession, path: String): DriftStat = {
-    val meta = readMeta(spark, s"$path/_ivf_meta.json")
-    val dc = meta.drift.getOrElse(sys.error(
+    val dc = drift(IndexFiles.readMeta(spark, Kind, path)).getOrElse(sys.error(
       s"IvfIndex at $path carries no drift counters (saved without " +
         "assignments, or by a pre-stats build) — re-save with " +
         "assignments to enable drift tracking"))
@@ -397,10 +360,9 @@ object IvfIndex {
     * never to a post-mutation crash loop. The diagnosing throws live
     * only in the interactive [[driftStat]] face.
     */
-  def driftStatOption(spark: SparkSession, path: String): Option[DriftStat] = {
-    val meta = readMeta(spark, s"$path/_ivf_meta.json")
-    meta.drift.filter(_.trainN > 0).map(mkDriftStat)
-  }
+  def driftStatOption(spark: SparkSession, path: String): Option[DriftStat] =
+    drift(IndexFiles.readMeta(spark, Kind, path)).filter(_.trainN > 0)
+      .map(mkDriftStat)
 
   private def mkDriftStat(dc: DriftCounters): DriftStat =
     DriftStat(dc.trainN, dc.trainDistSum / dc.trainN,
@@ -456,9 +418,7 @@ object IvfIndex {
       // staging dir (invisible to listings) breaks the cycle; a crash
       // mid-save still leaves the documented incomplete-index recovery
       val stage = s"$path/_retrain_tmp"
-      val fs = new Path(path).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(stage), true)
+      IndexFiles.clear(spark, path, Seq("_retrain_tmp"))
       try {
         centroids.write.parquet(s"$stage/centroids")
         assignments.foreach(_.write.parquet(s"$stage/assignments"))
@@ -466,7 +426,7 @@ object IvfIndex {
           spark.read.parquet(s"$stage/centroids"),
           assignments.map(_ => spark.read.parquet(s"$stage/assignments")),
           idx.idCol, idx.vecCol)
-      } finally fs.delete(new Path(stage), true)
+      } finally IndexFiles.clear(spark, path, Seq("_retrain_tmp"))
       RetrainReport(stat, true)
     }
   }
@@ -519,17 +479,15 @@ object IvfIndex {
   def streamingAppendBatch(spark: SparkSession, path: String)(
       onStat: (Option[DriftStat], Long) => Unit): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) => {
-      val (writerId, alreadyFolded) =
-        IndexFiles.resolveReplay(spark, path, "IvfIndex", batchId)
-      if (!alreadyFolded)
-        appendAs(spark, path, batch, Some(batchId), writerId)
+      IndexFiles.resolveReplay(spark, path, batchId).foreach(writerId =>
+        appendAs(spark, path, batch, Some(batchId), writerId))
       // Option, NOT the throwing face: a pre-stats index must degrade
       // to "no stat", never crash-loop a stream AFTER its fold-in
       onStat(driftStatOption(spark, path), batchId)
     }
 
   /** Bound the per-append small-file growth of the assignments frame
-    * — the [[LshIndex.compactFrames]] discipline applied to this
+    * — the [[IndexFiles.swap]] compaction applied to this
     * index's one appendable artifact: every [[append]] writes a fresh
     * small file set into `assignments.parquet`, and after many
     * fold-ins listing + footer reads tax every [[search]]. The
@@ -543,29 +501,15 @@ object IvfIndex {
   def compactAssignments(spark: SparkSession, path: String,
                          targetFileBytes: Long = 128L * 1024 * 1024)
       : graft.ops.Compaction.Report = {
-    val meta = readMeta(spark, s"$path/_ivf_meta.json")
-    requireReadable(meta, path)
-    require(meta.hasAssignments,
+    require(IndexFiles.readMeta(spark, Kind, path).bool("hasAssignments"),
       s"IvfIndex at $path was saved without assignments — nothing to compact")
-    IndexFiles.withWriterLease(spark, path, "IvfIndex.compactAssignments") {
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = s"$path/assignments.parquet.tmp"
-      fs.delete(new Path(tmp), true) // clear a killed compaction's leftover
-      val tombPath = s"$path/$Tombstones"
-      val hasTombs = fs.exists(new Path(tombPath))
-      val report =
-        if (!hasTombs)
-          graft.ops.Compaction.compactTo(spark,
-            s"$path/assignments.parquet", tmp, targetFileBytes)
-        else IndexFiles.purgeRewrite(spark, s"$path/assignments.parquet",
-          tmp, tombPath, meta.idCol, targetFileBytes)
-      fs.delete(new Path(s"$path/_ivf_meta.json"), false)
-      fs.delete(new Path(s"$path/assignments.parquet"), true)
-      require(fs.rename(new Path(tmp), new Path(s"$path/assignments.parquet")),
-        s"IvfIndex.compactAssignments: rename failed at $path")
-      if (hasTombs) fs.delete(new Path(tombPath), true)
-      writeMeta(spark, s"$path/_ivf_meta.json",
-        meta.copy(version = FormatVersion))
+    IndexFiles.transaction(spark, Kind, path, "IvfIndex.compactAssignments") { meta =>
+      IndexFiles.clear(spark, path, Seq("assignments.parquet.tmp"))
+      val report = IndexFiles.rewriteFrame(spark, path, "assignments.parquet",
+        meta.str("idCol"), targetFileBytes)
+      IndexFiles.swap(spark, Kind, path,
+        Seq("assignments.parquet.tmp" -> "assignments.parquet"),
+        Seq(IndexFiles.Tombstones), meta.set("version" -> FormatVersion))
       report
     }
   }
@@ -586,61 +530,4 @@ object IvfIndex {
         Similarity.ivfKnn(c, index.centroids, queries, k, nprobe,
           index.idCol, index.vecCol)
     }
-
-  // hand-rolled flat JSON (write side mirrors the read side below):
-  // four fixed fields, no nesting — a JSON library dependency is not
-  // warranted for this
-  private def writeMeta(spark: SparkSession, path: String, m: Meta): Unit = {
-    // drift sums are serialized with toString (Scala prints doubles
-    // round-trip-exact since 2.13), so counters survive the meta
-    // rewrite cycle bit-for-bit
-    val driftFields = m.drift.map { d =>
-      s""","trainN":${d.trainN},"trainDistSum":${d.trainDistSum}""" +
-        s""","appendN":${d.appendN},"appendDistSum":${d.appendDistSum}"""
-    }.getOrElse("")
-    // atomic write-to-temp + rename — IndexFiles.publishMetaFile
-    IndexFiles.publishMetaFile(spark, path,
-      s"""{"version":${m.version},"idCol":"${m.idCol}","vecCol":"${m.vecCol}","hasAssignments":${m.hasAssignments}$driftFields}""")
-  }
-
-  private def readMeta(spark: SparkSession, path: String): Meta =
-    parseMeta(readMetaText(spark, path)).getOrElse(sys.error(
-      s"IvfIndex meta at $path exists but is truncated/corrupt (killed " +
-        "writer?) — the index is incomplete; loadOrTrain retrains over " +
-        "it, or delete the index directory"))
-
-  // missing-vs-mid-transaction diagnosis shared with the other
-  // indexes — see IndexFiles.readMetaFile
-  private def readMetaText(spark: SparkSession, path: String): String = {
-    val dir = new Path(path).getParent
-    IndexFiles.readMetaFile(spark, dir.toString, "_ivf_meta.json",
-      s"no IVF index at $dir: missing/incomplete (no _ivf_meta.json)")
-  }
-
-  /** None on ANY missing/malformed REQUIRED field — a truncated meta
-    * is an incomplete index, distinguished from a parsed-but-newer
-    * version. The drift counters are OPTIONAL (additive, same format
-    * version): absent on metas written by a pre-stats build or saved
-    * without assignments — [[driftStat]] reports that explicitly. A
-    * PARTIALLY-present counter set is treated as absent rather than
-    * half-read (all four fields or none).
-    */
-  private def parseMeta(text: String): Option[Meta] = {
-    def str(k: String): Option[String] =
-      s""""$k":"([^"]*)"""".r.findFirstMatchIn(text).map(_.group(1))
-    def raw(k: String): Option[String] =
-      s""""$k":([^,}]*)""".r.findFirstMatchIn(text).map(_.group(1))
-    val drift = for {
-      trainN <- raw("trainN").flatMap(_.toLongOption)
-      trainDistSum <- raw("trainDistSum").flatMap(_.toDoubleOption)
-      appendN <- raw("appendN").flatMap(_.toLongOption)
-      appendDistSum <- raw("appendDistSum").flatMap(_.toDoubleOption)
-    } yield DriftCounters(trainN, trainDistSum, appendN, appendDistSum)
-    for {
-      version <- raw("version").flatMap(_.toIntOption)
-      idCol <- str("idCol")
-      vecCol <- str("vecCol")
-      hasAssignments <- raw("hasAssignments").flatMap(_.toBooleanOption)
-    } yield Meta(version, idCol, vecCol, hasAssignments, drift)
-  }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.storage.StorageLevel
   * safety, and crash recovery) to the caller — while the pair half of
   * the story already has all three ([[LshIndex]]'s marker / lease /
   * meta-last protocol). This store closes the asymmetry: cluster
-  * labels live on disk with the index family's exact discipline, and
+  * labels live on disk under the [[IndexFiles]] protocol, and
   * every mutation writes O(batch), never the corpus.
   *
   * Reference contract anchor: the dedup bookkeeping of
@@ -33,13 +33,10 @@ import org.apache.spark.storage.StorageLevel
   *    once remapped away — see the collision rule below), kind 3 =
   *    tombstone of id `a` (takedown). One fold-in or takedown = one
   *    `seq`; ops are totally ordered by it.
-  *  - `_labels_meta.json` — `{"version":V,"opSeq":N}`; written LAST
-  *    in every mutation (deleted first), so a killed writer leaves a
-  *    loudly-incomplete store, never a silently wrong one (the index
-  *    family's completeness protocol).
-  *  - `_appended_through` / `_writer_lock` — [[IndexFiles]]'s marker
-  *    (identity-scoped, monotonic — exactly-once streaming fold-in)
-  *    and writer lease (heartbeating, stale-takeover).
+  *  - `_labels_meta.json` — `{"version":V,"opSeq":N}`, with
+  *    `_appended_through` and `_writer_lock`: the [[IndexFiles]]
+  *    protocol (meta deleted first and published last around every
+  *    mutation, identity-scoped marker, heartbeating lease).
   *
   * == Read path ==
   *
@@ -94,7 +91,19 @@ object LabelStore {
   private val KindOverride = 2
   private val KindTomb = 3
 
-  private final case class Meta(version: Int, opSeq: Long)
+  private[ext] object Kind extends IndexFiles.Kind("label store",
+      "_labels_meta.json", FormatVersion, FormatVersion, Seq("version", "opSeq")) {
+    def missing(dir: String): String =
+      s"no label store at $dir: missing/incomplete (no _labels_meta" +
+        ".json — a killed writer leaves the meta absent; rebuild or " +
+        "restore the store)"
+    override def corrupt(dir: String, text: String): String =
+      s"label store meta at $dir is corrupt ('${text.trim}') — the store " +
+        "is incomplete; rebuild it"
+    override def unreadable(dir: String, v: Int): String =
+      s"label store at $dir has format version $v; this build reads " +
+        s"$FormatVersion — upgrade the reader, do not mutate"
+  }
 
   /** The delta log folded driver-side (see class doc): `remap` is the
     * sequence-composed total label remap for base rows, `over` the
@@ -103,67 +112,11 @@ object LabelStore {
     * rule's lookup set — note: reset by [[compact]], which makes
     * stored labels current again).
     */
-  private final case class State(meta: Meta, tomb: Set[Long],
+  private final case class State(meta: IndexFiles.Meta, tomb: Set[Long],
                                  over: Map[Long, Long],
                                  remap: Map[Long, Long],
                                  remapSources: Set[Long],
                                  deltaRows: Long)
-
-  private def metaPath(path: String) = s"$path/_labels_meta.json"
-
-  private def writeMeta(spark: SparkSession, path: String, m: Meta): Unit = {
-    // ATOMIC publish: write-to-temp + rename. A direct create() is
-    // truncate-then-write, and a reader opening the file between the
-    // two reads EMPTY meta and reports the store corrupt
-    // (ConcurrentWriterSoakSpec's second seam). The rename target is
-    // always absent here by protocol — every commit deletes the meta
-    // first (completeness marker) and create() requires it absent —
-    // so the rename never needs overwrite semantics.
-    val tmp = s"${metaPath(path)}.tmp"
-    IndexFiles.writeTextFile(spark, tmp,
-      s"""{"version":${m.version},"opSeq":${m.opSeq}}""")
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    require(fs.rename(new Path(tmp), new Path(metaPath(path))),
-      s"label store at $path: meta rename failed — the store is left " +
-        "meta-less (incomplete) for loud recovery, never half-written")
-  }
-
-  private def readMeta(spark: SparkSession, path: String): Meta = {
-    // Meta-absent is AMBIGUOUS: a killed writer leaves it absent
-    // forever (incomplete store — fail), but a LIVE writer's commit
-    // swap deletes it transiently (meta-deleted-first completeness
-    // protocol). The writer lock disambiguates: while a lock younger
-    // than the stale threshold exists, the absence is a live swap —
-    // wait it out instead of reporting a healthy store as broken
-    // (found by ConcurrentWriterSoakSpec: a reader racing a commit hit
-    // "rebuild or restore the store"). The wait is bounded by lease
-    // LIVENESS, not wall-clock — the swap tail is filesystem ops +
-    // one batch-sized append, and a dead writer's lock stops
-    // heartbeating and ages out.
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    while (!fs.exists(new Path(metaPath(path))) &&
-        IndexFiles.lockAgeMs(spark, path)
-          .exists(_ <= IndexFiles.DefaultLeaseStaleMs))
-      Thread.sleep(50)
-    val text = IndexFiles.readTextFile(spark, metaPath(path),
-      s"no label store at $path: missing/incomplete (no _labels_meta" +
-        ".json — a killed writer leaves the meta absent; rebuild or " +
-        "restore the store)")
-    val m = """\{"version":(\d+),"opSeq":(\d+)\}""".r
-    text.trim match {
-      case m(v, s) => Meta(v.toInt, s.toLong)
-      case other => sys.error(
-        s"label store meta at $path is corrupt ('$other') — the store " +
-          "is incomplete; rebuild it")
-    }
-  }
-
-  private def requireReadable(meta: Meta, path: String): Unit =
-    require(meta.version == FormatVersion,
-      s"label store at $path has format version ${meta.version}; this " +
-        s"build reads $FormatVersion — upgrade the reader, do not mutate")
 
   /** Create the store from a complete labeling (the
     * [[DupClusters.components]]/`componentsStar` output shape:
@@ -171,16 +124,18 @@ object LabelStore {
     * Refuses an existing store.
     */
   def create(spark: SparkSession, path: String, labels: DataFrame): Unit = {
-    val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new Path(metaPath(path))),
-      s"label store already exists at $path")
     val cols = labels.columns.toSeq
     require(cols == Seq("id", "label"),
       s"LabelStore.create: expected columns (id, label), got $cols")
     requireLongIds(labels, "create")
-    labels.write.mode(SaveMode.ErrorIfExists).parquet(s"$path/labels.parquet")
-    writeMeta(spark, path, Meta(FormatVersion, 0L))
+    IndexFiles.withWriterLease(spark, path, "LabelStore.create") {
+      require(!IndexFiles.hasMeta(spark, Kind, path),
+        s"label store already exists at $path")
+      IndexFiles.reset(spark, Kind, path,
+        Seq("labels.parquet", "labels.parquet.tmp", "deltas.parquet"))
+      labels.write.mode(SaveMode.ErrorIfExists).parquet(s"$path/labels.parquet")
+      IndexFiles.publish(spark, Kind, path, Kind.meta(FormatVersion, 0L))
+    }
   }
 
   private def requireLongIds(df: DataFrame, op: String): Unit =
@@ -189,8 +144,7 @@ object LabelStore {
         s"and its driver fold are long-keyed), got ${df.schema}")
 
   private def readState(spark: SparkSession, path: String): State = {
-    val meta = readMeta(spark, path)
-    requireReadable(meta, path)
+    val meta = IndexFiles.readMeta(spark, Kind, path)
     val dp = new Path(s"$path/deltas.parquet")
     val fs = dp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // seq <= meta.opSeq pins the delta view to the META's snapshot: a
@@ -215,7 +169,7 @@ object LabelStore {
     val raw =
       if (!fs.exists(dp)) Array.empty[org.apache.spark.sql.Row]
       else spark.read.schema(deltaSchema).parquet(dp.toString)
-        .filter(col("seq") <= meta.opSeq)
+        .filter(col("seq") <= meta.long("opSeq"))
         .select(col("seq"), col("kind"), col("a"), col("b"))
         .limit((MaxDeltaRows + 1).toInt).collect()
     require(raw.length <= MaxDeltaRows,
@@ -315,7 +269,7 @@ object LabelStore {
 
   /** The store's op counter (one per completed fold/remove). */
   def opSeq(spark: SparkSession, path: String): Long =
-    readMeta(spark, path).opSeq
+    IndexFiles.readMeta(spark, Kind, path).long("opSeq")
 
   /** Fold a batch into the labeling — [[DupClusters
     * .incrementalComponents]]' exact contract (same shared quotient
@@ -416,7 +370,7 @@ object LabelStore {
                 .as("label")),
               Some(marked.filter(col("coll")).select(col("id"), col("label"))))
           }
-        val seq = st.meta.opSeq + 1
+        val seq = st.meta.long("opSeq") + 1
         val remapRows = rootsOld
           .select(lit(seq).as("seq"), lit(KindRemap).as("kind"),
             col("id").as("a"), col("label").as("b"))
@@ -430,31 +384,22 @@ object LabelStore {
           require(st.deltaRows + nDelta <= MaxDeltaRows,
             s"label store at $path would exceed $MaxDeltaRows delta " +
               "rows — run LabelStore.compact, then re-run this fold")
-          IndexFiles.withWriterLease(spark, path, "LabelStore fold-in") {
+          IndexFiles.transaction(spark, Kind, path, "LabelStore fold-in") { fresh =>
             // the quotient above ran against the PRE-lease labeling —
-            // any concurrent mutation made it stale (the index
-            // family's re-read-inside-the-lease lesson): loud refusal
-            val fresh = readMeta(spark, path)
-            require(fresh.opSeq == st.meta.opSeq,
-              s"label store at $path was mutated (opSeq " +
-                s"${st.meta.opSeq} -> ${fresh.opSeq}) while this fold " +
-                "was computing against its labeling — re-run the fold")
-            val fs = new Path(path).getFileSystem(
-              spark.sparkContext.hadoopConfiguration)
-            fs.delete(new Path(metaPath(path)), false)
-            // batch-sized writes (the LshIndex fold-in lesson): a
+            // any concurrent mutation made it stale: loud refusal
+            requireUnchanged(path, st.meta, fresh, "fold")
+            // batch-sized writes (the BandedIndex append sizing): a
             // micro-batch lands as one file per frame
-            val parts = math.max(1L,
-              (nNew + RowsPerAppendFile - 1) / RowsPerAppendFile).toInt
-            if (nNew > 0)
-              baseRows.coalesce(parts).write.mode(SaveMode.Append)
-                .parquet(s"$path/labels.parquet")
-            if (nDelta > 0)
-              delta.coalesce(1).write.mode(SaveMode.Append)
-                .parquet(s"$path/deltas.parquet")
-            batchMarker.foreach(id =>
-              IndexFiles.writeMarker(spark, path, id, writer))
-            writeMeta(spark, path, fresh.copy(opSeq = seq))
+            val parts = IndexFiles.fileCount(nNew, RowsPerAppendFile)
+            IndexFiles.commit(spark, Kind, path, fresh.set("opSeq" -> seq),
+              batchMarker.map(_ -> writer)) {
+              if (nNew > 0)
+                baseRows.coalesce(parts).write.mode(SaveMode.Append)
+                  .parquet(s"$path/labels.parquet")
+              if (nDelta > 0)
+                delta.coalesce(1).write.mode(SaveMode.Append)
+                  .parquet(s"$path/deltas.parquet")
+            }
           }
         } finally delta.unpersist()
       } finally {
@@ -507,7 +452,7 @@ object LabelStore {
     val core = DupClusters.touchedRelabel(prev, removedIds, survivorEdges,
       maxIter, mode, DupClusters.LocalCcMaxEdges)
     try {
-      val seq = st.meta.opSeq + 1
+      val seq = st.meta.long("opSeq") + 1
       val delta = core.rem
         .select(lit(seq).as("seq"), lit(KindTomb).as("kind"),
           col("id").as("a"), lit(0L).as("b"))
@@ -527,18 +472,12 @@ object LabelStore {
         require(st.deltaRows + nDelta <= MaxDeltaRows,
           s"label store at $path would exceed $MaxDeltaRows delta rows " +
             "— run LabelStore.compact, then re-run this remove")
-        IndexFiles.withWriterLease(spark, path, "LabelStore.remove") {
-          val fresh = readMeta(spark, path)
-          require(fresh.opSeq == st.meta.opSeq,
-            s"label store at $path was mutated (opSeq ${st.meta.opSeq} " +
-              s"-> ${fresh.opSeq}) while this remove was computing " +
-              "against its labeling — re-run the remove")
-          val fs = new Path(path).getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          fs.delete(new Path(metaPath(path)), false)
-          delta.coalesce(1).write.mode(SaveMode.Append)
-            .parquet(s"$path/deltas.parquet")
-          writeMeta(spark, path, fresh.copy(opSeq = seq))
+        IndexFiles.transaction(spark, Kind, path, "LabelStore.remove") { fresh =>
+          requireUnchanged(path, st.meta, fresh, "remove")
+          IndexFiles.commit(spark, Kind, path, fresh.set("opSeq" -> seq), None) {
+            delta.coalesce(1).write.mode(SaveMode.Append)
+              .parquet(s"$path/deltas.parquet")
+          }
         }
         // the gate runs OUTSIDE the remove's lease (compact takes its
         // own), AFTER the transaction is durable — a crash between the
@@ -554,41 +493,37 @@ object LabelStore {
 
   /** Fold the delta log into the base: rewrite `labels.parquet` as the
     * CURRENT labeling and clear `deltas.parquet` — the maintenance
-    * face that keeps the log driver-sized (the [[LshIndex
-    * .compactFrames]] twin; same meta-deleted-first swap window, same
-    * marker-untouched contract so a streaming fold-in resumes across
-    * it). Also the only way a tombstoned id becomes insertable again
+    * face that keeps the log driver-sized (the [[IndexFiles.swap]]
+    * contract: meta-deleted-first swap window, marker untouched so a
+    * streaming fold-in resumes across it). Also the only way a tombstoned id becomes insertable again
     * (class doc). Parity-checked: rows out == current rows in.
     */
   def compact(spark: SparkSession, path: String,
               targetFileBytes: Long = 128L * 1024 * 1024): Unit =
     IndexFiles.withWriterLease(spark, path, "LabelStore.compact") {
       val st = readState(spark, path)
-      val fs = new Path(path).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      val tmp = s"$path/labels.parquet.tmp"
-      fs.delete(new Path(tmp), true)
+      IndexFiles.clear(spark, path, Seq("labels.parquet.tmp"))
       val cur = currentPlan(spark, path, st)
         .persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        val n = cur.count()
-        // ~16 bytes/row raw; size output files to the target like the
-        // index compactions do
-        val parts = math.max(1L, n * 16L / targetFileBytes).toInt
-        cur.coalesce(parts).write.parquet(tmp)
-        val nOut = spark.read.parquet(tmp).count()
-        require(nOut == n,
-          s"LabelStore.compact at $path: parity check failed " +
-            s"($n current rows in, $nOut rows out) — tmp left for " +
-            "inspection, store unchanged")
-        fs.delete(new Path(metaPath(path)), false)
-        fs.delete(new Path(s"$path/labels.parquet"), true)
-        require(fs.rename(new Path(tmp), new Path(s"$path/labels.parquet")),
-          s"LabelStore.compact: rename failed at $path")
-        fs.delete(new Path(s"$path/deltas.parquet"), true)
-        writeMeta(spark, path, st.meta)
+        // ~16 bytes/row raw (two longs)
+        IndexFiles.writeChecked(spark, path, "labels.parquet.tmp",
+          "LabelStore.compact", cur, 16L, targetFileBytes)
+        IndexFiles.swap(spark, Kind, path,
+          Seq("labels.parquet.tmp" -> "labels.parquet"), Seq("deltas.parquet"),
+          st.meta)
       } finally cur.unpersist()
     }
+
+  /** The optimistic-concurrency check of a fold or remove: the store
+    * must still be at the op counter its pre-lease compute read.
+    */
+  private def requireUnchanged(path: String, read: IndexFiles.Meta,
+                               fresh: IndexFiles.Meta, op: String): Unit =
+    require(fresh.long("opSeq") == read.long("opSeq"),
+      s"label store at $path was mutated (opSeq ${read.long("opSeq")} " +
+        s"-> ${fresh.long("opSeq")}) while this $op was computing " +
+        s"against its labeling — re-run the $op")
 
   /** Append-write sizing (the [[LshIndex]] constant's label-row
     * equivalent): label rows are two longs, so far more rows fit a
@@ -681,9 +616,7 @@ object LabelStore {
     (batch: DataFrame, batchId: Long) => {
       var captured: DataFrame = null
       indexFold((pairs, _) => captured = pairs)(batch, batchId)
-      val (writerId, alreadyFolded) =
-        IndexFiles.resolveReplay(spark, storePath, "LabelStore", batchId)
-      if (!alreadyFolded) {
+      IndexFiles.resolveReplay(spark, storePath, batchId).foreach { writerId =>
         // no pre-cast: foldBatchAs owns the integral-type refusal —
         // casting here would mask a corrupting id column
         foldBatchAs(spark, storePath,

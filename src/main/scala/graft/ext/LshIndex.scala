@@ -1,7 +1,6 @@
 package graft.ext
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted MinHash-LSH corpus index — the "shingle once, dedup every
@@ -12,7 +11,7 @@ import org.apache.spark.sql.functions._
   * [[incrementalPairs]] against them — O(batch) work plus three
   * map-side corpus-frame scans, no corpus re-shingling, no corpus-side
   * shuffle, no corpus×corpus pair regeneration (see
-  * [[Dedup.lshNearDupPairsIncrementalFrames]] for the per-stage
+  * [[Dedup.lshNearDupPairsIncrementalLazy]] for the per-stage
   * argument). [[append]] then folds the deduped batch into the index so
   * the next batch sees it as corpus.
   *
@@ -30,11 +29,10 @@ import org.apache.spark.sql.functions._
   *
   * `buckets.parquet` is what keeps the skew-guard O(batch): union
   * bucket totals come from stored counts + the batch's counts, never
-  * from re-counting corpus rows. The meta file is written LAST and
-  * deleted FIRST on any mutation ([[build]] overwrite, [[append]]), so
-  * a killed writer always leaves the index marked incomplete rather
-  * than internally inconsistent — the same crash-safety protocol as
-  * [[IvfIndex]].
+  * from re-counting corpus rows. Every lifecycle operation is the
+  * shared [[BandedIndex]] implementation, and every mutation runs the
+  * [[IndexFiles]] transaction protocol (meta deleted first, published
+  * last; writer lease; identity-scoped append marker).
   *
   * Caller contract: document ids are unique across the corpus and every
   * batch (the index never re-checks — a batch-vs-corpus id collision
@@ -64,26 +62,43 @@ object LshIndex {
     */
   val TombstoneVersion = FormatVersion + 1
 
-  private def requireReadable(meta: Meta, path: String): Unit =
-    require(meta.version == FormatVersion || meta.version == TombstoneVersion,
-      s"LshIndex at $path has format version ${meta.version}; this build " +
-        s"reads $FormatVersion (and $TombstoneVersion = tombstoned)")
-
   final case class Index(base: DataFrame, banded: DataFrame,
                          buckets: DataFrame,
                          idCol: String, shingleWidth: Int,
                          numHashes: Int, numBands: Int,
                          verifyOn: Dedup.VerifyOn)
 
-  private final case class Meta(version: Int, idCol: String,
-                                shingleWidth: Int, numHashes: Int,
-                                numBands: Int, payload: String)
+  private[ext] object Kind extends IndexFiles.Kind("LshIndex", "_lsh_meta.json",
+      FormatVersion, TombstoneVersion,
+      Seq("version", "idCol", "shingleWidth", "numHashes", "numBands", "payload")) {
+    def missing(dir: String): String =
+      s"no LSH index at $dir: missing/incomplete (no _lsh_meta.json)"
+  }
+
+  private val Impl = new BandedIndex(Kind, "band_hash") {
+    def frames(df: DataFrame, textCol: String, m: IndexFiles.Meta) =
+      Dedup.bandedFrame(df, textCol, m.str("idCol"), m.int("shingleWidth"),
+        m.int("numHashes"), m.int("numBands"), payloadVerifyOn(m.str("payload")))
+    def payload(m: IndexFiles.Meta): String = m.str("payload")
+    def pairs(corpus: BandedIndex.Frames, base: DataFrame, banded: DataFrame,
+              threshold: Double, maxBucketSize: Int) =
+      Dedup.lshNearDupPairsIncrementalFromFrames(corpus.base, corpus.banded,
+        corpus.buckets, base, banded, threshold, maxBucketSize,
+        payloadVerifyOn(corpus.meta.str("payload")))
+  }
+
+  private def meta(idCol: String, shingleWidth: Int, numHashes: Int,
+                   numBands: Int, verifyOn: Dedup.VerifyOn): IndexFiles.Meta =
+    Kind.meta(FormatVersion, idCol, shingleWidth, numHashes, numBands,
+      Dedup.payloadColumn(verifyOn))
+
+  private def index(f: BandedIndex.Frames): Index = Index(f.base, f.banded,
+    f.buckets, f.meta.str("idCol"), f.meta.int("shingleWidth"), f.meta.int("numHashes"),
+    f.meta.int("numBands"), payloadVerifyOn(f.meta.str("payload")))
 
   // forward mapping is THE shared one (Dedup.payloadColumn) so the
   // persisted base column can never drift from what the verify stage
   // reads; only the meta-string reverse mapping lives here
-  private def payloadCol(verifyOn: Dedup.VerifyOn): String =
-    Dedup.payloadColumn(verifyOn)
   private def payloadVerifyOn(payload: String): Dedup.VerifyOn = payload match {
     case "sh" => Dedup.VerifyOn.Shingles
     case "h1" => Dedup.VerifyOn.HashSets
@@ -100,45 +115,9 @@ object LshIndex {
   def build(spark: SparkSession, path: String, df: DataFrame,
             textCol: String, idCol: String = "doc_id",
             shingleWidth: Int = 1, numHashes: Int = 24, numBands: Int = 3,
-            verifyOn: Dedup.VerifyOn = Dedup.VerifyOn.HashSets): Unit = {
-    require(!idCol.exists(c => c == '"' || c == '\\'),
-      s"LshIndex.build: idCol '$idCol' contains a quote/backslash — not " +
-        "representable in the index meta; rename the column before building")
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (base, banded) = Dedup.bandedFrame(df, textCol, idCol,
-      shingleWidth, numHashes, numBands, verifyOn)
-    try IndexFiles.withWriterLease(spark, path, "LshIndex.build") {
-      // meta deleted first: a killed rewrite leaves the index
-      // incomplete (no meta), never old-meta-over-new-frames. A
-      // leftover temp dir from a killed compaction is also
-      // cleared — rebuild is the documented recovery path, so build
-      // owns that cleanup — and so is the streaming replay marker: a
-      // REBUILT index contains none of the streamed batches, so a
-      // stale marker would make a restarted stream silently skip
-      // folding them back in (their cross-batch pairs lost forever)
-      fs.delete(new Path(s"$path/_lsh_meta.json"), false)
-      Frames.foreach(f => fs.delete(new Path(s"$path/$f.tmp"), true))
-      IndexFiles.deleteMarker(spark, path)
-      // a rebuilt corpus has no removals — a stale tombstone frame
-      // would silently hide freshly-indexed documents that share ids
-      fs.delete(new Path(s"$path/$Tombstones"), true)
-      base.select(col("id"), col(payloadCol(verifyOn)))
-        .write.mode(SaveMode.Overwrite).parquet(s"$path/base.parquet")
-      banded.write.mode(SaveMode.Overwrite).parquet(s"$path/banded.parquet")
-      banded.groupBy(col("band_idx"), col("band_hash"))
-        .agg(count(lit(1)).as("bucket_n"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$path/buckets.parquet")
-      writeMeta(spark, s"$path/_lsh_meta.json",
-        Meta(FormatVersion, idCol, shingleWidth, numHashes, numBands,
-          payloadCol(verifyOn)))
-    } finally {
-      base.unpersist()
-      banded.unpersist()
-    }
-  }
-
-  /** The three persisted frame directories, in swap order. */
-  private val Frames = Seq("base.parquet", "banded.parquet", "buckets.parquet")
+            verifyOn: Dedup.VerifyOn = Dedup.VerifyOn.HashSets): Unit =
+    Impl.build(spark, path, df, textCol,
+      meta(idCol, shingleWidth, numHashes, numBands, verifyOn))
 
   /** Load a built index. Fails with an explicit message on a missing /
     * incomplete index or a format-version mismatch.
@@ -153,27 +132,8 @@ object LshIndex {
     * The counts frame needs no join: [[remove]] already appended the
     * removed documents' buckets as negative deltas.
     */
-  def load(spark: SparkSession, path: String): Index = {
-    val meta = readMeta(spark, s"$path/_lsh_meta.json")
-    requireReadable(meta, path)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (base, banded) = {
-      val b = spark.read.parquet(s"$path/base.parquet")
-      val bd = spark.read.parquet(s"$path/banded.parquet")
-      if (!fs.exists(new Path(s"$path/$Tombstones"))) (b, bd)
-      else {
-        val tomb = broadcast(spark.read.parquet(s"$path/$Tombstones"))
-        (b.join(tomb, Seq("id"), "left_anti"),
-          bd.join(tomb, Seq("id"), "left_anti"))
-      }
-    }
-    Index(base, banded,
-      spark.read.parquet(s"$path/buckets.parquet"),
-      meta.idCol, meta.shingleWidth, meta.numHashes, meta.numBands,
-      payloadVerifyOn(meta.payload))
-  }
-
-  private val Tombstones = "tombstones.parquet"
+  def load(spark: SparkSession, path: String): Index =
+    index(Impl.load(spark, path))
 
   /** Take documents DOWN (the 100 TB compliance face — takedowns /
     * right-to-be-forgotten must not force a corpus re-index): append
@@ -212,48 +172,8 @@ object LshIndex {
     */
   def remove(spark: SparkSession, path: String, ids: DataFrame,
              maxBucketSize: Int = LshSkew.DefaultMaxBucketSize)
-      : LshSkew.RemovalReport = {
-    val meta = readMeta(spark, s"$path/_lsh_meta.json")
-    requireReadable(meta, path)
-    IndexFiles.withWriterLease(spark, path, "LshIndex.remove") {
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tombPath = new Path(s"$path/$Tombstones")
-      // fresh ids only: drop already-tombstoned ids (idempotence) and
-      // keep a stable single-column shape. The distinct is cheap —
-      // takedown sets are ids only.
-      val requested = ids.select(col(ids.columns.head).as("id")).distinct()
-      val fresh = (if (fs.exists(tombPath))
-          requested.join(spark.read.parquet(tombPath.toString),
-            Seq("id"), "left_anti")
-        else requested)
-        .localCheckpoint(true) // the deltas AND the tombstone write read it
-      try {
-        // negative deltas from the CURRENT banded rows of the fresh
-        // ids — map-side (tombstone side broadcast), O(removed) output
-        val deltas = spark.read.parquet(s"$path/banded.parquet")
-          .join(broadcast(fresh), Seq("id"), "left_semi")
-          .groupBy(col("band_idx"), col("band_hash"))
-          .agg((-count(lit(1))).as("bucket_n"))
-          .localCheckpoint(true) // the report AND the counts write read it
-        try {
-          // the un-cap report reads CURRENT totals — before the append
-          val uncapped = LshSkew.uncapCensus(
-            spark.read.parquet(s"$path/buckets.parquet"), deltas,
-            Seq("band_idx", "band_hash"), maxBucketSize, deltas.count())
-          fs.delete(new Path(s"$path/_lsh_meta.json"), false)
-          fresh.coalesce(1).write.mode(SaveMode.Append)
-            .parquet(tombPath.toString)
-          deltas.coalesce(1).write.mode(SaveMode.Append)
-            .parquet(s"$path/buckets.parquet")
-          // version stamps WITH the layout: a pre-tombstone build must
-          // refuse this index, not silently serve the removed documents
-          writeMeta(spark, s"$path/_lsh_meta.json",
-            meta.copy(version = TombstoneVersion))
-          LshSkew.RemovalReport(fresh.count(), uncapped)
-        } finally deltas.unpersist()
-      } finally fresh.unpersist()
-    }
-  }
+      : LshSkew.RemovalReport =
+    Impl.remove(spark, path, ids, maxBucketSize)
 
   /** The cache-or-build face (same contract as
     * [[IvfIndex.loadOrTrain]]): load the index at `path` if complete
@@ -272,30 +192,11 @@ object LshIndex {
                   textCol: String, idCol: String = "doc_id",
                   shingleWidth: Int = 1, numHashes: Int = 24,
                   numBands: Int = 3,
-                  verifyOn: Dedup.VerifyOn = Dedup.VerifyOn.HashSets): Index = {
-    val metaPath = new Path(s"$path/_lsh_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val want = Meta(FormatVersion, idCol, shingleWidth, numHashes, numBands,
-      Dedup.payloadColumn(verifyOn))
-    val found =
-      if (!fs.exists(metaPath)) None
-      // a TOMBSTONED index with matching params is the same cache
-      // entry (removals are state, not identity) — normalize for the
-      // comparison; load serves the survivor view
-      else parseMeta(readMetaText(spark, metaPath.toString))
-        .map(m => if (m.version == TombstoneVersion)
-          m.copy(version = FormatVersion) else m)
-    found.foreach { m =>
-      require(m.version <= FormatVersion,
-        s"LshIndex at $path has format version ${m.version}, newer than " +
-          s"this build's $FormatVersion — refusing to overwrite a newer " +
-          "build's index; delete it explicitly to rebuild")
-    }
-    if (!found.contains(want))
+                  verifyOn: Dedup.VerifyOn = Dedup.VerifyOn.HashSets): Index =
+    index(Impl.loadOrBuild(spark, path,
+      meta(idCol, shingleWidth, numHashes, numBands, verifyOn))(
       build(spark, path, df, textCol, idCol, shingleWidth, numHashes,
-        numBands, verifyOn)
-    load(spark, path)
-  }
+        numBands, verifyOn)))
 
   /** True iff a COMPLETE index of THIS format with EXACTLY these
     * params exists at `path` — [[loadOrBuild]]'s cache-hit predicate
@@ -308,16 +209,9 @@ object LshIndex {
                    idCol: String = "doc_id",
                    shingleWidth: Int = 1, numHashes: Int = 24,
                    numBands: Int = 3,
-                   verifyOn: Dedup.VerifyOn = Dedup.VerifyOn.HashSets): Boolean = {
-    val metaPath = new Path(s"$path/_lsh_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(metaPath) &&
-      parseMeta(readMetaText(spark, metaPath.toString))
-        .map(m => if (m.version == TombstoneVersion)
-          m.copy(version = FormatVersion) else m)
-        .contains(Meta(FormatVersion, idCol, shingleWidth, numHashes,
-          numBands, Dedup.payloadColumn(verifyOn)))
-  }
+                   verifyOn: Dedup.VerifyOn = Dedup.VerifyOn.HashSets): Boolean =
+    Impl.isCompatible(spark, path,
+      meta(idCol, shingleWidth, numHashes, numBands, verifyOn))
 
   /** Near-dup pairs involving ≥ 1 document of `newDf`, against the
     * loaded index — banding params and verify payload come from the
@@ -332,11 +226,10 @@ object LshIndex {
                        threshold: Double = 0.9,
                        maxBucketSize: Int = LshSkew.DefaultMaxBucketSize)
       : (DataFrame, LshSkew.CapCensus) =
-    Dedup.lshNearDupPairsIncrementalFrames(
-      index.base, index.banded, index.buckets,
-      newDf, textCol, index.idCol,
-      index.shingleWidth, index.numHashes, index.numBands,
-      threshold, maxBucketSize, index.verifyOn)
+    Impl.incrementalPairs(BandedIndex.Frames(meta(index.idCol,
+        index.shingleWidth, index.numHashes, index.numBands, index.verifyOn),
+        index.base, index.banded, index.buckets),
+      newDf, textCol, threshold, maxBucketSize)
 
   /** Verified near-dup pairs WITHIN a subset of already-indexed ids,
     * served purely from the index frames — no text, no re-shingling
@@ -371,100 +264,16 @@ object LshIndex {
     * been [[build]]t over corpus ∪ batch (spec-pinned: frame equality
     * for base/banded, per-bucket-total equality for counts).
     *
-    * Crash-safety: the meta is deleted before any mutation and
-    * rewritten only after all three frames are consistent; every write
-    * in between is a pure O(batch) append (format v2 — nothing
-    * corpus-sized is read or rewritten). A killed append leaves an
-    * index that refuses to load — rebuild it.
-    *
-    * `batchMarker` (the streaming fold-in's exactly-once handle): the
-    * id is recorded in `_appended_through` INSIDE the append
-    * transaction — after the frames, before the meta — so there is no
-    * window where the append completed but the marker is missing: a
-    * crash before the meta write leaves an incomplete index (loud
-    * rebuild), never a silently re-appendable one. [[appendedThrough]]
-    * reads the marker back. Marker semantics are [[IndexFiles]]'s:
-    * monotonic (`max(existing, new)` — out-of-order ids never regress
-    * it) and identity-checked (a batch-API marker cannot silently mix
-    * with a streaming query's marker — the ids would be unrelated).
+    * Crash-safety is the [[IndexFiles]] commit, and every write in it
+    * is a pure O(batch) append (format v2 — nothing corpus-sized is
+    * read or rewritten). `batchMarker` (the streaming fold-in's
+    * exactly-once handle) is recorded INSIDE that commit, after the
+    * frames and before the meta, so a crash never leaves a completed
+    * append without its marker; [[appendedThrough]] reads it back.
     */
   def append(spark: SparkSession, path: String, df: DataFrame,
-             textCol: String, batchMarker: Option[Long] = None): Unit = {
-    val meta = readMeta(spark, s"$path/_lsh_meta.json")
-    requireReadable(meta, path)
-    // identity pre-flight BEFORE the transaction: a mismatch must be a
-    // clean refusal, not a mid-transaction abort that leaves no meta
-    batchMarker.foreach(_ =>
-      IndexFiles.requireWriter(spark, path, IndexFiles.ManualWriter))
-    val (base, banded) = Dedup.bandedFrame(df, textCol, meta.idCol,
-      meta.shingleWidth, meta.numHashes, meta.numBands,
-      payloadVerifyOn(meta.payload))
-    try IndexFiles.withWriterLease(spark, path, "LshIndex.append") {
-      appendFrames(spark, path, base, banded, meta, batchMarker,
-        IndexFiles.ManualWriter)
-    } finally {
-      base.unpersist()
-      banded.unpersist()
-    }
-  }
-
-  /** The append transaction over ALREADY-banded frames — shared by
-    * [[append]] and the streaming fold-in (which bands each
-    * micro-batch exactly once for BOTH the pair run and this append).
-    *
-    * O(batch) BY LAYOUT: all three frames append — the counts frame
-    * is delta rows (format v2; readers sum per bucket), so folding a
-    * batch in never reads or rewrites anything corpus-sized. The
-    * pre-v2 layout merged + rewrote the full counts frame here, an
-    * O(distinct buckets) read+write per micro-batch that would
-    * dominate a stream against a large corpus; [[compactBuckets]] is
-    * the explicit maintenance face that bounds delta growth.
-    */
-  private def appendFrames(spark: SparkSession, path: String,
-                           base: DataFrame, banded: DataFrame,
-                           meta: Meta, batchMarker: Option[Long],
-                           writer: String): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the caller read `meta` BEFORE acquiring the lease (banding needs
-    // the params up front) — re-read it INSIDE the transaction and
-    // write the FRESH copy back, because the version can have moved in
-    // between: a completed remove() stamped TombstoneVersion, and
-    // re-stamping the stale FormatVersion over it would re-enable
-    // pre-tombstone builds to read the index and serve removed
-    // documents. A params drift (a concurrent REBUILD with different
-    // banding) means this batch was banded against a dead index —
-    // loud refusal, the frames cannot be folded in.
-    val fresh = readMeta(spark, s"$path/_lsh_meta.json")
-    require(fresh.copy(version = meta.version) == meta,
-      s"LshIndex at $path was rebuilt with different params while this " +
-        s"append was banding its batch (banded with $meta, index now " +
-        s"$fresh) — re-run the append against the current index")
-    // size the writes to the BATCH, not to the session's partition
-    // count: un-coalesced, every fold-in writes shuffle.partitions
-    // (32) files per frame no matter how small the batch — measured
-    // (IndexMaintProbe): the dominant term of the small-file debris
-    // compactFrames exists to clean. The count reads the caller's
-    // cached frame; a micro-batch lands as ONE file per frame, a
-    // genuinely huge manual append still splits
-    val parts = math.max(1L,
-      (banded.count() + RowsPerAppendFile - 1) / RowsPerAppendFile).toInt
-    fs.delete(new Path(s"$path/_lsh_meta.json"), false)
-    base.select(col("id"), col(meta.payload)).coalesce(parts)
-      .write.mode(SaveMode.Append).parquet(s"$path/base.parquet")
-    banded.coalesce(parts)
-      .write.mode(SaveMode.Append).parquet(s"$path/banded.parquet")
-    banded.groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("bucket_n")).coalesce(parts)
-      .write.mode(SaveMode.Append).parquet(s"$path/buckets.parquet")
-    batchMarker.foreach(id => IndexFiles.writeMarker(spark, path, id, writer))
-    writeMeta(spark, s"$path/_lsh_meta.json", fresh)
-  }
-
-  /** Append-write sizing: ~4 M banded rows (~100-200 MB parquet) per
-    * file — micro-batches fold in as one file per frame, bulk appends
-    * still parallelize.
-    */
-  private val RowsPerAppendFile = 4000000L
+             textCol: String, batchMarker: Option[Long] = None): Unit =
+    Impl.append(spark, path, df, textCol, batchMarker)
 
   /** Bound the per-append SMALL-FILE growth of all three frames — the
     * physical-maintenance face for long-running streams. Every
@@ -483,68 +292,13 @@ object LshIndex {
     * QUIESCE FIRST (same contract as [[compactBuckets]]): run between
     * streams/batches, not against a live reader — the swap removes
     * the old frame files, so an in-flight plan that listed them can
-    * fail mid-job. All heavy work (three rewrites into `.tmp` dirs)
-    * runs BEFORE the meta is touched; the refuse-to-load window is
-    * only the final delete + three renames + meta rewrite, and a kill
-    * inside it leaves an index that refuses to load — rebuild it. The
-    * append marker is NOT touched: compaction changes layout, never
-    * which batches are folded in.
+    * fail mid-job. The swap window and the untouched marker are the
+    * [[IndexFiles.swap]] contract.
     */
   def compactFrames(spark: SparkSession, path: String,
                     targetFileBytes: Long = 128L * 1024 * 1024)
-      : IndexFiles.FramesReport = {
-    val meta = readMeta(spark, s"$path/_lsh_meta.json")
-    // same asymmetric version guard as compactBuckets: rewriting a
-    // NEWER layout's frames with this build's reader — then re-stamping
-    // the newer meta over the result — would be silent corruption
-    requireReadable(meta, path)
-    IndexFiles.withWriterLease(spark, path, "LshIndex.compactFrames") {
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Frames.foreach(f => fs.delete(new Path(s"$path/$f.tmp"), true))
-      val tombPath = s"$path/$Tombstones"
-      val hasTombs = fs.exists(new Path(tombPath))
-      // with tombstones, compaction is also the physical PURGE: the
-      // rewrite drops the tombstoned rows and the verified parity is
-      // "survivors in == rows out" (the Report's rowsBefore carries
-      // the SURVIVING pre-rewrite count in that mode); the tombstone
-      // frame itself is dropped in the swap window below
-      def rewrite(frame: String): graft.ops.Compaction.Report =
-        if (!hasTombs)
-          graft.ops.Compaction.compactTo(spark, s"$path/$frame",
-            s"$path/$frame.tmp", targetFileBytes)
-        else IndexFiles.purgeRewrite(spark, s"$path/$frame",
-          s"$path/$frame.tmp", tombPath, "id", targetFileBytes)
-      val baseR = rewrite("base.parquet")
-      val bandedR = rewrite("banded.parquet")
-      // the removal deltas fold into the aggregation like any others —
-      // bucket totals are already post-removal, the purge changes
-      // nothing on the counts side
-      val (bFiles, _, bRows, bBytes) =
-        graft.ops.Compaction.census(spark, s"$path/buckets.parquet")
-      val nOut = math.max(1L,
-        (bBytes + targetFileBytes - 1) / targetFileBytes).toInt
-      spark.read.parquet(s"$path/buckets.parquet")
-        .groupBy(col("band_idx"), col("band_hash"))
-        .agg(sum(col("bucket_n")).as("bucket_n"))
-        .filter(col("bucket_n") > 0)
-        .coalesce(nOut)
-        .write.mode(SaveMode.Overwrite).parquet(s"$path/buckets.parquet.tmp")
-      val (bFilesAfter, _, bRowsAfter, _) =
-        graft.ops.Compaction.census(spark, s"$path/buckets.parquet.tmp")
-      fs.delete(new Path(s"$path/_lsh_meta.json"), false)
-      Frames.foreach { f =>
-        fs.delete(new Path(s"$path/$f"), true)
-        require(fs.rename(new Path(s"$path/$f.tmp"), new Path(s"$path/$f")),
-          s"LshIndex.compactFrames: rename failed for $f at $path")
-      }
-      if (hasTombs) fs.delete(new Path(tombPath), true)
-      // the purge restores the plain layout — stamp the version back
-      writeMeta(spark, s"$path/_lsh_meta.json",
-        meta.copy(version = FormatVersion))
-      IndexFiles.FramesReport(baseR, bandedR, bFiles, bFilesAfter,
-        bRows, bRowsAfter)
-    }
-  }
+      : IndexFiles.FramesReport =
+    Impl.compactFrames(spark, path, targetFileBytes)
 
   /** Aggregate the counts deltas back to one row per bucket — the
     * explicit maintenance op for long-running streams (each append
@@ -554,36 +308,10 @@ object LshIndex {
     * every frame's FILE count); this one stays for counts-only
     * maintenance, which skips the two corpus-frame rewrites.
     *
-    * QUIESCE FIRST: run between streams/batches, not against a live
-    * reader — the swap removes the old counts files, so an in-flight
-    * plan that listed them can fail mid-job. The aggregation runs
-    * BEFORE the meta is touched (old index stays fully readable for
-    * the whole Spark job); the refuse-to-load window is only the
-    * final delete + swap + meta rewrite, and a kill inside it leaves
-    * an index that refuses to load — rebuild it.
+    * QUIESCE FIRST, as for [[compactFrames]].
     */
-  def compactBuckets(spark: SparkSession, path: String): Unit = {
-    val meta = readMeta(spark, s"$path/_lsh_meta.json")
-    // same asymmetric version guard as append/loadOrBuild: rewriting a
-    // NEWER layout's counts with this build's semantics — and then
-    // re-stamping the newer meta over it — would be silent corruption
-    requireReadable(meta, path)
-    IndexFiles.withWriterLease(spark, path, "LshIndex.compactBuckets") {
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = s"$path/buckets.parquet.tmp"
-      fs.delete(new Path(tmp), true) // clear a killed compaction's leftover
-      spark.read.parquet(s"$path/buckets.parquet")
-        .groupBy(col("band_idx"), col("band_hash"))
-        .agg(sum(col("bucket_n")).as("bucket_n"))
-        .filter(col("bucket_n") > 0)
-        .write.mode(SaveMode.Overwrite).parquet(tmp)
-      fs.delete(new Path(s"$path/_lsh_meta.json"), false)
-      fs.delete(new Path(s"$path/buckets.parquet"), true)
-      require(fs.rename(new Path(tmp), new Path(s"$path/buckets.parquet")),
-        s"LshIndex.compactBuckets: rename failed at $path")
-      writeMeta(spark, s"$path/_lsh_meta.json", meta)
-    }
-  }
+  def compactBuckets(spark: SparkSession, path: String): Unit =
+    Impl.compactBuckets(spark, path)
 
   /** The highest batch id folded in via `append(..., batchMarker)`;
     * −1 if no marked append ever completed. The streaming fold-in's
@@ -648,83 +376,6 @@ object LshIndex {
                           onCensus: (LshSkew.CapCensus, Long) => Unit =
                             (_, _) => ())(
       onPairs: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      // re-load per batch: append adds files, and a cached listing
-      // would pair this batch against a stale corpus
-      val index = load(spark, path)
-      val meta = readMeta(spark, s"$path/_lsh_meta.json")
-      // identity + replay resolution and the replay subtraction view
-      // are the SHARED definitions (IndexFiles.resolveReplay /
-      // LshIncremental.subtractBatch — see their scaladoc for the
-      // misclassification and exactly-once arguments)
-      val (writerId, alreadyFolded) =
-        IndexFiles.resolveReplay(spark, path, "LshIndex", batchId)
-      val (bBase, bBanded) = Dedup.bandedFrame(batch, textCol, index.idCol,
-        index.shingleWidth, index.numHashes, index.numBands, index.verifyOn)
-      try {
-        val corpusView =
-          if (!alreadyFolded) index
-          else {
-            val (b, bd, bk) = LshIncremental.subtractBatch(
-              index.base, index.banded, index.buckets, bBase,
-              Seq("band_idx", "band_hash"))
-            index.copy(base = b, banded = bd, buckets = bk)
-          }
-        val (pairsLazy, caches, census) =
-          Dedup.lshNearDupPairsIncrementalFromFrames(
-            corpusView.base, corpusView.banded, corpusView.buckets,
-            bBase, bBanded, threshold, maxBucketSize, index.verifyOn)
-        val pairs =
-          try pairsLazy.localCheckpoint(true)
-          finally caches.foreach(_.unpersist())
-        onCensus(census, batchId)
-        onPairs(pairs, batchId)
-        if (appendBatches && !alreadyFolded)
-          IndexFiles.withWriterLease(spark, path, "LshIndex streaming fold-in") {
-            appendFrames(spark, path, bBase, bBanded, meta, Some(batchId),
-              writerId)
-          }
-      } finally {
-        bBase.unpersist()
-        bBanded.unpersist()
-      }
-    }
-
-  // hand-rolled flat JSON, same shape/discipline as IvfIndex's meta:
-  // fixed fields, no nesting; parse failure = incomplete index
-  // atomic write-to-temp + rename — IndexFiles.publishMetaFile
-  private def writeMeta(spark: SparkSession, path: String, m: Meta): Unit =
-    IndexFiles.publishMetaFile(spark, path,
-      s"""{"version":${m.version},"idCol":"${m.idCol}",""" +
-        s""""shingleWidth":${m.shingleWidth},"numHashes":${m.numHashes},""" +
-        s""""numBands":${m.numBands},"payload":"${m.payload}"}""")
-
-  private def readMeta(spark: SparkSession, path: String): Meta =
-    parseMeta(readMetaText(spark, path)).getOrElse(sys.error(
-      s"LshIndex meta at $path exists but is truncated/corrupt (killed " +
-        "writer?) — the index is incomplete; rebuild it"))
-
-  // missing-vs-mid-transaction diagnosis shared with the other
-  // indexes — see IndexFiles.readMetaFile
-  private def readMetaText(spark: SparkSession, path: String): String = {
-    val dir = new Path(path).getParent
-    IndexFiles.readMetaFile(spark, dir.toString, "_lsh_meta.json",
-      s"no LSH index at $dir: missing/incomplete (no _lsh_meta.json)")
-  }
-
-  private def parseMeta(text: String): Option[Meta] = {
-    def str(k: String): Option[String] =
-      s""""$k":"([^"]*)"""".r.findFirstMatchIn(text).map(_.group(1))
-    def num(k: String): Option[Int] =
-      s""""$k":([^,}]*)""".r.findFirstMatchIn(text)
-        .flatMap(_.group(1).toIntOption)
-    for {
-      version <- num("version")
-      idCol <- str("idCol")
-      shingleWidth <- num("shingleWidth")
-      numHashes <- num("numHashes")
-      numBands <- num("numBands")
-      payload <- str("payload")
-    } yield Meta(version, idCol, shingleWidth, numHashes, numBands, payload)
-  }
+    Impl.streamingDedupBatch(spark, path, textCol, threshold, maxBucketSize,
+      appendBatches, onCensus)(onPairs)
 }

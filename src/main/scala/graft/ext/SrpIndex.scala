@@ -1,7 +1,6 @@
 package graft.ext
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted SRP-LSH embedding index — [[LshIndex]]'s twin for the
@@ -15,10 +14,9 @@ import org.apache.spark.sql.functions._
   * the batch in so the next batch sees it as corpus. Same
   * compute-once-reload contract as the S8 parquet cache
   * (`processors/_impl/plotting_impl.py:126-147`,
-  * [[graft.sinks.Exporters.cached]]), same three-frame artifact and
-  * crash-safety protocol as [[LshIndex]] (meta written LAST, deleted
-  * FIRST on any mutation), same marker/lease discipline
-  * ([[IndexFiles]]):
+  * [[graft.sinks.Exporters.cached]]). It is the same [[BandedIndex]]
+  * as [[LshIndex]] with a different bucket column, meta and frame and
+  * pair functions, under the same [[IndexFiles]] protocol:
   *
   * {{{
   *   <path>/_srp_meta.json     format version + banding params
@@ -49,26 +47,45 @@ object SrpIndex {
   val FormatVersion = 1
 
   /** Stamped by [[remove]], stamped back by [[compactFrames]]' purge —
-    * [[LshIndex.TombstoneVersion]]'s exact contract: the tombstone
-    * layout changes read semantics, so a pre-tombstone build must
-    * refuse the index loudly, not serve removed vectors.
+    * the [[IndexFiles]] tombstone version: the tombstone layout
+    * changes read semantics, so a pre-tombstone build must refuse the
+    * index loudly, not serve removed vectors.
     */
   val TombstoneVersion = FormatVersion + 1
-
-  private def requireReadable(meta: Meta, path: String): Unit =
-    require(meta.version == FormatVersion || meta.version == TombstoneVersion,
-      s"SrpIndex at $path has format version ${meta.version}; this build " +
-        s"reads $FormatVersion (and $TombstoneVersion = tombstoned)")
 
   final case class Index(base: DataFrame, banded: DataFrame,
                          buckets: DataFrame,
                          idCol: String, numBands: Int, planesPerBand: Int,
                          dims: Int)
 
-  private final case class Meta(version: Int, idCol: String,
-                                numBands: Int, planesPerBand: Int, dims: Int)
+  private[ext] object Kind extends IndexFiles.Kind("SrpIndex", "_srp_meta.json",
+      FormatVersion, TombstoneVersion,
+      Seq("version", "idCol", "numBands", "planesPerBand", "dims")) {
+    def missing(dir: String): String =
+      s"no SRP index at $dir: missing/incomplete (no _srp_meta.json)"
+    override def corrupt(dir: String, text: String): String =
+      s"SrpIndex meta at $dir exists but is truncated/corrupt (killed " +
+        "writer?) — the index is incomplete; rebuild it"
+  }
 
-  private val Frames = Seq("base.parquet", "banded.parquet", "buckets.parquet")
+  private val Impl = new BandedIndex(Kind, "bucket") {
+    def frames(df: DataFrame, vecCol: String, m: IndexFiles.Meta) =
+      Similarity.srpFrames(df, m.str("idCol"), vecCol, m.int("numBands"),
+        m.int("planesPerBand"), m.int("dims"))
+    def payload(m: IndexFiles.Meta): String = "v"
+    def pairs(corpus: BandedIndex.Frames, base: DataFrame, banded: DataFrame,
+              threshold: Double, maxBucketSize: Int) =
+      Similarity.srpNearDupPairsIncrementalFromFrames(corpus.base,
+        corpus.banded, corpus.buckets, base, banded, threshold, maxBucketSize)
+  }
+
+  private def meta(idCol: String, numBands: Int, planesPerBand: Int,
+                   dims: Int): IndexFiles.Meta =
+    Kind.meta(FormatVersion, idCol, numBands, planesPerBand, dims)
+
+  private def index(f: BandedIndex.Frames): Index = Index(f.base, f.banded,
+    f.buckets, f.meta.str("idCol"), f.meta.int("numBands"),
+    f.meta.int("planesPerBand"), f.meta.int("dims"))
 
   /** Build (or overwrite) the index at `path` from `df`'s `vecCol`.
     * One corpus pass: project → sign buckets → band explode, then the
@@ -78,61 +95,18 @@ object SrpIndex {
     */
   def build(spark: SparkSession, path: String, df: DataFrame,
             idCol: String = "vec_id", vecCol: String = "embedding",
-            numBands: Int = 4, planesPerBand: Int = 8, dims: Int = 64): Unit = {
-    require(!idCol.exists(c => c == '"' || c == '\\'),
-      s"SrpIndex.build: idCol '$idCol' contains a quote/backslash — not " +
-        "representable in the index meta; rename the column before building")
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (base, banded) = Similarity.srpFrames(df, idCol, vecCol,
-      numBands, planesPerBand, dims)
-    try IndexFiles.withWriterLease(spark, path, "SrpIndex.build") {
-      // meta deleted first; leftover tmp dirs and the replay marker
-      // cleared — same rebuild-owns-recovery contract as LshIndex.build
-      fs.delete(new Path(s"$path/_srp_meta.json"), false)
-      Frames.foreach(f => fs.delete(new Path(s"$path/$f.tmp"), true))
-      IndexFiles.deleteMarker(spark, path)
-      fs.delete(new Path(s"$path/$Tombstones"), true)
-      base.write.mode(SaveMode.Overwrite).parquet(s"$path/base.parquet")
-      banded.write.mode(SaveMode.Overwrite).parquet(s"$path/banded.parquet")
-      banded.groupBy(col("band_idx"), col("bucket"))
-        .agg(count(lit(1)).as("bucket_n"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$path/buckets.parquet")
-      writeMeta(spark, path,
-        Meta(FormatVersion, idCol, numBands, planesPerBand, dims))
-    } finally {
-      base.unpersist()
-      banded.unpersist()
-    }
-  }
+            numBands: Int = 4, planesPerBand: Int = 8, dims: Int = 64): Unit =
+    Impl.build(spark, path, df, vecCol,
+      meta(idCol, numBands, planesPerBand, dims))
 
   /** Load a built index. Fails with an explicit message on a missing /
     * incomplete index or a format-version mismatch.
     */
-  def load(spark: SparkSession, path: String): Index = {
-    val meta = readMeta(spark, path)
-    requireReadable(meta, path)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (base, banded) = {
-      val b = spark.read.parquet(s"$path/base.parquet")
-      val bd = spark.read.parquet(s"$path/banded.parquet")
-      if (!fs.exists(new Path(s"$path/$Tombstones"))) (b, bd)
-      else {
-        // removed vectors invisible map-side — LshIndex.load's exact
-        // tombstone semantics (see its scaladoc)
-        val tomb = broadcast(spark.read.parquet(s"$path/$Tombstones"))
-        (b.join(tomb, Seq("id"), "left_anti"),
-          bd.join(tomb, Seq("id"), "left_anti"))
-      }
-    }
-    Index(base, banded,
-      spark.read.parquet(s"$path/buckets.parquet"),
-      meta.idCol, meta.numBands, meta.planesPerBand, meta.dims)
-  }
+  def load(spark: SparkSession, path: String): Index =
+    index(Impl.load(spark, path))
 
-  private val Tombstones = "tombstones.parquet"
-
-  /** Take vectors DOWN — [[LshIndex.remove]]'s exact contract for the
-    * embedding index: tombstone append + negative count deltas, both
+  /** Take vectors DOWN — the shared [[BandedIndex]] takedown, as
+    * documented on [[LshIndex.remove]]: tombstone append + negative count deltas, both
     * O(removed); idempotent; purged physically by [[compactFrames]];
     * a removed id must not be re-appended before a purge. Returns the
     * same [[LshSkew.RemovalReport]] (un-capped buckets ⇒ labeling
@@ -140,42 +114,11 @@ object SrpIndex {
     */
   def remove(spark: SparkSession, path: String, ids: DataFrame,
              maxBucketSize: Int = LshSkew.DefaultMaxBucketSize)
-      : LshSkew.RemovalReport = {
-    val meta = readMeta(spark, path)
-    requireReadable(meta, path)
-    IndexFiles.withWriterLease(spark, path, "SrpIndex.remove") {
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tombPath = new Path(s"$path/$Tombstones")
-      val requested = ids.select(col(ids.columns.head).as("id")).distinct()
-      val fresh = (if (fs.exists(tombPath))
-          requested.join(spark.read.parquet(tombPath.toString),
-            Seq("id"), "left_anti")
-        else requested)
-        .localCheckpoint(true)
-      try {
-        val deltas = spark.read.parquet(s"$path/banded.parquet")
-          .join(broadcast(fresh), Seq("id"), "left_semi")
-          .groupBy(col("band_idx"), col("bucket"))
-          .agg((-count(lit(1))).as("bucket_n"))
-          .localCheckpoint(true)
-        try {
-          val uncapped = LshSkew.uncapCensus(
-            spark.read.parquet(s"$path/buckets.parquet"), deltas,
-            Seq("band_idx", "bucket"), maxBucketSize, deltas.count())
-          fs.delete(new Path(s"$path/_srp_meta.json"), false)
-          fresh.coalesce(1).write.mode(SaveMode.Append)
-            .parquet(tombPath.toString)
-          deltas.coalesce(1).write.mode(SaveMode.Append)
-            .parquet(s"$path/buckets.parquet")
-          writeMeta(spark, path, meta.copy(version = TombstoneVersion))
-          LshSkew.RemovalReport(fresh.count(), uncapped)
-        } finally deltas.unpersist()
-      } finally fresh.unpersist()
-    }
-  }
+      : LshSkew.RemovalReport =
+    Impl.remove(spark, path, ids, maxBucketSize)
 
-  /** The cache-or-build face — [[LshIndex.loadOrBuild]]'s contract
-    * verbatim: load the index at `path` if complete AND its meta
+  /** The cache-or-build face — the shared [[BandedIndex]] one, as
+    * documented on [[LshIndex.loadOrBuild]]: load the index at `path` if complete AND its meta
     * matches the requested params exactly, otherwise (re)build from
     * `df` and load the fresh copy. A param mismatch is a REBUILD
     * (banding params are the index's identity), a corrupt/truncated
@@ -186,28 +129,10 @@ object SrpIndex {
   def loadOrBuild(spark: SparkSession, path: String, df: => DataFrame,
                   idCol: String = "vec_id", vecCol: String = "embedding",
                   numBands: Int = 4, planesPerBand: Int = 8,
-                  dims: Int = 64): Index = {
-    val metaPath = new Path(s"$path/_srp_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val want = Meta(FormatVersion, idCol, numBands, planesPerBand, dims)
-    val found =
-      if (!fs.exists(metaPath)) None
-      // a tombstoned index with matching params is the same cache
-      // entry (removals are state, not identity)
-      else parseMeta(IndexFiles.readTextFile(spark, metaPath.toString,
-        "unreachable: existence checked"))
-        .map(m => if (m.version == TombstoneVersion)
-          m.copy(version = FormatVersion) else m)
-    found.foreach { m =>
-      require(m.version <= FormatVersion,
-        s"SrpIndex at $path has format version ${m.version}, newer than " +
-          s"this build's $FormatVersion — refusing to overwrite a newer " +
-          "build's index; delete it explicitly to rebuild")
-    }
-    if (!found.contains(want))
-      build(spark, path, df, idCol, vecCol, numBands, planesPerBand, dims)
-    load(spark, path)
-  }
+                  dims: Int = 64): Index =
+    index(Impl.loadOrBuild(spark, path,
+      meta(idCol, numBands, planesPerBand, dims))(
+      build(spark, path, df, idCol, vecCol, numBands, planesPerBand, dims)))
 
   /** True iff a COMPLETE index of THIS format with EXACTLY these
     * params exists at `path` — the cache-hit predicate without the
@@ -217,15 +142,8 @@ object SrpIndex {
   def isCompatible(spark: SparkSession, path: String,
                    idCol: String = "vec_id",
                    numBands: Int = 4, planesPerBand: Int = 8,
-                   dims: Int = 64): Boolean = {
-    val metaPath = new Path(s"$path/_srp_meta.json")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(metaPath) && parseMeta(IndexFiles.readTextFile(spark,
-        metaPath.toString, "unreachable: existence checked"))
-      .map(m => if (m.version == TombstoneVersion)
-        m.copy(version = FormatVersion) else m)
-      .contains(Meta(FormatVersion, idCol, numBands, planesPerBand, dims))
-  }
+                   dims: Int = 64): Boolean =
+    Impl.isCompatible(spark, path, meta(idCol, numBands, planesPerBand, dims))
 
   /** Near-dup pairs involving ≥ 1 vector of `newDf`, against the
     * loaded index — banding params come from the index meta, so a
@@ -239,23 +157,10 @@ object SrpIndex {
                        vecCol: String = "embedding",
                        threshold: Double = 0.9,
                        maxBucketSize: Int = LshSkew.DefaultMaxBucketSize)
-      : (DataFrame, LshSkew.CapCensus) = {
-    val (newBase, newBanded) = Similarity.srpFrames(newDf, index.idCol,
-      vecCol, index.numBands, index.planesPerBand, index.dims)
-    try {
-      val (pairsLazy, caches, census) =
-        Similarity.srpNearDupPairsIncrementalFromFrames(
-          index.base, index.banded, index.buckets, newBase, newBanded,
-          threshold, maxBucketSize)
-      val pairs =
-        try pairsLazy.localCheckpoint(true)
-        finally caches.foreach(_.unpersist())
-      (pairs, census)
-    } finally {
-      newBase.unpersist()
-      newBanded.unpersist()
-    }
-  }
+      : (DataFrame, LshSkew.CapCensus) =
+    Impl.incrementalPairs(BandedIndex.Frames(meta(index.idCol, index.numBands,
+        index.planesPerBand, index.dims), index.base, index.banded, index.buckets),
+      newDf, vecCol, threshold, maxBucketSize)
 
   /** Verified near-dup pairs WITHIN a subset of already-indexed ids,
     * served purely from the index frames — [[LshIndex.pairsAmong]]'s
@@ -302,62 +207,8 @@ object SrpIndex {
     */
   def append(spark: SparkSession, path: String, df: DataFrame,
              vecCol: String = "embedding",
-             batchMarker: Option[Long] = None): Unit = {
-    val meta = readMeta(spark, path)
-    requireReadable(meta, path)
-    batchMarker.foreach(_ =>
-      IndexFiles.requireWriter(spark, path, IndexFiles.ManualWriter))
-    val (base, banded) = Similarity.srpFrames(df, meta.idCol, vecCol,
-      meta.numBands, meta.planesPerBand, meta.dims)
-    try IndexFiles.withWriterLease(spark, path, "SrpIndex.append") {
-      appendFrames(spark, path, base, banded, meta, batchMarker,
-        IndexFiles.ManualWriter)
-    } finally {
-      base.unpersist()
-      banded.unpersist()
-    }
-  }
-
-  /** The append transaction over ALREADY-banded frames — O(batch) BY
-    * LAYOUT (all three frames append; counts are delta rows), shared
-    * by [[append]] and the streaming fold-in.
-    */
-  private def appendFrames(spark: SparkSession, path: String,
-                           base: DataFrame, banded: DataFrame,
-                           meta: Meta, batchMarker: Option[Long],
-                           writer: String): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // re-read the meta INSIDE the transaction and write the fresh copy
-    // back — the LshIndex.appendFrames discipline (see its comment): a
-    // remove() completing between the caller's pre-lease read and this
-    // lease must not have its TombstoneVersion stamp overwritten, and
-    // a concurrent rebuild with different params is a loud refusal
-    val fresh = readMeta(spark, path)
-    require(fresh.copy(version = meta.version) == meta,
-      s"SrpIndex at $path was rebuilt with different params while this " +
-        s"append was projecting its batch (projected with $meta, index " +
-        s"now $fresh) — re-run the append against the current index")
-    // batch-sized writes, not partition-count-sized — the LshIndex
-    // appendFrames discipline (see its comment; measured there)
-    val parts = math.max(1L,
-      (banded.count() + RowsPerAppendFile - 1) / RowsPerAppendFile).toInt
-    fs.delete(new Path(s"$path/_srp_meta.json"), false)
-    base.coalesce(parts)
-      .write.mode(SaveMode.Append).parquet(s"$path/base.parquet")
-    banded.coalesce(parts)
-      .write.mode(SaveMode.Append).parquet(s"$path/banded.parquet")
-    banded.groupBy(col("band_idx"), col("bucket"))
-      .agg(count(lit(1)).as("bucket_n")).coalesce(parts)
-      .write.mode(SaveMode.Append).parquet(s"$path/buckets.parquet")
-    batchMarker.foreach(id => IndexFiles.writeMarker(spark, path, id, writer))
-    writeMeta(spark, path, fresh)
-  }
-
-  /** Append-write sizing — the [[LshIndex]] constant's twin: SRP
-    * banded rows are (long, int, long), so ~4 M rows per file keeps
-    * the same ~100 MB-file shape.
-    */
-  private val RowsPerAppendFile = 4000000L
+             batchMarker: Option[Long] = None): Unit =
+    Impl.append(spark, path, df, vecCol, batchMarker)
 
   /** The highest batch id folded in via `append(..., batchMarker)`;
     * −1 if no marked append ever completed.
@@ -373,48 +224,8 @@ object SrpIndex {
     */
   def compactFrames(spark: SparkSession, path: String,
                     targetFileBytes: Long = 128L * 1024 * 1024)
-      : IndexFiles.FramesReport = {
-    val meta = readMeta(spark, path)
-    requireReadable(meta, path)
-    IndexFiles.withWriterLease(spark, path, "SrpIndex.compactFrames") {
-      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Frames.foreach(f => fs.delete(new Path(s"$path/$f.tmp"), true))
-      val tombPath = s"$path/$Tombstones"
-      val hasTombs = fs.exists(new Path(tombPath))
-      // tombstone purge semantics = LshIndex.compactFrames' (rowsBefore
-      // carries the SURVIVING count in purge mode)
-      def rewrite(frame: String): graft.ops.Compaction.Report =
-        if (!hasTombs)
-          graft.ops.Compaction.compactTo(spark, s"$path/$frame",
-            s"$path/$frame.tmp", targetFileBytes)
-        else IndexFiles.purgeRewrite(spark, s"$path/$frame",
-          s"$path/$frame.tmp", tombPath, "id", targetFileBytes)
-      val baseR = rewrite("base.parquet")
-      val bandedR = rewrite("banded.parquet")
-      val (bFiles, _, bRows, bBytes) =
-        graft.ops.Compaction.census(spark, s"$path/buckets.parquet")
-      val nOut = math.max(1L,
-        (bBytes + targetFileBytes - 1) / targetFileBytes).toInt
-      spark.read.parquet(s"$path/buckets.parquet")
-        .groupBy(col("band_idx"), col("bucket"))
-        .agg(sum(col("bucket_n")).as("bucket_n"))
-        .filter(col("bucket_n") > 0)
-        .coalesce(nOut)
-        .write.mode(SaveMode.Overwrite).parquet(s"$path/buckets.parquet.tmp")
-      val (bFilesAfter, _, bRowsAfter, _) =
-        graft.ops.Compaction.census(spark, s"$path/buckets.parquet.tmp")
-      fs.delete(new Path(s"$path/_srp_meta.json"), false)
-      Frames.foreach { f =>
-        fs.delete(new Path(s"$path/$f"), true)
-        require(fs.rename(new Path(s"$path/$f.tmp"), new Path(s"$path/$f")),
-          s"SrpIndex.compactFrames: rename failed for $f at $path")
-      }
-      if (hasTombs) fs.delete(new Path(tombPath), true)
-      writeMeta(spark, path, meta.copy(version = FormatVersion))
-      IndexFiles.FramesReport(baseR, bandedR, bFiles, bFilesAfter,
-        bRows, bRowsAfter)
-    }
-  }
+      : IndexFiles.FramesReport =
+    Impl.compactFrames(spark, path, targetFileBytes)
 
   /** Streaming corpus-growth embedding dedup — the `foreachBatch` body
     * mirroring [[LshIndex.streamingDedupBatch]] exactly: each
@@ -436,72 +247,6 @@ object SrpIndex {
                           onCensus: (LshSkew.CapCensus, Long) => Unit =
                             (_, _) => ())(
       onPairs: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      val index = load(spark, path)
-      val meta = readMeta(spark, path)
-      // shared identity/replay + subtraction definitions — see
-      // IndexFiles.resolveReplay / LshIncremental.subtractBatch
-      val (writerId, alreadyFolded) =
-        IndexFiles.resolveReplay(spark, path, "SrpIndex", batchId)
-      val (bBase, bBanded) = Similarity.srpFrames(batch, index.idCol, vecCol,
-        index.numBands, index.planesPerBand, index.dims)
-      try {
-        val corpusView =
-          if (!alreadyFolded) index
-          else {
-            val (b, bd, bk) = LshIncremental.subtractBatch(
-              index.base, index.banded, index.buckets, bBase,
-              Seq("band_idx", "bucket"))
-            index.copy(base = b, banded = bd, buckets = bk)
-          }
-        val (pairsLazy, caches, census) =
-          Similarity.srpNearDupPairsIncrementalFromFrames(
-            corpusView.base, corpusView.banded, corpusView.buckets,
-            bBase, bBanded, threshold, maxBucketSize)
-        val pairs =
-          try pairsLazy.localCheckpoint(true)
-          finally caches.foreach(_.unpersist())
-        onCensus(census, batchId)
-        onPairs(pairs, batchId)
-        if (appendBatches && !alreadyFolded)
-          IndexFiles.withWriterLease(spark, path, "SrpIndex streaming fold-in") {
-            appendFrames(spark, path, bBase, bBanded, meta, Some(batchId),
-              writerId)
-          }
-      } finally {
-        bBase.unpersist()
-        bBanded.unpersist()
-      }
-    }
-
-  // atomic write-to-temp + rename — IndexFiles.publishMetaFile
-  private def writeMeta(spark: SparkSession, path: String, m: Meta): Unit =
-    IndexFiles.publishMetaFile(spark, s"$path/_srp_meta.json",
-      s"""{"version":${m.version},"idCol":"${m.idCol}",""" +
-        s""""numBands":${m.numBands},"planesPerBand":${m.planesPerBand},""" +
-        s""""dims":${m.dims}}""")
-
-  // missing-vs-mid-transaction diagnosis shared with the other
-  // indexes — see IndexFiles.readMetaFile
-  private def readMeta(spark: SparkSession, path: String): Meta =
-    parseMeta(IndexFiles.readMetaFile(spark, path, "_srp_meta.json",
-      s"no SRP index at $path: missing/incomplete (no _srp_meta.json)"))
-      .getOrElse(sys.error(
-        s"SrpIndex meta at $path exists but is truncated/corrupt (killed " +
-          "writer?) — the index is incomplete; rebuild it"))
-
-  private def parseMeta(text: String): Option[Meta] = {
-    def str(k: String): Option[String] =
-      s""""$k":"([^"]*)"""".r.findFirstMatchIn(text).map(_.group(1))
-    def num(k: String): Option[Int] =
-      s""""$k":([^,}]*)""".r.findFirstMatchIn(text)
-        .flatMap(_.group(1).toIntOption)
-    for {
-      version <- num("version")
-      idCol <- str("idCol")
-      numBands <- num("numBands")
-      planesPerBand <- num("planesPerBand")
-      dims <- num("dims")
-    } yield Meta(version, idCol, numBands, planesPerBand, dims)
-  }
+    Impl.streamingDedupBatch(spark, path, vecCol, threshold, maxBucketSize,
+      appendBatches, onCensus)(onPairs)
 }

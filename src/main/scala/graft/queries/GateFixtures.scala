@@ -95,6 +95,11 @@ private[queries] object GateFixtures {
     */
   def streamedLabelStore(spark: SparkSession, dir: String): String = {
     val key = s"stlabels_${Integer.toHexString(dir.hashCode)}"
+    // resolve the shared fixtures BEFORE the outer computeIfAbsent:
+    // both are computeIfAbsent calls on the same map, and a nested one
+    // throws "Recursive update" whenever its key shares a bin with `key`
+    val sharedIdx = lshDocsIndex(spark, dir, 200)
+    val prior = priorLabels(spark, dir, 200)
     built.computeIfAbsent(key, _ => {
       import org.apache.spark.sql.streaming.Trigger
       val base = s"$root/$key"
@@ -104,10 +109,9 @@ private[queries] object GateFixtures {
       // copy and build an inconsistent fixture; always start from an
       // empty directory instead (ADVICE r16)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      val idxPath = lshDocsIndexCopy(spark, dir, 200)
+      val idxPath = copyOf(spark, sharedIdx, keyOf(dir, 200))
       val storePath = s"$base/store"
-      graft.ext.LabelStore.create(spark, storePath,
-        priorLabels(spark, dir, 200))
+      graft.ext.LabelStore.create(spark, storePath, prior)
       val batchDir = s"$base/batches"
       graft.Tables(spark, dir, "documents")
         .filter(col("doc_id") >= 200 && col("doc_id") < 300)
@@ -152,9 +156,11 @@ private[queries] object GateFixtures {
     * built frames, bit-identical to a fresh build (the q107 parquet
     * round-trip argument). The caller owns and deletes it.
     */
-  def lshDocsIndexCopy(spark: SparkSession, dir: String, maxDocId: Int): String = {
-    val src = lshDocsIndex(spark, dir, maxDocId)
-    val dst = s"$root/copy_${copyN.incrementAndGet()}_${keyOf(dir, maxDocId)}"
+  def lshDocsIndexCopy(spark: SparkSession, dir: String, maxDocId: Int): String =
+    copyOf(spark, lshDocsIndex(spark, dir, maxDocId), keyOf(dir, maxDocId))
+
+  private def copyOf(spark: SparkSession, src: String, key: String): String = {
+    val dst = s"$root/copy_${copyN.incrementAndGet()}_$key"
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(src).getFileSystem(conf)
     require(FileUtil.copy(fs, new Path(src), fs, new Path(dst), false, conf),

@@ -112,6 +112,25 @@ class FrontierSpec extends SparkSpec {
       Frontier.create(spark, root, seeds, overwrite = true)
       Frontier.create(spark, root, seeds)
       Frontier.rounds(spark, root) shouldBe 0L
+
+      // the protocol's own files are recognised: a crashed writer's
+      // stale leftover lock is taken over, not mistaken for foreign data
+      def writeLock(ageMs: Long): Unit = java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$root/_writer_lock"),
+        (System.currentTimeMillis() - ageMs).toString)
+      writeLock(IndexFiles.DefaultLeaseStaleMs + 60000L)
+      Frontier.create(spark, root, seeds)
+      Frontier.rounds(spark, root) shouldBe 0L
+      // a LIVE writer's lock refuses the create, even with overwrite,
+      // and the store it guards is left intact
+      writeLock(0L)
+      Seq(false, true).foreach { overwrite =>
+        intercept[IllegalArgumentException] {
+          Frontier.create(spark, root, seeds, overwrite)
+        }.getMessage should include("_writer_lock")
+        Frontier.rounds(spark, root) shouldBe 0L
+        urls(Frontier.seen(spark, root)) shouldBe Seq("h0.test/d/0")
+      }
     } finally delete(root)
   }
 

@@ -80,6 +80,43 @@ class IndexGuardSpec extends SparkSpec {
       writeLock(s"$root/idx", ageMs = 0)
       intercept[IllegalArgumentException] { buildLsh(root) }
         .getMessage should include("_writer_lock")
+      LshIndex.load(spark, s"$root/idx").numHashes shouldBe 8
+
+      // every store's build/save/create takes the same lease, and a
+      // refused rebuild leaves the existing store readable
+      import spark.implicits._
+      def refusedUnderLiveLock(dir: String)(rebuild: => Unit): Unit = {
+        writeLock(dir, ageMs = 0)
+        intercept[IllegalArgumentException](rebuild)
+          .getMessage should include("_writer_lock")
+        lockExists(dir) shouldBe true
+      }
+      val e = Tables(spark, sf, "embeddings")
+      def buildSrp(): Unit = SrpIndex.build(spark, s"$root/srp",
+        e.filter(col("vec_id") < 40), numBands = 2, planesPerBand = 4, dims = 64)
+      buildSrp()
+      refusedUnderLiveLock(s"$root/srp")(buildSrp())
+      SrpIndex.load(spark, s"$root/srp").base.count() shouldBe 40L
+
+      val centroids = e.filter(col("vec_id") < 4)
+      def saveIvf(): Unit = IvfIndex.save(spark, s"$root/ivf", centroids,
+        Some(Similarity.assignToCentroids(e.filter(col("vec_id") < 40), centroids)))
+      saveIvf()
+      refusedUnderLiveLock(s"$root/ivf")(saveIvf())
+      IvfIndex.load(spark, s"$root/ivf").assignments.get.count() shouldBe 40L
+
+      val labels = Seq(1L -> 1L, 2L -> 1L).toDF("id", "label")
+      LabelStore.create(spark, s"$root/labels", labels)
+      refusedUnderLiveLock(s"$root/labels")(
+        LabelStore.create(spark, s"$root/labels", labels))
+      LabelStore.load(spark, s"$root/labels").count() shouldBe 2L
+
+      val seeds = Seq("h0.test/d/0").toDF("nurl")
+      Frontier.create(spark, s"$root/frontier", seeds)
+      refusedUnderLiveLock(s"$root/frontier")(
+        Frontier.create(spark, s"$root/frontier", seeds, overwrite = true))
+      Frontier.rounds(spark, s"$root/frontier") shouldBe 0L
+      Frontier.seen(spark, s"$root/frontier").count() shouldBe 1L
     } finally delete(root)
   }
 
