@@ -24,7 +24,8 @@ import org.apache.spark.sql.SparkSession
   * flat → host scheduling noise, no audit; both moved → code-attributable,
   * audit. The stdout lines stay wall-only — the driver's capture keeps a
   * byte-tail, and a second per-query map would push the wall map out of
-  * its window.
+  * its window. A gate that throws is named with its exception on stderr
+  * and listed under `"failed"` in the artifact.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -38,8 +39,17 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    // NonFatal only — an OOM or interrupt must kill the run, not
+    // silently skew every timing that follows. A failed gate's shortened
+    // time is not a speed-up, so it is reported, never swallowed.
+    def run(label: String,
+            fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Boolean =
+      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] $label failed: $e")
+          false
+      }
 
     // per-gate executor CPU: one additive listener for the whole run,
     // bracketed by a listener-bus drain before each read so every
@@ -60,19 +70,15 @@ object Bench {
     }
 
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    // warmup: the first query in order, untimed (JVM + codegen spin-up).
-    // NonFatal only — an OOM or interrupt here must kill the run, not
-    // silently skew every timing that follows.
-    ordered.headOption.foreach { case (_, fn) =>
-      try run(fn) catch { case scala.util.control.NonFatal(_) => () }
-    }
+    // warmup: the first query in order, untimed (JVM + codegen spin-up)
+    ordered.headOption.foreach { case (name, fn) => run(s"warmup $name", fn) }
     val results = ordered.map { case (name, fn) =>
       val c0 = cpuNow()
       val t0 = System.nanoTime()
-      try run(fn) catch { case scala.util.control.NonFatal(_) => () }
+      val ok = run(name, fn)
       val wall = (System.nanoTime() - t0) / 1e9
       val task = (cpuNow() - c0) / 1e9
-      (name, wall, task)
+      (name, wall, task, ok)
     }
     // millisecond precision: full-precision doubles made the JSON line
     // long enough that the driver's capture truncated its head (r05's
@@ -80,12 +86,14 @@ object Bench {
     // ample for per-query seconds and keeps the whole line in-window
     def r3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + r3(v) }
+    val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    val ts = results.map { case (k, _, t) => s"\"" + k + "\":" + r3(t) }
+    val ts = results.map { case (k, _, t, _) => s"\"" + k + "\":" + r3(t) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val taskTotal = results.map(_._3).sum
+    val failed = results.collect { case (k, _, _, false) => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
     val json =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
     // The driver's stdout capture window keeps the LAST bytes. The full
@@ -109,7 +117,7 @@ object Bench {
     // must not cost the stdout lines
     try {
       val full =
-        s"""{"metric":"total","value":${r3(total)},"unit":"sec","task_total":${r3(taskTotal)},"queries":$qs,"taskSec":$ts,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":${r3(total)},"unit":"sec","task_total":${r3(taskTotal)},"queries":$qs,"taskSec":$ts,"failed":$failed,"sf":"$sfDir"}"""
       val out = java.nio.file.Paths.get(
         sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json"))
       java.nio.file.Files.write(out,

@@ -40,6 +40,10 @@ import org.apache.spark.sql.SparkSession
   *    with the flag (−19% vs the better baseline arm); event-log
   *    profile shows the 32-task cached stages (20+ per removal gate)
   *    collapse to 1–2 tasks.
+  *    Caveat: a cached frame's output partitioning is no longer
+  *    stable, so a downstream read of the cache that wanted the
+  *    original partitioning may plan an extra shuffle; the escape
+  *    hatch is `SPARK_GRAFT_CACHED_PLAN_AQE=false`.
   *  - `codegen.cache.maxEntries=5000` (r22, static conf): the
   *    generated-class cache default (100) thrashes under an engine
   *    that plans hundreds of distinct operator shapes per session —
@@ -49,6 +53,9 @@ import org.apache.spark.sql.SparkSession
   *    amortized across every micro-batch/round that replans the same
   *    shape — strictly cheaper at any scale. Measured on top of the
   *    cached-plan flag: 93.2 → 82.4 s on the same family (−12%).
+  *    A STATIC conf: it takes effect only when this builder creates
+  *    the JVM's first session. `getOrCreate` on an existing session
+  *    ignores it silently, so build through [[tuned]] first.
   *
   * Deliberately NOT set (measured, then rejected this round):
   * `preferSortMergeJoin=false` + a shuffled-hash AQE local-map

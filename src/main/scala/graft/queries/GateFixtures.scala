@@ -76,7 +76,7 @@ private[queries] object GateFixtures {
         .write.parquet(path)
       path
     })
-    spark.read.parquet(p)
+    graft.Tables.parquet(spark, p)
   }
 
   /** Session-shared STREAMED label store: the q115 streaming loop —

@@ -64,6 +64,8 @@ final class History(spark: SparkSession, path: String, batchSize: Int = 200) {
     * at the bench posture, measured as 320 of q65's 359 tasks. The
     * sink's own contract ("each flush is one atomic parquet batch")
     * wants the single file; read-back rows are identical either way.
+    * The single file also means a single write task, so `batchSize`
+    * bounds that task's input too: a large batch is written serially.
     */
   def flush(): Unit = synchronized {
     if (queue.nonEmpty) {

@@ -61,7 +61,9 @@ object Readers {
     */
   def sql(spark: SparkSession, query: String): DataFrame = spark.sql(query)
 
-  /** S8 — parquet read (cache reads pair with Exporters.cached). */
+  /** S8 — parquet read (cache reads pair with Exporters.cached), the
+    * schema memoized per file version by [[graft.Tables.parquet]].
+    */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
 }

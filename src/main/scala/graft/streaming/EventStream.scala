@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 /** Structured Streaming over the events table (SURVEY.md §2.10 — the
   * reference is batch-only; this is the declared extension: the same
@@ -17,47 +16,19 @@ import org.apache.spark.sql.types._
   */
 object EventStream {
 
-  /** The events schema for the streaming source, minus `ts`, whose
-    * physical type varies by generator version (see [[readEvents]]).
-    */
-  private def rawSchema(tsType: DataType) = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", tsType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
   /** Streaming read of `<sfDir>/events.parquet`.
     *
-    * The streaming file source needs an explicit schema, and `ts` has
-    * been written two ways across generator versions — TIMESTAMP(NANOS)
-    * (readable only as a raw long via `nanosAsLong`, rebuilt with
-    * integer `div`) and timezone-less TIMESTAMP(MICROS) (inferred as
-    * TIMESTAMP_NTZ). One batch footer read resolves which file layout
-    * is present (metadata-only — no data scan), and both normalize to
-    * session-timezone `timestamp`, value-preserving under the pinned
-    * UTC session.
+    * The streaming file source needs an explicit schema: it is the
+    * batch table's, taken from [[graft.Tables.raw]]'s schema memo (no
+    * footer-reading job once the file's version is known), and `ts` is
+    * normalized by the same [[graft.Tables.eventTs]] the batch read
+    * uses — value-preserving under the pinned UTC session.
     */
-  def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = spark.read.parquet(s"$sfDir/events.parquet")
-      .schema("ts").dataType
-    val stream = spark.readStream
-      .schema(rawSchema(tsType))
+  def readEvents(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Tables.eventTs(spark.readStream
+      .schema(graft.Tables.raw(spark, sfDir, "events").schema)
       .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-    tsType match {
-      case LongType =>
-        stream.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampType => stream
-      case TimestampNTZType =>
-        stream.withColumn("ts", col("ts").cast("timestamp"))
-      case other => throw new IllegalArgumentException(
-        s"events.ts has unsupported physical type $other — known " +
-          "layouts are nanos-as-long and TIMESTAMP(_NTZ) micros")
-    }
-  }
+      .parquet(sfDir))
 
   /** Tumbling-window aggregation with a watermark: events per hour ×
     * type, decimal value sums (order-independent). At scale this is the
