@@ -2,9 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Scale-justified session defaults shared by every runtime entry point
-  * (Bench / Verify / dev tools), so the driver's bench, the oracle
-  * sweep and dev measurements all run the same engine posture.
+/** Scale-justified session defaults shared by every runtime entry point,
+  * so the driver's bench, the oracle sweep, the test suite and dev
+  * measurements all run the same engine posture. [[local]] is the one
+  * entry: Bench, Verify, SparkSpec and the dev tools (BenchSome,
+  * Explain, ScaleTrend) build their session through it. Only two
+  * builders stay outside it: the pipeline CLI (`tools/Cli`), which
+  * takes its master from `SPARK_MASTER` and passes its builder through
+  * [[tuned]], and the benchmark harness, which calls [[tuned]] itself.
   *
   * Each setting is env-parameterised with the production-shaped value
   * as the local default — the optimization-round contract: no constant
@@ -55,7 +60,8 @@ import org.apache.spark.sql.SparkSession
   *    cached-plan flag: 93.2 → 82.4 s on the same family (−12%).
   *    A STATIC conf: it takes effect only when this builder creates
   *    the JVM's first session. `getOrCreate` on an existing session
-  *    ignores it silently, so build through [[tuned]] first.
+  *    ignores it silently, so [[local]] compares the effective value
+  *    with the requested one and fails on a mismatch.
   *
   * Deliberately NOT set (measured, then rejected this round):
   * `preferSortMergeJoin=false` + a shuffled-hash AQE local-map
@@ -69,15 +75,42 @@ import org.apache.spark.sql.SparkSession
   */
 object SessionTuning {
 
-  def tuned(b: SparkSession.Builder): SparkSession.Builder = {
-    def env(k: String, dflt: String): String = sys.env.getOrElse(k, dflt)
+  private val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  private def env(k: String, dflt: String): String = sys.env.getOrElse(k, dflt)
+
+  private def codegenCacheSize: String = env("SPARK_GRAFT_CODEGEN_CACHE", "5000")
+
+  def tuned(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
         env("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
         env("SPARK_GRAFT_ADVISORY_BYTES", "64m"))
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         env("SPARK_GRAFT_CACHED_PLAN_AQE", "true"))
-      .config("spark.sql.codegen.cache.maxEntries",
-        env("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
+      .config(CodegenCacheKey, codegenCacheSize)
+
+  /** The [[tuned]] session on `local[cpus]`: `cpus` shuffle partitions,
+    * UI off, UTC session time zone, then `extra` confs (applied last,
+    * so they override). Idempotent like `getOrCreate`: a session that
+    * already exists is returned with the runtime confs re-applied —
+    * and, because it cannot take a new static conf, a requested
+    * codegen cache size that differs from the one it runs with is an
+    * error instead of a silently dropped setting.
+    */
+  def local(cpus: Int, extra: (String, String)*): SparkSession = {
+    val b = tuned(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC"))
+    extra.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    val requested = extra.toMap.getOrElse(CodegenCacheKey, codegenCacheSize)
+    val effective = spark.conf.get(CodegenCacheKey)
+    require(effective == requested,
+      s"$CodegenCacheKey is static: requested $requested, but the " +
+        s"existing session runs with $effective")
+    spark
   }
 }

@@ -188,9 +188,10 @@ private[ext] abstract class BandedIndex(val kind: IndexFiles.Kind,
                            marker: Option[(Long, String)]): Unit = {
     // size the writes to the BATCH, not to the session's partition
     // count: un-coalesced, every fold-in wrote shuffle.partitions files
-    // per frame no matter how small the batch (measured with
-    // IndexMaintProbe — the dominant small-file debris compactFrames
-    // exists to clean). The count reads the caller's cached frame
+    // per frame no matter how small the batch (measured in BASELINE
+    // §"Index file maintenance" — the dominant small-file debris
+    // compactFrames exists to clean). The count reads the caller's
+    // cached frame
     val parts = IndexFiles.fileCount(banded.count(), RowsPerAppendFile)
     IndexFiles.transaction(spark, kind, path, op) { fresh =>
       // `meta` was read BEFORE the lease (banding needs the params up

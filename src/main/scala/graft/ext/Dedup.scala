@@ -36,7 +36,7 @@ object Dedup {
     *    100 TB — the same order as MinHash banding's own false-negative
     *    floor the pipeline already accepts.
     *
-    * Adopted as default on the 8 M-doc SpillProbe comparison
+    * Adopted as default on the 8 M-doc pair-stage comparison
     * (BASELINE.md §"Hash-set verify", round 13): the verify stage's
     * uncompressed sort/spill path is where the strings hurt — memory
     * spill 28.5 → 18.9 GB (−33%), disk spill −19%, wall −21%, with
@@ -192,9 +192,11 @@ object Dedup {
   /** The shared signature half of the LSH pipeline: (base, banded)
     * where base = (id, shingles, two-md5 battery) and banded =
     * (id, band_idx, band_hash) posexploded — both persisted. Factored
-    * out so measurement tools (`tools/BucketCensus`) census the SAME
-    * banded frame the production pair path joins on, by construction
-    * rather than by copy. Callers own the unpersist of both frames.
+    * out so every banded consumer (the fused and staged pair paths,
+    * the incremental index, and the 8 M-doc bucket census in
+    * BASELINE.md §"Corpus-scale cap census") sees the SAME banded
+    * frame, by construction rather than by copy. Callers own the
+    * unpersist of both frames.
     */
   private[graft] def bandedFrame(
       df: DataFrame, textCol: String, idCol: String,
@@ -264,17 +266,12 @@ object Dedup {
     * candidate join IS the dominant term: degenerate/[[LshSkew.NoCap]]
     * corpora with giant buckets, where capping in-flight volume at the
     * largest single band (~1/numBands) genuinely bounds peak footprint.
-    *
-    * @param onBandDone measurement hook, called after band i's
-    *                   candidate pairs materialize (probe bracketing);
-    *                   default no-op.
     */
   def lshNearDupPairsStagedWithStats(
       df: DataFrame, textCol: String, idCol: String,
       shingleWidth: Int = 1, numHashes: Int = 24,
       numBands: Int = 3, threshold: Double = 0.9,
       maxBucketSize: Int = LshSkew.DefaultMaxBucketSize,
-      onBandDone: Int => Unit = _ => (),
       verifyOn: VerifyOn = VerifyOn.HashSets): (DataFrame, LshSkew.CapCensus) = {
     val (base, banded) = bandedFrame(df, textCol, idCol,
       shingleWidth, numHashes, numBands, verifyOn)
@@ -314,7 +311,6 @@ object Dedup {
           perBand += pairs
           pairs.count() // materialize: band i completes before i+1 starts
         } finally guardCaches.foreach(_.unpersist())
-        onBandDone(bandIdx)
       }
       val candidates = perBand.reduce(_ union _)
         .dropDuplicates("id_a", "id_b")

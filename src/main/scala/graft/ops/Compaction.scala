@@ -5,8 +5,9 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Parquet layout maintenance (✚ — the production face of
-  * `tools/Relayout`'s measured lesson): parquet row groups are
+/** Parquet layout maintenance (✚ — the production face of the
+  * measured lesson in BASELINE §"Row-group relayout measurement"):
+  * parquet row groups are
   * Spark's split atoms, so a table written as few huge single-group
   * files scans on one task per file no matter how many cores exist,
   * and a table written as millions of tiny files drowns the scheduler
@@ -386,11 +387,11 @@ object Compaction {
     * executable face of "is this table clustered on `column`?": the
     * fraction of ranges a predicate interval overlaps IS the fraction
     * of the table a pushed filter will read — [[prunableFraction]]
-    * computes it, specs assert it, and the SkippingProbe measures the
-    * wall-clock it predicts. Row groups with no statistics for the
-    * column (all-null pages, missing column) are returned as None —
-    * they can never be pruned by a range predicate, so
-    * [[prunableFraction]] counts them as always-read.
+    * computes it, specs assert it, and BASELINE §"Scan clustering"
+    * measured the wall-clock it predicts. Row groups with no
+    * statistics for the column (all-null pages, missing column) are
+    * returned as None — they can never be pruned by a range
+    * predicate, so [[prunableFraction]] counts them as always-read.
     */
   def columnRanges(spark: SparkSession, dir: String,
                    column: String): Seq[Option[(Long, Long)]] =

@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * session instead; gates that MUTATE the index (remove/append) take
   * a private filesystem COPY — a copy preserves hash-exact frames
   * and costs far less than a rebuild, and mutation on a shared
-  * fixture would leak state between gates (the IndexMaintProbe
-  * discipline, applied to the gate suite).
+  * fixture would leak state between gates (the never-appended probe
+  * batch of BASELINE §"Index file maintenance", applied to the gate
+  * suite).
   *
   * The cache root lives under the session temp dir and is removed by
   * a JVM shutdown hook; per-gate copies are deleted by their gate

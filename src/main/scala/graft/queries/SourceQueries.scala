@@ -494,10 +494,10 @@ object SourceQueries {
     * dimensions live, z-order's contract). The 35% bound is the
     * gate-SF price (hundreds of rows per 100-row-minimum row group);
     * the production-scale dial (<0.1 read fraction at 8 M rows) is
-    * the SkippingProbe string phase's measured row (BASELINE §"Scan
-    * clustering"). The hashed output replays BOTH normalizers in
-    * DuckDB: `rnk` is the dictionary rank (rank() over the sorted
-    * distinct sources) and `hb_*` fold every row's
+    * the string-key row of BASELINE §"Scan clustering". The hashed
+    * output replays BOTH normalizers in DuckDB: `rnk` is the
+    * dictionary rank (rank() over the sorted distinct sources) and
+    * `hb_*` fold every row's
     * [[graft.functions.ZOrderCode.hashBucket]] (the high-NDV
     * normalizer) — md5-prefix arithmetic DuckDB reproduces
     * bit-for-bit.
@@ -553,7 +553,8 @@ object SourceQueries {
     // gate scale G is a few dozen (the fixture is hundreds of rows),
     // so ≤ 0.45 is the achievable two-sided bound here (measured 0.39
     // source / 0.26 chars at sf0.01); the production dial (< 0.1 at
-    // hundreds of groups) is the 8 M SkippingProbe string phase's row.
+    // hundreds of groups) is the string-key row of BASELINE §"Scan
+    // clustering".
     // Below ~10 row groups the fraction is statistically meaningless
     // (one group is 10+ points of read fraction) and parquet-writer
     // drift at the smallest SF could collapse the fixture there — skip

@@ -130,42 +130,22 @@ object EventStream {
     * commits a delta file per micro-batch — so a query whose state is
     * small pays (partitions × batches) tiny-file commits of pure
     * fixed overhead. Measured on the five streaming gates at sf0.1
-    * (`tools/StreamProbe`): 32 → 8 partitions cuts warm wall 30–45%
-    * on every gate, 8 → 4 is marginal and regresses the RocksDB dedup
-    * gate — so the gates run at 8. Aggregation VALUES are
-    * partition-count-invariant (same oracles pass at any setting).
+    * (BENCH_VARIANCE §"round 11 protocol"): 32 → 8 partitions cuts
+    * warm wall 30–45% on every gate, 8 → 4 is marginal and regresses
+    * the RocksDB dedup gate — so the gates run at 8. Aggregation
+    * VALUES are partition-count-invariant (same oracles pass at any
+    * setting).
     * A production deployment sizes this to its keyspace instead —
     * state volume / store must fit executor memory (or RocksDB disk) —
     * and the checkpoint pins it at first start.
-    *
-    * The caller's `n` is a DEFAULT: setting
-    * [[StreamPartitionsOverrideKey]] in the session conf overrides it,
-    * so a measurement harness (`tools/StreamProbe`) can sweep the
-    * setting through gate code that pins its own production value —
-    * without the override, the gates' pin would silently nullify any
-    * external sweep.
     */
   def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    val eff = spark.conf.getOption(StreamPartitionsOverrideKey) match {
-      case None => n
-      case Some(v) =>
-        try v.trim.toInt
-        catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$StreamPartitionsOverrideKey must be an int, got: '$v'")
-        }
-    }
     val prev = spark.conf.get(key)
-    spark.conf.set(key, eff.toString)
+    spark.conf.set(key, n.toString)
     try body
     finally spark.conf.set(key, prev)
   }
-
-  /** Session-conf key that overrides the `n` passed to
-    * [[withShufflePartitions]] — see its scaladoc.
-    */
-  val StreamPartitionsOverrideKey = "spark.graft.stream.partitions"
 
   /** K5's streaming shape (SURVEY §2.9): drive a sink with
     * `foreachBatch` — each micro-batch goes through the caller's

@@ -1,28 +1,17 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: time named queries with Bench's noop-write action —
   * `run_class.sh graft.tools.BenchSome q56_repetition ...` (sf dir via
-  * SPARK_GRAFT_SF_DIR, default sf0.1; one untimed warmup per query).
-  *
-  * SPARK_GRAFT_MPB overrides `spark.sql.files.maxPartitionBytes` — at
-  * fixture scale every table is far below the 128 MB default, so scan
-  * parallelism is invisible without lowering the split size; used by
-  * the BASELINE.md row-group-relayout measurement to map row groups to
-  * tasks the way >128 MB files do naturally at production scale.
+  * SPARK_GRAFT_SF_DIR, default sf0.1; cores via SPARK_GRAFT_CPUS,
+  * default 32). Each named query runs once, timed, with no warmup: the
+  * first one carries the JVM's class loading and codegen, so name a
+  * query twice, or lead with a throwaway, to time it warm.
   */
 object BenchSome {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = graft.SessionTuning.tuned(
-      SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC"))
-    sys.env.get("SPARK_GRAFT_MPB").foreach(v =>
-      builder.config("spark.sql.files.maxPartitionBytes", v))
-    val spark = builder.getOrCreate()
+    val spark = graft.SessionTuning.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { q =>
       val fn = graft.SparkEntry.queries(q)

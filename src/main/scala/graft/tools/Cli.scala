@@ -101,14 +101,16 @@ object Cli {
     val outDir = opt("--output").getOrElse("graft_out")
 
     // reuse an already-running session (tests, notebooks) and leave its
-    // lifecycle alone; own — and stop — only a session we created
+    // lifecycle alone; own — and stop — only a session we created, which
+    // runs the same engine posture as Bench and Verify
     val existing = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    val spark = existing.getOrElse(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
+    val spark = existing.getOrElse(graft.SessionTuning.tuned(
+      SparkSession.builder()
+        .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+        .appName("graft-cli")
+        .config("spark.sql.shuffle.partitions",
+          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+        .config("spark.ui.enabled", "false"))
       .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     def stopIfOwned(): Unit = if (existing.isEmpty) spark.stop()

@@ -1,15 +1,11 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print formatted physical plans for named queries —
   * `run_class.sh graft.tools.Explain q5_revenue_by_nation ...`.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = graft.SessionTuning.tuned(
-      SparkSession.builder().master("local[8]")
-        .config("spark.sql.shuffle.partitions", 8)
-        .config("spark.ui.enabled", "false")).getOrCreate()
+    val spark = graft.SessionTuning.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     args.foreach { q =>

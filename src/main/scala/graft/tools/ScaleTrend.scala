@@ -55,18 +55,17 @@ object ScaleTrend {
     * count, vocabulary, hash derivation): the `_SUCCESS`-existence
     * cache check can only vouch for "some run finished here", so the
     * path itself must encode WHICH generator wrote it — otherwise a
-    * probe silently reuses a stale corpus an older generator built.
+    * run silently reuses a stale corpus an older generator built.
     */
-  private[tools] val GenVersion = "g1"
+  private val GenVersion = "g1"
 
-  /** Build-once big-docs fixture SHARED by the scale tools (this and
-    * SpillProbe): one path scheme, one generator, one cache — and the
-    * path carries [[GenVersion]], so a probe can never silently reuse
-    * a corpus a DIFFERENT GENERATOR VERSION wrote (cross-version as
-    * well as cross-tool consistency). Returns the parquet path.
+  /** Build-once big-docs fixture: one path scheme, one generator, one
+    * cache — and the path carries [[GenVersion]], so a run can never
+    * silently reuse a corpus a DIFFERENT GENERATOR VERSION wrote.
+    * Returns the parquet path.
     */
-  private[tools] def docsFixture(spark: SparkSession, n: Long,
-                                 out: String): String = {
+  private def docsFixture(spark: SparkSession, n: Long,
+                          out: String): String = {
     val path = s"$out/docs_${n}_$GenVersion"
     if (!new java.io.File(path + "/_SUCCESS").exists())
       synthDocs(spark, n).repartition(64)
@@ -81,8 +80,8 @@ object ScaleTrend {
     * structure to find: uniform random vectors would make every
     * centroid equidistant and recall meaningless.
     */
-  private[tools] val VecDims = 64
-  private[tools] val VecCenters = 64
+  private val VecDims = 64
+  private val VecCenters = 64
   private def synthVecs(spark: SparkSession, n: Long): DataFrame = {
     def u(seed: Column): Column = // hash → [-0.5, 0.5)
       (pmod(xxhash64(seed), lit(100000L)).cast("double") / 100000.0) - 0.5
@@ -96,9 +95,9 @@ object ScaleTrend {
   /** Build-once big-vectors fixture (same cache + version discipline
     * as [[docsFixture]]; bump on any [[synthVecs]] change).
     */
-  private[tools] val VecGenVersion = "v1"
-  private[tools] def vecsFixture(spark: SparkSession, n: Long,
-                                 out: String): String = {
+  private val VecGenVersion = "v1"
+  private def vecsFixture(spark: SparkSession, n: Long,
+                          out: String): String = {
     val path = s"$out/vecs_${n}_$VecGenVersion"
     if (!new java.io.File(path + "/_SUCCESS").exists())
       synthVecs(spark, n).repartition(64)
@@ -109,13 +108,11 @@ object ScaleTrend {
   /** Build-once incremental-LSH index fixture: the docs fixture minus
     * its last `pct`% of ids, indexed with the scale rows' banding
     * (1/24/3). Same cache + path-version discipline as [[docsFixture]]
-    * (the meta file doubles as the completeness marker); shared with
-    * SpillProbe so its `inc` variants bracket EXACTLY the index the
-    * trend rows measured.
+    * (the meta file doubles as the completeness marker).
     */
-  private[tools] val LshShingleWidth = 1
-  private[tools] val LshNumHashes = 24
-  private[tools] val LshNumBands = 3
+  private val LshShingleWidth = 1
+  private val LshNumHashes = 24
+  private val LshNumBands = 3
 
   /** THE corpus/batch split: corpus = doc_id < this, batch = the rest.
     * One definition — the index build, the ensure face, and the trend
@@ -123,28 +120,27 @@ object ScaleTrend {
     * would dedup docs against themselves; a gap would cover them with
     * neither slice).
     */
-  private[tools] def incSplitFor(n: Long, pct: Int): Long = n - n * pct / 100
+  private def incSplitFor(n: Long, pct: Int): Long = n - n * pct / 100
 
   /** The one path scheme + build invocation for the incremental-LSH
     * index fixtures — the trend runner's timed `lshidx_build` shape
-    * and this ensure-style cache go through the SAME definitions, so
-    * SpillProbe can never bracket an index a different banding built.
+    * and the ensure-style cache go through the SAME definitions, so
+    * `lshinc` can never load an index a different banding built.
     */
-  private[tools] def lshIndexFixturePath(out: String, n: Long,
-                                         pct: Int): String =
+  private def lshIndexFixturePath(out: String, n: Long,
+                                  pct: Int): String =
     s"$out/lshidx_${n}_p${pct}_$GenVersion"
 
-  /** One definition of the cc-labeling fixture path — consumed by the
-    * ccinc shape below AND IndexMaintProbe's labelstore family, so a
-    * GenVersion bump can never silently strand one of them.
+  /** One definition of the cc-labeling fixture path, so a GenVersion
+    * bump re-keys the ccinc shape's labeling with its corpus.
     */
-  private[tools] def ccLabelsFixturePath(out: String, n: Long,
-                                         pct: Int): String =
+  private def ccLabelsFixturePath(out: String, n: Long,
+                                  pct: Int): String =
     s"$out/cclabels_${n}_p${pct}_$GenVersion"
 
-  private[tools] def buildLshIndexFixture(spark: SparkSession,
-                                          docsPath: String, n: Long,
-                                          out: String, pct: Int): String = {
+  private def buildLshIndexFixture(spark: SparkSession,
+                                   docsPath: String, n: Long,
+                                   out: String, pct: Int): String = {
     val path = lshIndexFixturePath(out, n, pct)
     graft.ext.LshIndex.build(spark, path,
       spark.read.parquet(docsPath)
@@ -153,13 +149,13 @@ object ScaleTrend {
     path
   }
 
-  private[tools] def lshIndexFixture(spark: SparkSession, n: Long,
-                                     out: String, pct: Int): String = {
+  private def lshIndexFixture(spark: SparkSession, n: Long,
+                              out: String, pct: Int): String = {
     val path = lshIndexFixturePath(out, n, pct)
     // isCompatible, not a bare existence check: a cached index written
     // by an older FORMAT version (e.g. pre-delta-counts v1) or other
-    // banding must rebuild, not fail the probe's load. The predicate
-    // (unlike loadOrBuild) performs NO load, so the probes' single
+    // banding must rebuild, not fail the shape's load. The predicate
+    // (unlike loadOrBuild) performs NO load, so the shapes' single
     // timed load stays the only one — the recorded rows price exactly
     // one load per batch, the production shape.
     if (!graft.ext.LshIndex.isCompatible(spark, path, "doc_id",
@@ -169,7 +165,7 @@ object ScaleTrend {
   }
 
   /** Path graph 0–(n−1): the maximum-diameter CC input. */
-  private[tools] def chain(spark: SparkSession, n: Long): (DataFrame, DataFrame) = {
+  private def chain(spark: SparkSession, n: Long): (DataFrame, DataFrame) = {
     val nodes = spark.range(n).select(col("id"))
     val edges = spark.range(n - 1).select(col("id").as("s"), (col("id") + 1).as("t"))
     (nodes, edges)
@@ -193,12 +189,8 @@ object ScaleTrend {
       case None => _ => true
     }
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", out + "/spark-tmp")
-      .getOrCreate()
+    val spark = graft.SessionTuning.local(32,
+      "spark.local.dir" -> (out + "/spark-tmp"))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val sf = "/root/testdata/sf0.1"

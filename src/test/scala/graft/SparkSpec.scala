@@ -5,18 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** Shared local SparkSession for all specs (one JVM per `sbt test` fork).
-  * Built through [[SessionTuning.tuned]] so every spec — the plan pins
+  * Built through [[SessionTuning.local]] so every spec — the plan pins
   * in particular — exercises the SAME session posture the runtime entry
   * points (Bench/Verify) run with.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = SessionTuning.tuned(SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false"))
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    SessionTuning.local(4, "spark.app.name" -> "graft-test")
 }
 
 abstract class SparkSpec extends AnyFunSuite with Matchers {

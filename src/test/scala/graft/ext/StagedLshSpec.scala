@@ -78,11 +78,4 @@ class StagedLshSpec extends SparkSpec {
       base.schema("h1").dataType.simpleString shouldBe "array<bigint>"
     } finally { base.unpersist(); banded.unpersist() }
   }
-
-  test("onBandDone fires once per band, in order") {
-    val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
-    Dedup.lshNearDupPairsStagedWithStats(docs, "text", "doc_id",
-      numHashes = 24, numBands = 4, onBandDone = seen += _)
-    seen.toSeq shouldBe Seq(0, 1, 2, 3)
-  }
 }

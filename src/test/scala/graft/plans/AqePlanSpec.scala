@@ -135,10 +135,11 @@ class AqePlanSpec extends SparkSpec {
           // materializes each side as its OWN stage across the table-
           // cache boundary, so both band exchanges are real, plus the
           // pair dedup agg and the four verify-join distributions.
-          // That is the true AQE runtime cost shape (SpillProbe's
-          // 'default' variant measures it) — pinned so a change in
-          // either direction (reuse starts firing, or more stages
-          // appear) is a visible event, not silent drift.
+          // That is the true AQE runtime cost shape (the 'default' row
+          // of BASELINE §"AQE skew-split on the LSH pair stage") —
+          // pinned so a change in either direction (reuse starts
+          // firing, or more stages appear) is a visible event, not
+          // silent drift.
           got.realShuffles shouldBe 7
           got.realBroadcasts shouldBe 0
           got.bhj shouldBe 0

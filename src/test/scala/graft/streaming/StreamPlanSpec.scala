@@ -137,16 +137,4 @@ class StreamPlanSpec extends SparkSpec {
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
   }
-
-  test("the StreamProbe override key still reroutes the gates' partition pin") {
-    withConfs(EventStream.StreamPartitionsOverrideKey -> "4") {
-      EventStream.withShufflePartitions(spark, 8) {
-        val p = lastProgress(EventStream.hourlyByType(events), "complete",
-          s"splanOv_${System.nanoTime()}")
-        // the sweep harness depends on this: an external override must
-        // win over the gates' production pin or sweeps silently no-op
-        stateShape(p) shouldBe Seq("stateStoreSave" -> 4L)
-      }
-    }
-  }
 }
