@@ -468,12 +468,10 @@ object IvfIndex {
     *
     * Usage:
     * {{{
-    *   vecStream.writeStream
-    *     .foreachBatch(IvfIndex.streamingAppendBatch(spark, path)(
+    *   EventStream.streamTo(vecStream, "ivf_ingest", Some(ckpt))(
+    *     IvfIndex.streamingAppendBatch(spark, path)(
     *       (stat, id) => require(stat.flatMap(_.ratio).forall(_ < 2.0),
     *         s"drift at batch $id: retrain")))
-    *     .option("checkpointLocation", ckpt)
-    *     .trigger(Trigger.AvailableNow()).start()
     * }}}
     */
   def streamingAppendBatch(spark: SparkSession, path: String)(

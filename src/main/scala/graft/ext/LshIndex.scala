@@ -363,10 +363,9 @@ object LshIndex {
     *
     * Usage:
     * {{{
-    *   docsStream.writeStream
-    *     .foreachBatch(LshIndex.streamingDedupBatch(spark, path, "text")(
+    *   EventStream.streamTo(docsStream, "dedup", Some(ckpt))(
+    *     LshIndex.streamingDedupBatch(spark, path, "text")(
     *       (pairs, batchId) => pairs.write.mode("append").parquet(out)))
-    *     .trigger(Trigger.AvailableNow()).start()
     * }}}
     */
   def streamingDedupBatch(spark: SparkSession, path: String, textCol: String,

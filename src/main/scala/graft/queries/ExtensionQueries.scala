@@ -3283,34 +3283,24 @@ object ExtensionQueries {
     */
   def q139StreamingCms(spark: SparkSession, dir: String): DataFrame = {
     import graft.ext.CountMin
-    import org.apache.spark.sql.streaming.Trigger
     val tmp = java.nio.file.Files.createTempDirectory("graft_q139_")
       .toString
     val batchDir = s"$tmp/batches"
-    Tables(spark, dir, "documents").select(col("doc_id"), col("text"))
-      .repartition(4).write.parquet(batchDir)
+    val docs = Tables(spark, dir, "documents").select(col("doc_id"), col("text"))
+    docs.repartition(4).write.parquet(batchDir)
     val folded = new java.util.concurrent.atomic.AtomicReference(
       CountMin.empty(width = 256, depth = 3))
-    val batches = new java.util.concurrent.atomic.AtomicLong()
-    val foldBatch: (DataFrame, Long) => Unit = (b, _) => {
+    val batches = graft.streaming.EventStream.streamTo(
+      spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1).parquet(batchDir),
+      s"q139_${System.nanoTime()}", Some(s"$tmp/ckpt")) { (b, _) =>
       val grams = b.select(explode(TextStats.ngrams(col("text"), 2))
         .as("gram"))
       val sk = CountMin.build(grams, "gram", width = 256, depth = 3)
       folded.updateAndGet(CountMin.merge(_, sk))
-      batches.incrementAndGet()
-      ()
-    }
-    val q = spark.readStream
-      .schema(spark.read.parquet(batchDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(batchDir)
-      .writeStream
-      .foreachBatch(foldBatch)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    require(batches.get() >= 2,
-      s"q139: the fold must span multiple micro-batches, got ${batches.get()}")
+    }.length
+    require(batches >= 2,
+      s"q139: the fold must span multiple micro-batches, got $batches")
     val sk = folded.get()
     val grams = Tables(spark, dir, "documents")
       .select(explode(TextStats.ngrams(col("text"), 2)).as("gram"))
@@ -5160,7 +5150,6 @@ object ExtensionQueries {
     * stream≡batch pattern, here over persisted crawl state).
     */
   def q164FrontierLifecycle(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = Tables(spark, dir, "documents")
     val n = docs.count()
     val id = col("doc_id")
@@ -5204,15 +5193,10 @@ object ExtensionQueries {
         java.nio.file.Paths.get(s"$man/$t.txt"),
         s"$t\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
-    val q = spark.readStream
-      .option("maxFilesPerTrigger", 1)
-      .text(man)
-      .writeStream
-      .foreachBatch(
-        graft.ext.Frontier.streamingRoundBatch(spark, store, web, rules) _)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    graft.streaming.EventStream.streamTo(
+      spark.readStream.option("maxFilesPerTrigger", 1).text(man),
+      s"q164_${System.nanoTime()}", Some(s"$root/ckpt"))(
+      graft.ext.Frontier.streamingRoundBatch(spark, store, web, rules) _)
     // maintenance between crawl and census: the merged seen frame must
     // census identically to the delta frames — compaction invisibility
     // rides the oracle hash, not just the spec

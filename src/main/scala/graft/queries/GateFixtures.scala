@@ -102,7 +102,6 @@ private[queries] object GateFixtures {
     val sharedIdx = lshDocsIndex(spark, dir, 200)
     val prior = priorLabels(spark, dir, 200)
     built.computeIfAbsent(key, _ => {
-      import org.apache.spark.sql.streaming.Trigger
       val base = s"$root/$key"
       // a FAILED earlier build caches nothing here but leaves the
       // store/batches/checkpoint dirs behind — a same-session retry
@@ -114,23 +113,19 @@ private[queries] object GateFixtures {
       val storePath = s"$base/store"
       graft.ext.LabelStore.create(spark, storePath, prior)
       val batchDir = s"$base/batches"
-      graft.Tables(spark, dir, "documents")
+      val batch = graft.Tables(spark, dir, "documents")
         .filter(col("doc_id") >= 200 && col("doc_id") < 300)
         .select(col("doc_id"), col("text"))
-        .repartition(2).write.parquet(batchDir)
-      val q = spark.readStream
-        .schema(spark.read.parquet(batchDir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(batchDir)
-        .writeStream
-        .foreachBatch(graft.ext.LabelStore.streamingLabelBatch(
+      batch.repartition(2).write.parquet(batchDir)
+      graft.streaming.EventStream.streamTo(
+        spark.readStream.schema(batch.schema)
+          .option("maxFilesPerTrigger", 1).parquet(batchDir),
+        key, Some(s"$base/ckpt"))(
+        graft.ext.LabelStore.streamingLabelBatch(
           spark, idxPath, storePath, "text", "doc_id", threshold = 0.9,
           onCensus = (census, _) => require(!census.anyDropped,
             "streamedLabelStore: gate fixture must not hit the bucket cap"))(
           (_, _) => ()))
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
       storePath
     })
   }

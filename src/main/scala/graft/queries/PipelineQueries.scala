@@ -488,19 +488,6 @@ object PipelineQueries {
       |FROM events GROUP BY hour, event_type
       |ORDER BY hour, event_type""".stripMargin
 
-  /** §2.10 — the APPEND-mode deployment shape of q39, oracle-gated:
-    * same watermarked hourly aggregation, but the memory sink receives
-    * only the windows the watermark CLOSED (each emitted exactly once,
-    * its state evicted — the bounded-state contract an unbounded
-    * stream needs; q39's complete-mode replay re-emits everything and
-    * keeps all state). The oracle replays the closed-window selection
-    * relationally: a window [h, h+1h) is emitted iff
-    * `h + 1h <= max(event time) − 1h` with the max floored to the
-    * MILLISECOND — Spark's event-time stats track max event time in
-    * ms (`EventTimeWatermarkExec` divides micros by 1000), so the
-    * oracle floors the same way; the ≤ boundary (window end equal to
-    * the watermark ⇒ emitted) is pinned executably in StreamSinkSpec.
-    */
   /** ✚ STREAMING corpus-growth dedup — q109's batch contract replayed
     * through a live Structured Streaming query: the corpus slice
     * (doc_id < 250) is indexed, the batch slice (250–999) is written
@@ -519,31 +506,26 @@ object PipelineQueries {
     * dedup state, restart = resume from the index).
     */
   def q110StreamIncLsh(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val root = java.nio.file.Files.createTempDirectory("graft_q110_").toString
     val docs = Tables(spark, dir, "documents").filter(col("doc_id") < 1000)
     graft.ext.LshIndex.build(spark, s"$root/idx",
       docs.filter(col("doc_id") < 250), "text", "doc_id",
       shingleWidth = 1, numHashes = 24, numBands = 3)
     val batchDir = s"$root/batches"
-    docs.filter(col("doc_id") >= 250).select(col("doc_id"), col("text"))
-      .repartition(2).write.parquet(batchDir)
+    val batch = docs.filter(col("doc_id") >= 250).select(col("doc_id"), col("text"))
+    batch.repartition(2).write.parquet(batchDir)
     val outDir = s"$root/pairs"
-    val q = spark.readStream
-      .schema(spark.read.parquet(batchDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(batchDir)
-      .writeStream
-      .foreachBatch(graft.ext.LshIndex.streamingDedupBatch(
+    EventStream.streamTo(
+      spark.readStream.schema(batch.schema)
+        .option("maxFilesPerTrigger", 1).parquet(batchDir),
+      s"q110_${System.nanoTime()}", Some(s"$root/ckpt"))(
+      graft.ext.LshIndex.streamingDedupBatch(
         spark, s"$root/idx", "text", threshold = 0.9,
         // same no-drop precondition q109 requires — without it a
         // cap-divergent fixture would fail as an opaque hash mismatch
         onCensus = (census, _) => require(!census.anyDropped,
           "q110: gate fixture must not hit the bucket cap"))(
         (pairs, _) => pairs.write.mode("append").parquet(outDir)))
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
     SourceQueries.materializeThenDelete(
       spark.read.parquet(outDir).orderBy(col("id_a"), col("id_b")), root)
   }
@@ -668,6 +650,19 @@ object PipelineQueries {
       |  CAST(sum(CASE WHEN q_keep AND s_keep THEN n_tokens ELSE 0 END) AS BIGINT) AS kept_tokens
       |FROM sel GROUP BY source, split ORDER BY source, split""".stripMargin
 
+  /** §2.10 — the APPEND-mode deployment shape of q39, oracle-gated:
+    * same watermarked hourly aggregation, but the memory sink receives
+    * only the windows the watermark CLOSED (each emitted exactly once,
+    * its state evicted — the bounded-state contract an unbounded
+    * stream needs; q39's complete-mode replay re-emits everything and
+    * keeps all state). The oracle replays the closed-window selection
+    * relationally: a window [h, h+1h) is emitted iff
+    * `h + 1h <= max(event time) − 1h` with the max floored to the
+    * MILLISECOND — Spark's event-time stats track max event time in
+    * ms (`EventTimeWatermarkExec` divides micros by 1000), so the
+    * oracle floors the same way; the ≤ boundary (window end equal to
+    * the watermark ⇒ emitted) is pinned executably in StreamSinkSpec.
+    */
   def q104AppendWindow(spark: SparkSession, dir: String): DataFrame =
     EventStream.withShufflePartitions(spark, 8) {
       val agg = EventStream.hourlyByType(EventStream.readEvents(spark, dir))
@@ -701,19 +696,15 @@ object PipelineQueries {
     */
   def q73StreamSessions(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     val events = EventStream.readEvents(spark, dir)
       .select(col("user_id").cast("long"), col("event_id").cast("long"),
         col("ts").cast("long").as("ts_secs"))
       .as[Sessionize.Event]
-    val name = s"q73_mem_${System.nanoTime()}"
     EventStream.withShufflePartitions(spark, 8) {
-      val q = Sessionize.sessionsStreaming(events, gapSecs = 1800)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    spark.table(name).orderBy(col("user_id"), col("session_idx"))
+      EventStream.runAppendToCompletion(spark,
+        Sessionize.sessionsStreaming(events, gapSecs = 1800).toDF(),
+        s"q73_mem_${System.nanoTime()}")
+    }.orderBy(col("user_id"), col("session_idx"))
   }
 
   val q73Sql: String =
@@ -838,22 +829,18 @@ object PipelineQueries {
     * duplicate was dropped and every original kept — exactly once.
     */
   def q84StreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val doubled = EventStream.readEvents(spark, dir)
       .union(EventStream.readEvents(spark, dir))
-    val name = s"q84_mem_${System.nanoTime()}"
     // the gate runs under the RocksDB state store — the provider any
     // 100 TB-keyspace dedup must use (default HDFS-backed state is
     // on-heap); same dedup semantics, so the same oracle gates it
-    EventStream.withRocksDbStateStore(spark) {
+    val deduped = EventStream.withRocksDbStateStore(spark) {
       EventStream.withShufflePartitions(spark, 8) {
-        val q = EventStream.dedupEvents(doubled)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+        EventStream.runAppendToCompletion(spark,
+          EventStream.dedupEvents(doubled), s"q84_mem_${System.nanoTime()}")
       }
     }
-    spark.table(name)
+    deduped
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("event_id")).as("id_sum"))
       .orderBy(col("event_type"))

@@ -798,7 +798,6 @@ object SourceQueries {
     * q110/q139 stream≡batch pattern).
     */
   def q153StreamWarcCuration(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = Tables(spark, dir, "documents").filter(col("doc_id") < 200)
       .select(col("doc_id"), col("text")).orderBy(col("doc_id")).collect()
     val textOf = docs.map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -816,28 +815,22 @@ object SourceQueries {
           java.nio.charset.StandardCharsets.UTF_8))
     }
     val landing = s"$root/landing"
-    val q = spark.readStream
-      .option("maxFilesPerTrigger", 1)
-      .text(man)
-      .writeStream
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
-        val paths = b.collect().map(_.getString(0)).filter(_.nonEmpty)
-        if (paths.nonEmpty)
-          graft.sources.Warc.read(spark, paths.mkString(","))
-            .select(col("rec_type"), col("url"), col("ok"),
-              graft.functions.HtmlToTextFunctions.htmlToText(
-                col("body").cast("string")).as("body"))
-            // IDEMPOTENT landing: one overwritten batchId-keyed
-            // subdirectory per micro-batch, so a batch retried after
-            // a partial write replaces its own directory instead of
-            // appending duplicates (which would silently break the
-            // stream≡batch oracle equality this gate asserts)
-            .write.mode("overwrite").parquet(s"$landing/b$batchId")
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    graft.streaming.EventStream.streamTo(
+      spark.readStream.option("maxFilesPerTrigger", 1).text(man),
+      s"q153_${System.nanoTime()}", Some(s"$root/ckpt")) { (b, batchId) =>
+      val paths = b.collect().map(_.getString(0)).filter(_.nonEmpty)
+      if (paths.nonEmpty)
+        graft.sources.Warc.read(spark, paths.mkString(","))
+          .select(col("rec_type"), col("url"), col("ok"),
+            graft.functions.HtmlToTextFunctions.htmlToText(
+              col("body").cast("string")).as("body"))
+          // IDEMPOTENT landing: one overwritten batchId-keyed
+          // subdirectory per micro-batch, so a batch retried after
+          // a partial write replaces its own directory instead of
+          // appending duplicates (which would silently break the
+          // stream≡batch oracle equality this gate asserts)
+          .write.mode("overwrite").parquet(s"$landing/b$batchId")
+    }
     materializeThenDelete(
       warcCurationStages(spark.read
         .option("recursiveFileLookup", "true").parquet(landing)), root)

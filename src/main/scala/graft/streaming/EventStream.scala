@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress, Trigger}
 
 /** Structured Streaming over the events table (SURVEY.md §2.10 — the
   * reference is batch-only; this is the declared extension: the same
@@ -13,6 +13,13 @@ import org.apache.spark.sql.streaming.Trigger
   * `availableNow` trigger processes the whole backlog as micro-batches
   * and terminates — which is how a batch harness can exercise a genuine
   * streaming plan (stateful aggregation, watermarks, memory sink).
+  *
+  * Every stream in the engine starts in one place, the private `run`
+  * core: trigger, optional checkpoint, start, await, and the query's
+  * `recentProgress` back to the caller. Callers build the source and
+  * pick a face — [[streamTo]] (foreachBatch), [[runToCompletion]] or
+  * [[runAppendToCompletion]] (memory sink) — and keep their own
+  * [[withShufflePartitions]] / [[withRocksDbStateStore]] scopes.
   */
 object EventStream {
 
@@ -50,20 +57,29 @@ object EventStream {
     */
   def runToCompletion(spark: SparkSession, agg: DataFrame,
                       name: String): DataFrame =
-    runBacklog(spark, agg, name, "complete")
+    toMemory(spark, agg, name, "complete")
 
-  // shared memory-sink/AvailableNow runner behind both completion
-  // faces — one place for the boilerplate the two modes have in common
-  private def runBacklog(spark: SparkSession, agg: DataFrame,
-                         name: String, mode: String): DataFrame = {
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(mode)
+  // the memory sink registers its table as a temp view named after the
+  // query; the returned frame holds the sink itself, so the view is
+  // dropped at once instead of pinning the rows for the session's life
+  private def toMemory(spark: SparkSession, agg: DataFrame,
+                       name: String, mode: String): DataFrame =
+    try {
+      run(agg.writeStream.format("memory").queryName(name).outputMode(mode), None)
+      spark.table(name)
+    } finally spark.catalog.dropTempView(name)
+
+  // the one place a stream starts: AvailableNow over the current
+  // backlog, to termination; returns the micro-batches' progress
+  // (phase durations, state operators) in batch order, as many as
+  // spark.sql.streaming.numRecentProgressUpdates keeps (default 100)
+  private def run(writer: DataStreamWriter[Row],
+                  checkpointDir: Option[String]): Array[StreamingQueryProgress] = {
+    val q = checkpointDir.fold(writer)(writer.option("checkpointLocation", _))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.table(name)
+    q.recentProgress
   }
 
   /** Run a streaming aggregation over the current backlog in APPEND
@@ -81,7 +97,7 @@ object EventStream {
     */
   def runAppendToCompletion(spark: SparkSession, agg: DataFrame,
                             name: String): DataFrame =
-    runBacklog(spark, agg, name, "append")
+    toMemory(spark, agg, name, "append")
 
   /** Streaming exactly-once dedup — the streaming face of the dedup
     * family (✚): `dropDuplicatesWithinWatermark` keys state by the id
@@ -163,21 +179,12 @@ object EventStream {
     * the replay overwrite rather than double-append. Without a
     * checkpointDir Spark allocates a throwaway location — fine for
     * one-shot backfills, wrong for anything incremental.
+    *
+    * Returns the run's progress, one entry per micro-batch.
     */
   def streamTo(df: DataFrame, name: String,
                checkpointDir: Option[String] = None)
-              (write: (DataFrame, Long) => Unit): Unit = {
-    val base = df.writeStream
-      .queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-    val withCkpt = checkpointDir.fold(base)(base.option("checkpointLocation", _))
-    val q = withCkpt
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       epoch: Long) =>
-        write(batch.toDF(), epoch)
-      }
-      .start()
-    q.awaitTermination()
-  }
+              (write: (DataFrame, Long) => Unit): Array[StreamingQueryProgress] =
+    run(df.writeStream.queryName(name).outputMode("append").foreachBatch(write),
+      checkpointDir)
 }

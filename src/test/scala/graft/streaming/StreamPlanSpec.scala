@@ -115,21 +115,17 @@ class StreamPlanSpec extends SparkSpec {
         docs.filter(col("doc_id") < 40), "text", "doc_id",
         shingleWidth = 1, numHashes = 8, numBands = 2)
       val batchDir = s"$root/b"
-      docs.filter(col("doc_id") >= 40).select(col("doc_id"), col("text"))
-        .repartition(2).write.parquet(batchDir)
+      val batch = docs.filter(col("doc_id") >= 40).select(col("doc_id"), col("text"))
+      batch.repartition(2).write.parquet(batchDir)
       var batches = 0
-      val q = spark.readStream
-        .schema(spark.read.parquet(batchDir).schema)
-        .option("maxFilesPerTrigger", 1).parquet(batchDir)
-        .writeStream
-        .foreachBatch(graft.ext.LshIndex.streamingDedupBatch(
+      val progresses = EventStream.streamTo(
+        spark.readStream.schema(batch.schema)
+          .option("maxFilesPerTrigger", 1).parquet(batchDir),
+        s"splan110_${System.nanoTime()}", Some(s"$root/ckpt"))(
+        graft.ext.LshIndex.streamingDedupBatch(
           spark, s"$root/idx", "text", threshold = 0.5)(
-          (_, _) => batches += 1))
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+          (_, _) => batches += 1)).toSeq
       batches should be >= 2
-      val progresses = q.recentProgress.toSeq
       progresses should not be empty
       progresses.foreach(p => p.stateOperators.toSeq shouldBe empty)
     } finally {

@@ -47,6 +47,18 @@ class StreamSinkSpec extends SparkSpec {
     back.columns should contain("epoch") // partition-discovered batch id
   }
 
+  test("memory-sink gates leave no temp view and no running stream behind") {
+    // the memory sink registers its rows as a temp view named after the
+    // query; each gate's frame must still collect after that view is gone
+    import graft.queries.PipelineQueries._
+    Seq(q39StreamWindow _, q73StreamSessions _, q84StreamDedup _,
+      q99StreamKmv _, q104AppendWindow _)
+      .foreach(gate => gate(spark, sf).collect() should not be empty)
+    spark.catalog.listTables().collect().map(_.name)
+      .filter(_.contains("_mem_")) shouldBe empty
+    spark.streams.active shouldBe empty
+  }
+
   test("streaming KMV sketch equals the one-shot batch computation") {
     // bottom-k merge is associative + commutative, so slicing the
     // input into micro-batches (stream) vs one pass (batch) MUST give
