@@ -58,17 +58,15 @@ object BloomDecontam {
 
   /** The k bit positions of one gram, as an array column: lane i is
     * the 8-hex md5 slice at offset 8i (disjoint lanes — md5's 32 hex
-    * chars bound k at 4), reduced mod `mBits`. Public because the
-    * ORACLE replays exactly this arithmetic (`'0x' || substr(md5(g),
-    * 1 + 8i, 8) % mBits` in SQL).
+    * chars bound k at 4), reduced mod `mBits`. One md5 digest per
+    * item for all k lanes ([[graft.functions.Md5Lanes]]). Public
+    * because the ORACLE replays exactly this arithmetic
+    * (`'0x' || substr(md5(g), 1 + 8i, 8) % mBits` in SQL).
     */
   def positions(gram: Column, mBits: Int, k: Int): Column = {
     require(k >= 1 && k <= 4, s"k must be in [1, 4] (md5 has 4 disjoint 8-hex lanes), got $k")
     require(mBits >= 64 && mBits <= MaxBits, s"mBits must be in [64, $MaxBits], got $mBits")
-    array((0 until k).map { i =>
-      pmod(conv(substring(md5(gram), 1 + 8 * i, 8), 16, 10).cast("long"),
-        lit(mBits.toLong))
-    }: _*)
+    graft.functions.MinHashFunctions.md5Lanes(gram, mBits.toLong, k)
   }
 
   /** Fold a reference frame's `gramCol` into a bloom filter. ONE

@@ -1,7 +1,7 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, functions => F}
-import org.apache.spark.sql.functions._
+import graft.functions.BpeSegment
+import org.apache.spark.sql.Column
 
 /** BPE tokenization APPLY (north-star ✚) — real byte-pair-encoding
   * segmentation under a ranked merge table: given merges learned
@@ -12,27 +12,25 @@ import org.apache.spark.sql.functions._
   * are what packing (q96), mixing (q95) and budget accounting
   * actually need at 100 TB.
   *
-  * TWO faces, one semantics:
-  *  - this Column fold (small tables, ≤ [[MaxMerges]]): each merge is
-  *    one literal `replace`, so the whole segmentation is
-  *    SQL-replayable by construction — the DuckDB oracle chains the
-  *    identical replaces (q140/q141);
-  *  - [[graft.functions.BpeSegment]] (production tables, 32 k–100 k
-  *    merges): a codegen'd expression running the reference min-rank
-  *    loop against a plan-attached rank map. BpeSegmentSpec pins the
-  *    two faces equal on every consistent table it generates.
+  * One kernel: [[tokens]] and [[tokenCount]] run
+  * [[graft.functions.BpeSegment]] in word mode — the codegen'd
+  * reference min-rank loop with its per-thread word memo. What this
+  * object adds is the small-table contract the DuckDB oracle needs
+  * (q140/q141): [[validateMerges]] admits only tables on which the
+  * oracle's chain of one literal `replace` per merge, applied in rank
+  * order, equals the min-rank loop.
   *
-  * Representation (the r17 boundary-bug fix): each token is WRAPPED
-  * in sentinel chars — `\u0001tok\u0002` — and a merge (l, r)
-  * rewrites the literal `\u0001l\u0002\u0001r\u0002` to
+  * The oracle's representation (the r17 boundary-bug fix): each token
+  * is WRAPPED in sentinel chars — `\u0001tok\u0002` — and a merge
+  * (l, r) rewrites the literal `\u0001l\u0002\u0001r\u0002` to
   * `\u0001lr\u0002`. Because the pattern carries BOTH boundaries of
   * BOTH tokens, it can only match two complete adjacent tokens —
   * the earlier single-space separator let `t a` match the prefix of
   * `t an`, silently merging across a token boundary ("tan" →
   * ["tan"] where min-rank BPE yields ["t","an"]; pinned in
   * BpeTokenizerSpec). Literal replace substitutes left-to-right
-  * non-overlapping in both engines, which is exactly BPE's
-  * merge-all-occurrences sweep.
+  * non-overlapping, which is exactly BPE's merge-all-occurrences
+  * sweep.
   *
   * WHY rank-sequential ≡ min-rank for CONSISTENT tables (each side a
   * single character or the output of an EARLIER merge — validated
@@ -44,20 +42,20 @@ import org.apache.spark.sql.functions._
   * sweep per rank is also complete: merging (l, r) into `lr` can
   * only create pairs with `lr` as a side, never another (l, r).
   *
-  * Scale shape: pure map-side Column ops (split / per-word fold of
-  * k literal replaces / size) — the tokenizer fuses into whatever
-  * scan reads the text; no UDF, no shuffle.
+  * Scale shape: one map-side expression per document — the tokenizer
+  * fuses into whatever scan reads the text; no UDF, no shuffle.
   */
 object BpeTokenizer {
 
-  /** Sanity cap: each merge adds one `replace` per word to the plan.
-    * Production-size tables go through [[graft.functions.BpeSegment]].
+  /** Sanity cap: the oracle's chain nests one `replace` per merge.
+    * Production-size tables go through [[graft.functions.BpeSegment]]
+    * directly.
     */
   val MaxMerges: Int = 256
 
-  /** Token-boundary sentinels for the working string. Control chars
-    * so real text essentially never collides; even when it does, a
-    * raw sentinel char in TEXT is harmless — no merge symbol may
+  /** Token-boundary sentinels of the oracle's working string. Control
+    * chars so real text essentially never collides; even when it does,
+    * a raw sentinel char in TEXT is harmless — no merge symbol may
     * contain one, so a pattern can never align to a non-boundary.
     */
   val Open = "\u0001"
@@ -91,55 +89,20 @@ object BpeTokenizer {
     }
   }
 
-  /** One word → its sentinel-wrapped subword string under the merges:
-    * wrap each character in Open/Close, apply each merge in rank
-    * order as a boundary-complete literal replace.
-    */
-  private def segmentWord(word: Column,
-                          merges: Seq[(String, String)]): Column = {
-    // [\s\S] (not `.`): matches EVERY char -- line terminators
-    // included -- identically in java.regex and RE2, so a \n or \r
-    // inside a word is wrapped like any other char on both the Spark
-    // and the DuckDB oracle face (java `.` skips \r, U+0085, U+2028,
-    // U+2029; RE2 `.` skips only \n -- a `.` wrap diverges on \r).
-    val wrapped = regexp_replace(word, "([\\s\\S])", Open + "$1" + Close)
-    merges.foldLeft(wrapped) { case (s, (l, r)) =>
-      F.replace(s, lit(Open + l + Close + Open + r + Close),
-        lit(Open + l + r + Close))
-    }
-  }
-
-  /** The segmented word as a token ARRAY: strip the outermost
-    * sentinels, split on the Close+Open boundary. Every char is
-    * wrapped (the `[\s\S]` class covers line terminators), so the
-    * array equals [[graft.functions.BpeSegment]]'s JVM char loop
-    * even for words containing \n or \r.
-    */
-  private def wordTokens(word: Column,
-                         merges: Seq[(String, String)]): Column =
-    split(regexp_replace(segmentWord(word, merges),
-      "^" + Open + "|" + Close + "$", ""), Close + Open)
-
   /** Per-document subword token ARRAY (words segmented independently,
     * results concatenated in order; the empty word contributes no
     * tokens).
     */
   def tokens(text: Column, merges: Seq[(String, String)]): Column = {
     validateMerges(merges)
-    flatten(transform(
-      F.filter(split(text, " "), w => w =!= ""),
-      w => wordTokens(w, merges)))
+    BpeSegment.tokens(text, merges)
   }
 
   /** Per-document subword token COUNT without materializing a
-    * per-DOCUMENT token array: Σ over words of the segmented word's
-    * token count (one segmentation evaluation per word).
+    * per-document token array.
     */
   def tokenCount(text: Column, merges: Seq[(String, String)]): Column = {
     validateMerges(merges)
-    aggregate(
-      F.filter(split(text, " "), w => w =!= ""),
-      lit(0L),
-      (acc, w) => acc + size(wordTokens(w, merges)))
+    BpeSegment.tokenCount(text, merges)
   }
 }

@@ -78,14 +78,16 @@ object CountMin {
   }
 
   /** Map-side estimate column: min over the sketch's lanes at the
-    * item's positions. Never underestimates.
+    * item's positions ([[BloomDecontam.positions]]' lanes, one md5
+    * digest per item). Never underestimates.
     */
   def estimate(sk: Sketch)(item: Column): Column = {
     val countsLit = typedlit(sk.counts)
+    val lanes = graft.functions.MinHashFunctions.md5Lanes(
+      item, sk.width.toLong, sk.depth)
     val ests = (0 until sk.depth).map { i =>
       element_at(countsLit,
-        (pmod(conv(substring(md5(item), 1 + 8 * i, 8), 16, 10).cast("long"),
-          lit(sk.width.toLong)) + (i.toLong * sk.width) + 1L).cast("int"))
+        (element_at(lanes, i + 1) + (i.toLong * sk.width) + 1L).cast("int"))
     }
     least(ests: _*)
   }

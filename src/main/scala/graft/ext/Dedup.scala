@@ -68,12 +68,16 @@ object Dedup {
     if (n == 1) array_distinct(split(text, " "))
     else array_distinct(graft.functions.GramFunctions.wordNgrams(text, n))
 
-  /** 52-bit integer hash of a shingle: md5 hex prefix parsed as a
-    * number — portable (md5 + hex parse exist everywhere), and 52 bits
-    * leaves headroom for the linear combinations below in an int64.
+  /** 52-bit integer hash of a value: the md5 hex prefix of
+    * `salt ++ s` parsed as a number — portable (an oracle replays it
+    * as `conv(substring(md5(concat(salt, s)), 1, 13), 16, 10)`), and
+    * 52 bits leaves headroom for the linear combinations below in an
+    * int64. One md5 digest per item in a codegen'd static call
+    * ([[graft.functions.HexHash]]); a non-string `s` is cast to
+    * string.
     */
   def hexHash(s: Column, salt: String): Column =
-    conv(substring(md5(concat(lit(salt), s)), 1, 13), 16, 10).cast("long")
+    graft.functions.MinHashFunctions.hexHash(s, salt)
 
   /** MinHash signature via the Carter-Wegman trick: only TWO md5
     * evaluations per shingle (h1, h2), hash family i = h1 + i·h2.

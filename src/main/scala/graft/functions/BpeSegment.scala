@@ -12,26 +12,27 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Vocabulary-scale BPE model: the ranked merge table as a
   * plan-attached reference object (the [[NearestCentroid]] pattern —
   * the driver artifact rides the plan; per-row work is a tight JVM
-  * loop), running the REFERENCE min-rank merge loop per word. This is
-  * the production face of [[graft.ext.BpeTokenizer]]: the Column fold
-  * adds one nested `replace` per merge to the plan, so it caps at 256
-  * merges; real public merge tables (GPT-2-class) are 32 k–100 k.
-  * Here the table is a hash map and plan size is O(1) in the
-  * vocabulary.
+  * loop), running the REFERENCE min-rank merge loop per word. It is
+  * the one BPE kernel: [[graft.ext.BpeTokenizer]] runs it in word mode
+  * on the small oracle-replayable tables, and production tables
+  * (GPT-2-class, 32 k–100 k merges) use it directly. The table is a
+  * hash map, so plan size is O(1) in the vocabulary.
   *
   * Semantics (the loop every public BPE implementation runs): a word
   * starts as its code-point sequence; repeatedly find the
   * LOWEST-RANKED adjacent pair present and merge ALL its occurrences
   * left-to-right non-overlapping; stop when no adjacent pair is in
-  * the table. BpeSegmentSpec pins this equal to the Column fold on
-  * consistent tables (rank-sequential sweeps ≡ min-rank loop — the
-  * proof is in BpeTokenizer's scaladoc) and to hand-derived
-  * segmentations on the boundary cases the r17 bug got wrong.
+  * the table. BpeSegmentSpec pins this equal to an independent
+  * min-rank reference, to the oracle's rank-sequential replace chain
+  * on consistent tables (the proof that the two agree is in
+  * BpeTokenizer's scaladoc) and to hand-derived segmentations on the
+  * boundary cases the r17 bug got wrong.
   *
   * Two pretokenization modes:
   *  - `byteLevel = false`: words are the text split on single spaces
-  *    (empty words dropped) — exactly the Column path's word stream;
-  *    the base alphabet is code points.
+  *    (empty words dropped) — the oracle's word stream,
+  *    `list_filter(string_split(text, ' '), x -> x <> '')`; the base
+  *    alphabet is code points.
   *  - `byteLevel = true`: words are `' ?[^ ]+'` matches (each word
   *    carries its preceding space, the GPT-2 pretokenizer shape for
   *    the space-only boundary), and the base alphabet is the word's
@@ -50,7 +51,7 @@ final class BpeModel(val merges: Seq[(String, String)],
                      val byteLevel: Boolean,
                      val pretokenRegex: Option[String] = None)
   extends Serializable {
-  // An EMPTY table is legal (unlike the Column fold): segmentation is
+  // An EMPTY table is legal (unlike BpeTokenizer's): segmentation is
   // then the bare base alphabet — the trainer's iteration-0 state.
   require(merges.size <= BpeModel.MaxMerges,
     s"BpeModel: ${merges.size} merges exceeds ${BpeModel.MaxMerges}")
@@ -167,8 +168,7 @@ final class BpeModel(val merges: Seq[(String, String)],
   /** Pretokenize a document into words (mode-dependent, see class
     * doc; an explicit `pretokenRegex` — e.g.
     * [[BpeModel.Gpt2ishPretokenizer]] — overrides both defaults).
-    * Pure JVM mirror of the Column path's
-    * `filter(split(text, " "), _ =!= "")` in word mode.
+    * Word mode is `filter(split(text, " "), _ =!= "")`.
     */
   def preTokenize(text: String): Array[String] = pretokenPattern match {
     case Some(p) =>
@@ -426,10 +426,9 @@ case class BpeTokenCount(child: Expression, model: BpeModel)
 
 object BpeSegment {
 
-  /** Column faces. `byteLevel = false` matches
-    * [[graft.ext.BpeTokenizer.tokens]] word-for-word on consistent
-    * tables (BpeSegmentSpec); `byteLevel = true` is the production
-    * byte-alphabet mode.
+  /** Column faces. `byteLevel = false` is the code-point word mode
+    * [[graft.ext.BpeTokenizer]] runs; `byteLevel = true` is the
+    * production byte-alphabet mode.
     */
   def tokens(text: Column, merges: Seq[(String, String)],
              byteLevel: Boolean = false,

@@ -3,55 +3,90 @@ package graft.functions
 import java.security.MessageDigest
 import org.apache.spark.sql.{Column, GraftSql}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native MinHash primitives — the map-side hot loop of the dedup
-  * family (q29 signatures, q30 LSH pairs, q47 cluster edges).
+/** Native hash primitives — the map-side hot loops of the dedup
+  * family (q29 signatures, q30 LSH pairs, q47 cluster edges) and of
+  * the portable-hash operators. Three md5 kernels share one per-thread
+  * digest:
+  *  - the 52-bit hash ([[hexHash]], and [[hexHashArray]] per element)
+  *    — `conv(substring(md5(concat(salt, s)), 1, 13), 16, 10)`;
+  *  - the 32-bit lanes ([[md5Lanes]]) — lane i is
+  *    `pmod(conv(substring(md5(s), 1 + 8i, 8), 16, 10), width)`;
+  *  - the SimHash votes ([[simhash16]], [[simhash64]]).
   *
-  * The Column formulations they replace — `transform(sh, s =>
-  * conv(substring(md5(concat(salt, s)), 1, 13), 16, 10))` and
-  * `numHashes × array_min(zip_with(h1, h2, a + i·b))` — are
+  * The Column formulations they replace evaluate md5 once per use and
+  * round-trip every value through a hex string; the array forms are
   * higher-order functions, which Spark evaluates interpreted
-  * (CodegenFallback): every shingle cost an expression-tree walk, and
-  * the signature battery re-walked both hash arrays once per slot.
-  * These expressions produce BIT-IDENTICAL values (md5 of the UTF-8
-  * bytes, first 13 hex nibbles as a 52-bit int; mins of h1 + i·h2) in
-  * one static-call pass per row inside whole-stage codegen.
+  * (CodegenFallback), and the signature battery
+  * (`numHashes × array_min(zip_with(h1, h2, a + i·b))`) re-walked both
+  * hash arrays once per slot. These expressions produce BIT-IDENTICAL
+  * values with one digest per item, in one static-call pass per row
+  * inside whole-stage codegen.
   */
 object MinHashOps {
 
   private val digests: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
-  /** 52-bit hash battery: md5(salt ++ s) per element, first 13 hex
-    * nibbles parsed as a long (== `conv(substring(md5_hex, 1, 13), 16,
-    * 10)` — bytes 0..5 whole plus the high nibble of byte 6).
+  /** The first 13 hex nibbles of an md5 digest as a long (==
+    * `conv(substring(md5_hex, 1, 13), 16, 10)` — bytes 0..5 whole plus
+    * the high nibble of byte 6). The one place this arithmetic lives.
     */
-  def hexHashArray(arr: ArrayData, salt: UTF8String): ArrayData = {
+  private def prefix52(h: Array[Byte]): Long = {
+    var v = 0L
+    var k = 0
+    while (k < 6) { v = (v << 8) | (h(k) & 0xffL); k += 1 }
+    (v << 4) | ((h(6) & 0xf0L) >>> 4)
+  }
+
+  /** 52-bit hash of one item: [[prefix52]] of md5(salt ++ s). */
+  def hexHash(s: UTF8String, salt: UTF8String): Long = {
     val digest = digests.get()
-    val saltBytes = salt.getBytes
+    digest.reset()
+    digest.update(salt.getBytes)
+    digest.update(s.getBytes)
+    prefix52(digest.digest())
+  }
+
+  /** 52-bit hash battery: [[hexHash]] per element. */
+  def hexHashArray(arr: ArrayData, salt: UTF8String): ArrayData = {
     val n = arr.numElements()
     val out = new Array[Any](n)
     var i = 0
     while (i < n) {
       // null element → null hash, matching the transform() formulation
-      if (arr.isNullAt(i)) out(i) = null
-      else {
-        digest.reset()
-        digest.update(saltBytes)
-        digest.update(arr.getUTF8String(i).getBytes)
-        val h = digest.digest()
-        var v = 0L
-        var k = 0
-        while (k < 6) { v = (v << 8) | (h(k) & 0xffL); k += 1 }
-        v = (v << 4) | ((h(6) & 0xf0L) >>> 4)
-        out(i) = v
-      }
+      if (!arr.isNullAt(i)) out(i) = hexHash(arr.getUTF8String(i), salt)
       i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** `k` (≤ 4) hash lanes of one item from ONE md5 digest: lane i is
+    * the unsigned big-endian int in digest bytes 4i..4i+3 (the 8-hex
+    * slice at offset 8i) mod `width`. A null item gives k null lanes,
+    * as `array(pmod(conv(substring(md5(null), ..))))` does.
+    */
+  def md5Lanes(item: UTF8String, width: Long, k: Int): ArrayData = {
+    val out = new Array[Any](k)
+    if (item != null) {
+      val digest = digests.get()
+      digest.reset()
+      val h = digest.digest(item.getBytes)
+      var i = 0
+      while (i < k) {
+        var v = 0L
+        var b = 4 * i
+        while (b < 4 * i + 4) { v = (v << 8) | (h(b) & 0xffL); b += 1 }
+        out(i) = v % width
+        i += 1
+      }
     }
     new GenericArrayData(out)
   }
@@ -192,11 +227,7 @@ object MinHashOps {
       digest.update(idBytes)
       digest.update('#'.toByte)
       digest.update(String.valueOf(j).getBytes)
-      val h = digest.digest()
-      var v = 0L
-      var k = 0
-      while (k < 6) { v = (v << 8) | (h(k) & 0xffL); k += 1 }
-      v = (v << 4) | ((h(6) & 0xf0L) >>> 4)
+      val v = prefix52(digest.digest())
       if (v < best) best = v
       j += 1
     }
@@ -242,6 +273,63 @@ case class HexHashArray(child: Expression, salt: String) extends UnaryExpression
   }
 
   override protected def withNewChildInternal(newChild: Expression): HexHashArray =
+    copy(child = newChild)
+}
+
+/** `hex_hash(s, salt)` → the 52-bit hash of one value (a non-string
+  * argument is cast to string, as `concat` did in the md5/conv
+  * formulation). Null input → null.
+  */
+case class HexHash(child: Expression, salt: String)
+  extends UnaryExpression with ImplicitCastInputTypes {
+  private lazy val saltUtf8 = UTF8String.fromString(salt)
+
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = LongType
+  override def prettyName: String = "hex_hash"
+
+  override protected def nullSafeEval(input: Any): Any =
+    MinHashOps.hexHash(input.asInstanceOf[UTF8String], saltUtf8)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val saltRef = ctx.addReferenceObj("salt", saltUtf8,
+      "org.apache.spark.unsafe.types.UTF8String")
+    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashOps.hexHash($c, $saltRef)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): HexHash =
+    copy(child = newChild)
+}
+
+/** `md5_lanes(item, width, k)` → array<long> of k lanes (see
+  * [[MinHashOps.md5Lanes]]). Never null: a null item gives k nulls.
+  */
+case class Md5Lanes(child: Expression, width: Long, k: Int)
+  extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def nullable: Boolean = false
+  override def prettyName: String = "md5_lanes"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (width <= 0 || k < 1 || k > 4) TypeCheckResult.TypeCheckFailure(
+      s"md5_lanes needs width > 0 and k in [1, 4], got ($width, $k)")
+    else super.checkInputDataTypes()
+
+  override def eval(input: InternalRow): Any =
+    MinHashOps.md5Lanes(child.eval(input).asInstanceOf[UTF8String], width, k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.functions.MinHashOps.md5Lanes(${c.isNull} ? null : ${c.value}, ${width}L, $k);""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Md5Lanes =
     copy(child = newChild)
 }
 
@@ -414,6 +502,12 @@ object WeightedMinKey {
 
 object MinHashFunctions {
   /** Column-level entry points. */
+  def hexHash(s: Column, salt: String): Column =
+    GraftSql.column(HexHash(GraftSql.expression(s), salt))
+
+  def md5Lanes(item: Column, width: Long, k: Int): Column =
+    GraftSql.column(Md5Lanes(GraftSql.expression(item), width, k))
+
   def hexHashArray(shingles: Column, salt: String): Column =
     GraftSql.column(HexHashArray(GraftSql.expression(shingles), salt))
 

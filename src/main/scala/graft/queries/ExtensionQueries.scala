@@ -1871,10 +1871,10 @@ object ExtensionQueries {
     * assignment dataflow (shared body) with the per-doc count coming
     * from [[graft.ext.BpeTokenizer.tokenCount]] under q140's merge
     * table: the packing budget a training run actually enforces is
-    * SUBWORDS, not whitespace words, and with the engine's real BPE
-    * face the budget needs no second tokenizer outside the engine.
-    * The oracle splices the same per-word segmentation chain into
-    * q96's recursive packing CTE.
+    * SUBWORDS, not whitespace words, and with the engine's native BPE
+    * kernel the budget needs no second tokenizer outside the engine.
+    * The oracle splices q140's per-word replace chain into q96's
+    * recursive packing CTE.
     */
   def q141BpePacking(spark: SparkSession, dir: String): DataFrame =
     packingAssignment(spark, dir,
@@ -3332,11 +3332,14 @@ object ExtensionQueries {
     * token stream and the count-only scan — the oracle computes one
     * number for both columns, so the two faces are pinned equal),
     * subword vocabulary size, and a token-multiset fingerprint. The
-    * oracle chains the same k literal replaces over sentinel-wrapped
-    * words ([[bpeSegSql]]) — literal replace is leftmost-first
-    * non-overlapping in both engines, which IS BPE's
-    * merge-all-occurrences sweep, and the wrapped pattern can only
-    * match at token boundaries.
+    * engine runs the native min-rank loop
+    * ([[graft.functions.BpeSegment]]); the oracle chains k literal
+    * replaces over sentinel-wrapped words ([[bpeSegSql]]) — literal
+    * replace is leftmost-first non-overlapping, which IS BPE's
+    * merge-all-occurrences sweep, the wrapped pattern can only match
+    * at token boundaries, and on the consistent table
+    * rank-sequential sweeps equal the min-rank loop — so the gate
+    * pins the kernel to an independent formulation.
     */
   def q140BpeTokens(spark: SparkSession, dir: String): DataFrame = {
     import graft.ext.BpeTokenizer
@@ -3944,7 +3947,10 @@ object ExtensionQueries {
 
   /** The same wrapped replace chain for an arbitrary merge table
     * (q143's byte-level table reuses it over mapped-byte symbols;
-    * single quotes in symbols are SQL-escaped).
+    * single quotes in symbols are SQL-escaped). The wrap matches
+    * `[\s\S]`, not `.`: RE2's `.` skips \n, so a `.` wrap would
+    * leave a \n inside a word unwrapped, while the native kernel
+    * starts from every code point of the word.
     */
   private def bpeSegSqlFor(varName: String,
                            merges: Seq[(String, String)]): String = {
@@ -3958,8 +3964,8 @@ object ExtensionQueries {
   }
 
   /** Segmented string → token LIST: strip the outermost sentinels,
-    * split on the close+open boundary (mirrors BpeTokenizer's
-    * wordTokens; `\x01`/`\x02` are RE2 byte escapes).
+    * split on the close+open boundary (`\x01`/`\x02` are RE2 byte
+    * escapes).
     */
   private def bpeTokenListSql(segExpr: String): String =
     s"string_split(regexp_replace($segExpr, '^\\x01|\\x02$$', '', 'g'), " +

@@ -206,7 +206,7 @@ object ScaleTrend {
       "lshidx_build", "lshinc", "lshfull", "ccinc", "ccfull", "subdedup",
       "q125_battery", "urlnorm", "repbattery", "bloomdecon", "keywords",
       "paradedup", "cms", "fusedstack", "htmltext", "boilerp",
-      "bpecol", "bpenat", "bpenat10k", "bpetrain",
+      "bpenat", "bpenat10k", "bpetrain",
       "bpetrainfast").exists(shapeFilter)
     val needFrontier = Seq("frontier").exists(shapeFilter)
     val needVecs = Seq("ivf", "ivfsearch", "brute", "qbuild", "qbrute",
@@ -1066,17 +1066,12 @@ object ScaleTrend {
       f"small $hSmall%.3f  big $hBig%.3f")
 
     // ---- BPE tokenizer family (round 18) ----------------------------
-    // the Column fold (`bpecol`, one nested replace per merge — the
-    // ≤256-merge oracle-replayable face) vs the native min-rank
-    // expression (`bpenat`, plan-attached rank map + per-thread word
-    // memo) on the SAME table, plus the production point the fold
-    // cannot run at all: a 10k-merge table (`bpenat10k`).
+    // the native min-rank expression (`bpenat`, plan-attached rank map
+    // + per-thread word memo) on a 9-merge table TRAINED on the small
+    // corpus, plus a production-size 10k-merge table (`bpenat10k`).
     // `bpetrain` prices 3 training iterations (1 corpus scan + 3
     // vocab-only rounds). Both applied tables are over the corpus's
-    // REAL alphabet (w + digits) so merges actually FIRE — the
-    // 9-merge table is TRAINED on the small corpus (trained tables
-    // are consistent, so both faces provably agree — their printed
-    // token sums must match row-for-row).
+    // REAL alphabet (w + digits) so merges actually FIRE.
     lazy val bpe9: Seq[(String, String)] = graft.ext.BpeTrainer.mergeTable(
       graft.ext.BpeTrainer.train(
         spark.read.parquet(docsSmall), "text", nMerges = 9))
@@ -1095,10 +1090,6 @@ object ScaleTrend {
       }
       outB.toSeq
     }
-    def bpecolShape(path: String): Long =
-      spark.read.parquet(path)
-        .agg(sum(graft.ext.BpeTokenizer.tokenCount(col("text"), bpe9)))
-        .head.getLong(0)
     def bpenatShape(path: String, table: Seq[(String, String)]): Long =
       spark.read.parquet(path)
         .agg(sum(graft.functions.BpeSegment.tokenCount(col("text"), table)))
@@ -1175,8 +1166,6 @@ object ScaleTrend {
     run("frontier", "small", docsSmallN)(frontierShape(frontSmall, docsSmallN))
     run("frontier", "big", docsBigN)(frontierShape(frontBig, docsBigN))
 
-    run("bpecol", "small", docsSmallN)(bpecolShape(docsSmall))
-    run("bpecol", "big", docsBigN)(bpecolShape(docsBig))
     run("bpenat", "small", docsSmallN)(bpenatShape(docsSmall, bpe9))
     run("bpenat", "big", docsBigN)(bpenatShape(docsBig, bpe9))
     run("bpenat10k", "small", docsSmallN)(bpenatShape(docsSmall, bpe10k))

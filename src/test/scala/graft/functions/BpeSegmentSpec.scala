@@ -4,11 +4,12 @@ import graft.SparkSpec
 import graft.ext.BpeTokenizer
 import org.apache.spark.sql.functions._
 
-/** Pins the vocabulary-scale native BPE face ([[BpeSegment]]) to
-  * (a) an INDEPENDENT min-rank reference implementation written here
-  * in list form, (b) the Column-fold face on consistent tables ≤ 256
-  * merges, and (c) hand-derived segmentations on the boundary cases
-  * the r17 single-space representation got wrong.
+/** Pins the native BPE kernel ([[BpeSegment]]) to (a) an INDEPENDENT
+  * min-rank reference implementation written here in list form,
+  * (b) the oracle's rank-sequential replace fold (also written here,
+  * in plain Scala) on consistent tables ≤ 256 merges, and
+  * (c) hand-derived segmentations on the boundary cases the r17
+  * single-space representation got wrong.
   */
 class BpeSegmentSpec extends SparkSpec {
   import spark.implicits._
@@ -53,11 +54,24 @@ class BpeSegmentSpec extends SparkSpec {
       .select(BpeSegment.tokens(col("t"), table).as("tk"))
       .as[Seq[String]].head()
 
+  /** The oracle's rank-sequential semantics (q140's replace chain):
+    * wrap each code point of a word in the Open/Close sentinels,
+    * apply one literal `String.replace` per merge in rank order,
+    * strip the outer sentinels and split on the Close+Open boundary.
+    */
   private def columnToks(text: String,
-                         table: Seq[(String, String)]): Seq[String] =
-    Seq(text).toDF("t")
-      .select(BpeTokenizer.tokens(col("t"), table).as("tk"))
-      .as[Seq[String]].head()
+                         table: Seq[(String, String)]): Seq[String] = {
+    import BpeTokenizer.{Close, Open}
+    text.split(" ", -1).toSeq.filter(_.nonEmpty).flatMap { w =>
+      val wrapped = w.codePoints().toArray.toSeq
+        .map(cp => Open + new String(Character.toChars(cp)) + Close).mkString
+      val seg = table.foldLeft(wrapped) { case (acc, (l, r)) =>
+        acc.replace(Open + l + Close + Open + r + Close, Open + l + r + Close)
+      }
+      seg.substring(Open.length, seg.length - Close.length)
+        .split(java.util.regex.Pattern.quote(Close + Open), -1).toSeq
+    }
+  }
 
   /** Seeded random CONSISTENT table (every side a single char or an
     * earlier output) over a small alphabet.
@@ -113,8 +127,8 @@ class BpeSegmentSpec extends SparkSpec {
     val cnt = Seq(text).toDF("t")
       .select(BpeSegment.tokenCount(col("t"), table)).as[Long].head()
     cnt shouldBe expected.size.toLong
-    // far beyond the Column fold's plan-size cap — the point of the
-    // native face
+    // far beyond BpeTokenizer's oracle-replayable cap — the point of
+    // the native kernel
     assert(table.size > BpeTokenizer.MaxMerges)
   }
 
@@ -157,8 +171,9 @@ class BpeSegmentSpec extends SparkSpec {
 
   test("line terminators inside a word: native ≡ column fold ≡ reference") {
     // the r18 ADVICE seam: a `.`-based wrap skips \n (and, java-only,
-    // \r) so "a\nb" kept raw sentinels on the Column face while the
-    // JVM loop yielded ["a","\n","b"]; the [\s\S] wrap closes it
+    // \r) so "a\nb" kept raw sentinels on the replace chain while the
+    // JVM loop yielded ["a","\n","b"]; the oracle's [\s\S] wrap and
+    // this reference wrap every code point
     Seq("a\nb", "a\rb", "x\r\ny", "\nan", "an\r").foreach { w =>
       val expected = refSegment(chars(w), merges)
       withClue(s"word ${w.map(c => f"\\u${c.toInt}%04x").mkString}: ") {

@@ -56,6 +56,24 @@ object KernelProps extends Properties("NativeKernels") {
       }
     }
 
+  property("hexHash == parseLong(md5hex(salt+s).take(13), 16)") =
+    Prop.forAll(Gen.oneOf(word, Gen.const(""), Gen.asciiPrintableStr),
+      Gen.oneOf("a#", "sp#", "")) { (s, salt) =>
+      MinHashOps.hexHash(UTF8String.fromString(s), UTF8String.fromString(salt)) ==
+        java.lang.Long.parseLong(md5hex(salt + s).take(13), 16)
+    }
+
+  property("md5Lanes lane i == parseLong(md5hex(s).slice(8i, 8i+8), 16) % width") =
+    Prop.forAll(Gen.oneOf(word, Gen.const(""), Gen.asciiPrintableStr),
+      Gen.choose(1L, 1L << 26), Gen.choose(1, 4)) { (s, width, k) =>
+      val got = MinHashOps.md5Lanes(UTF8String.fromString(s), width, k)
+      val hex = md5hex(s)
+      got.numElements() == k && (0 until k).forall { i =>
+        got.getLong(i) ==
+          java.lang.Long.parseLong(hex.substring(8 * i, 8 * i + 8), 16) % width
+      }
+    }
+
   property("minhash slot i == min(h1 + i*h2), empty → nulls") =
     Prop.forAll(Gen.listOf(Gen.choose(0L, (1L << 52) - 1)),
       Gen.choose(1, 8)) { (h1s, num) =>

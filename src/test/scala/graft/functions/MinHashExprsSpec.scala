@@ -21,6 +21,27 @@ class MinHashExprsSpec extends SparkSpec {
       array_min(zip_with(h1, h2, (a, b) => a + lit(i.toLong) * b))
     }: _*)
 
+  /** The replaced scalar formulations — parity references. */
+  private def colHexHash(s: org.apache.spark.sql.Column, salt: String) =
+    conv(substring(md5(concat(lit(salt), s)), 1, 13), 16, 10).cast("long")
+
+  private def colLanes(s: org.apache.spark.sql.Column, width: Long, k: Int) =
+    array((0 until k).map { i =>
+      pmod(conv(substring(md5(s), 1 + 8 * i, 8), 16, 10).cast("long"),
+        lit(width))
+    }: _*)
+
+  /** Unicode, empty-string and null items — over a range scan, so the
+    * projection is compiled rather than folded into a local relation.
+    */
+  private val items = spark.range(6).select(element_at(
+    typedlit(Seq[Option[String]](Some("the_quick"), Some("caffè"),
+      Some("naïve 中文 🙂"), Some(""), None, Some("a#b"))),
+    (col("id") + 1).cast("int")).as("s"))
+
+  private def wholeStage(df: org.apache.spark.sql.DataFrame, fn: String) =
+    df.queryExecution.executedPlan.toString should include(s"*(1) Project [$fn(")
+
   private val docs = Seq(
     "the quick brown fox",
     "a a b",
@@ -67,6 +88,35 @@ class MinHashExprsSpec extends SparkSpec {
       .agg(max(col("h"))).as[Long].head()
     maxHash should be < (1L << 52)
     maxHash should be > 0L
+  }
+
+  test("hex_hash matches the md5/conv formulation bit-for-bit") {
+    for (salt <- Seq("a#", "")) {
+      val df = items.select(MinHashFunctions.hexHash(col("s"), salt))
+      wholeStage(df, "hex_hash")
+      df.collect().toSeq shouldBe
+        items.select(colHexHash(col("s"), salt)).collect().toSeq
+    }
+    // a non-string argument is cast to string, as concat did
+    val ids = spark.range(-3, 40)
+    ids.select(MinHashFunctions.hexHash(col("id"), "sp#")).collect().toSeq shouldBe
+      ids.select(colHexHash(col("id"), "sp#")).collect().toSeq
+  }
+
+  test("md5_lanes matches the per-lane md5/conv/pmod formulation") {
+    for {
+      salt <- Seq("a#", "")
+      (width, k) <- Seq((256L, 3), (32768L, 4), (64L, 1), (1L << 26, 2))
+    } {
+      val item = concat(lit(salt), col("s"))
+      val df = items.select(MinHashFunctions.md5Lanes(item, width, k))
+      wholeStage(df, "md5_lanes")
+      val got = df.collect().map(_.getSeq[Any](0))
+      got.toSeq shouldBe
+        items.select(colLanes(item, width, k)).collect().map(_.getSeq[Any](0)).toSeq
+      // a null item gives k null lanes, never a null array
+      got(4) shouldBe Seq.fill(k)(null)
+    }
   }
 
   test("plan stays inside whole-stage codegen") {
