@@ -152,8 +152,7 @@ object BpeTrainer {
     var i = 0
     while (i < toks.length - 1) {
       val p = (toks(i), toks(i + 1))
-      val prev = m.get(p)
-      m.put(p, if (prev == null) 1 else prev + 1)
+      m.put(p, m.getOrDefault(p, 0) + 1)
       i += 1
     }
     m
@@ -220,9 +219,8 @@ object BpeTrainer {
       val occ = pairOccs(words(w)).entrySet().iterator()
       while (occ.hasNext) {
         val e = occ.next()
-        val prev = counts.get(e.getKey)
         counts.put(e.getKey,
-          (if (prev == null) 0L else prev) + e.getValue.toLong * cnts(w))
+          counts.getOrDefault(e.getKey, 0L) + e.getValue.toLong * cnts(w))
         addWhere(e.getKey, w)
       }
       w += 1
@@ -249,8 +247,7 @@ object BpeTrainer {
     while (learned.size < nMerges && heap.nonEmpty) {
       val top = heap.dequeue()
       val p = (top.l, top.r)
-      val cur = counts.get(p)
-      if (cur != null && cur.longValue == top.c) {
+      if (counts.containsKey(p) && counts.get(p) == top.c) {
         learned += Merge(top.l, top.r, top.c)
         val affected = where.remove(p)
         counts.remove(p)
@@ -270,12 +267,10 @@ object BpeTrainer {
               val ki = keys.iterator()
               while (ki.hasNext) {
                 val q = ki.next()
-                val o = { val v = oldOcc.get(q); if (v == null) 0 else v.intValue }
-                val nn = { val v = newOcc.get(q); if (v == null) 0 else v.intValue }
+                val o = oldOcc.getOrDefault(q, 0)
+                val nn = newOcc.getOrDefault(q, 0)
                 if (o != nn && q != p) {
-                  val prev = counts.get(q)
-                  val upd = (if (prev == null) 0L else prev.longValue) +
-                    (nn - o).toLong * cnts(idx)
+                  val upd = counts.getOrDefault(q, 0L) + (nn - o).toLong * cnts(idx)
                   if (upd <= 0L) counts.remove(q)
                   else {
                     counts.put(q, upd)
@@ -291,7 +286,7 @@ object BpeTrainer {
               // a completed left-to-right sweep leaves no (l, r)
               // adjacency; the count map must agree or the incremental
               // state has diverged from the recount
-              require(newOcc.get(p) == null,
+              require(!newOcc.containsKey(p),
                 s"BpeTrainer.trainFast: residual ($p) adjacency after " +
                   "sweep — incremental state diverged")
             }

@@ -42,10 +42,11 @@ object TextClassifier {
   /** Hash bucket of one feature string: md5's first 8-hex lane mod
     * `dim` — [[BloomDecontam.positions]]' k=1 arithmetic, shared so
     * the two broadcast-scan operators keep ONE portable hash story.
+    * Lane 0 of `md5_lanes`: one digest, no hex-string round trip; a
+    * null feature gives a null bucket.
     */
   def bucket(feature: Column, dim: Int): Column =
-    pmod(conv(substring(md5(feature), 1, 8), 16, 10).cast("long"),
-      lit(dim.toLong))
+    graft.functions.MinHashFunctions.md5Lanes(feature, dim.toLong, 1).getItem(0)
 
   /** Per-document integer score columns over `weights`:
     * `(clf_sum, clf_n)` — Σ weight[bucket(f)] over unigram+bigram

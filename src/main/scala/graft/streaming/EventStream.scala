@@ -145,7 +145,11 @@ object EventStream {
     * one state-store instance PER shuffle partition, and every store
     * commits a delta file per micro-batch — so a query whose state is
     * small pays (partitions × batches) tiny-file commits of pure
-    * fixed overhead. Measured on the five streaming gates at sf0.1
+    * fixed overhead. Most of that overhead was child processes, not
+    * I/O: without a native Hadoop library every commit ran `chmod`
+    * per created file and `readlink` per rename, until the session's
+    * fork-free `file:` file system ([[graft.ForkFreeRawLocalFileSystem]])
+    * replaced both. Measured on the five streaming gates at sf0.1
     * (BENCH_VARIANCE §"round 11 protocol"): 32 → 8 partitions cuts
     * warm wall 30–45% on every gate, 8 → 4 is marginal and regresses
     * the RocksDB dedup gate — so the gates run at 8. Aggregation

@@ -1,8 +1,9 @@
 package graft
 
 /** [[SessionTuning.local]] refuses a static conf that an existing
-  * session cannot take, instead of returning a session that silently
-  * runs without it.
+  * session cannot take, and a `file:` scheme that does not resolve to
+  * the fork-free file system, instead of returning a session that
+  * silently runs without it.
   */
 class SessionTuningSpec extends SparkSpec {
 
@@ -14,5 +15,15 @@ class SessionTuningSpec extends SparkSpec {
     e.getMessage should include("spark.sql.codegen.cache.maxEntries")
     e.getMessage should include("requested 100")
     e.getMessage should include("runs with 5000")
+  }
+
+  test("a Hadoop conf whose file: scheme is not the fork-free file system is an error") {
+    SessionTuning.requireForkFreeLocalFs(spark.sparkContext.hadoopConfiguration)
+    // a stock conf still gets the cached FileSystem, but FileContext
+    // resolves file: afresh, to Hadoop's own LocalFs
+    val e = intercept[IllegalArgumentException] {
+      SessionTuning.requireForkFreeLocalFs(new org.apache.hadoop.conf.Configuration())
+    }
+    e.getMessage should include("FileContext org.apache.hadoop.fs.local.LocalFs")
   }
 }

@@ -119,6 +119,17 @@ class MinHashExprsSpec extends SparkSpec {
     }
   }
 
+  test("TextClassifier.bucket is lane 0 of md5_lanes, bit-for-bit") {
+    for (dim <- Seq(1, 7, 64, 1 << 20)) {
+      val df = items.select(graft.ext.TextClassifier.bucket(col("s"), dim))
+      wholeStage(df, "md5_lanes")
+      val got = df.collect().toSeq
+      got shouldBe items.select(pmod(conv(substring(md5(col("s")), 1, 8), 16, 10)
+        .cast("long"), lit(dim.toLong))).collect().toSeq
+      got(4).isNullAt(0) shouldBe true
+    }
+  }
+
   test("plan stays inside whole-stage codegen") {
     val df = spark.range(10)
       .select(split(concat_ws(" ", lit("w"), col("id").cast("string")), " ").as("sh"))
