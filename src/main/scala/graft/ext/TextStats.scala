@@ -55,10 +55,6 @@ object TextStats {
   def langScores(text: Column): Seq[(String, Column)] =
     langMarkers.map { case (l, ws) => (s"score_$l", markerHits(text, ws)) }
 
-  /** Scores over a shared token column (single tokenize pass). */
-  def langScoresIn(tokens: Column): Seq[(String, Column)] =
-    langMarkers.map { case (l, ws) => (s"score_$l", markerHitsIn(tokens, ws)) }
-
   /** Heuristic language ID: argmax of the marker scores with a fixed
     * precedence (en > de > es > fr > zh) on ties; 'und' when no marker
     * hits at all. Integer comparisons only → deterministic across

@@ -318,6 +318,10 @@ object BpeModel {
 
 /** `bpe_tokens(text)` → array<string>: per-document subword tokens
   * under a vocabulary-scale model. Null text → null.
+  *
+  * Not a [[StaticKernel]] (nor are [[BpeWords]], [[BpeTokenCount]]):
+  * its generated code calls back into the model reference, which keeps
+  * a per-thread memo.
   */
 case class BpeSegment(child: Expression, model: BpeModel)
   extends UnaryExpression {
@@ -357,7 +361,9 @@ case class BpeSegment(child: Expression, model: BpeModel)
 
 /** `bpe_words(text)` → array<string>: the model's pretokenized words
   * in its working alphabet (raw words / byte-mapped strings) — the
-  * trainer's vocabulary unit. Null text → null.
+  * trainer's vocabulary unit. Null text → null. Not a
+  * [[StaticKernel]]: the call needs the model reference and its
+  * per-thread memo.
   */
 case class BpeWords(child: Expression, model: BpeModel)
   extends UnaryExpression {
@@ -395,6 +401,8 @@ case class BpeWords(child: Expression, model: BpeModel)
 
 /** `bpe_token_count(text)` → long: the token count without
   * materializing the array (the budgeting hot path). Null text → null.
+  * Not a [[StaticKernel]]: the call needs the model reference and its
+  * per-thread memo.
   */
 case class BpeTokenCount(child: Expression, model: BpeModel)
   extends UnaryExpression {

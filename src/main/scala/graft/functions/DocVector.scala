@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSql, SparkSession}
+import org.apache.spark.sql.{Column, GraftSql}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -48,7 +47,7 @@ object DocVectorOps {
 }
 
 case class HashedCountVector(child: Expression, dim: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with StaticKernel {
   override def dataType: DataType =
     ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "hashed_count_vector"
@@ -63,12 +62,9 @@ case class HashedCountVector(child: Expression, dim: Int)
         s"$prettyName needs dim in [1, 65536], got $dim")
     else TypeCheckResult.TypeCheckSuccess
 
-  override protected def nullSafeEval(input: Any): Any =
-    DocVectorOps.hashedCountVector(input.asInstanceOf[UTF8String], dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.DocVectorOps.hashedCountVector($c, $dim)")
+  override protected def kernel = DocVectorOps
+  override protected def method = "hashedCountVector"
+  override protected def constants = Seq(Literal(dim))
 
   override protected def withNewChildInternal(newChild: Expression): HashedCountVector =
     copy(child = newChild)
@@ -77,11 +73,4 @@ case class HashedCountVector(child: Expression, dim: Int)
 object DocVectorFunctions {
   def hashedCountVector(text: Column, dim: Int): Column =
     GraftSql.column(HashedCountVector(GraftSql.expression(text), dim))
-
-  /** Idempotent SQL registration. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hashed_count_vector",
-      exprs => HashedCountVector(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
 }

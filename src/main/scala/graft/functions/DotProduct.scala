@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSql}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -21,7 +20,7 @@ import org.apache.spark.sql.types._
   * a length mismatch (zip_with pads with null) poisons the fold → null.
   */
 case class DotProduct(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryExpression with StaticKernel {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "dot_product"
@@ -34,22 +33,10 @@ case class DotProduct(left: Expression, right: Expression)
         s"dot_product needs (array<double>, array<double>), got $other")
     }
 
+  // the fold may return null (a boxed Double) even for non-null inputs
   override def nullable: Boolean = true
-
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    DotProduct.fold(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the fold may return null (Java Double) even for non-null inputs —
-    // nullSafeCodeGen with an explicit null re-check, not defineCodeGen
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-         |java.lang.Double graft_dot = graft.functions.DotProduct.fold($a, $b);
-         |if (graft_dot == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = graft_dot.doubleValue(); }
-       """.stripMargin
-    })
-  }
+  override protected def kernel = DotProduct
+  override protected def method = "fold"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =

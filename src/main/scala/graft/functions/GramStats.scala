@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSql, SparkSession}
+import org.apache.spark.sql.{Column, GraftSql}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -146,8 +145,10 @@ object GramOps {
   }
 }
 
-private[functions] trait GramExpr extends UnaryExpression {
+private[functions] trait GramExpr extends UnaryExpression with StaticKernel {
   def n: Int
+  override protected def kernel = GramOps
+  override protected def constants = Seq(Literal(n))
   override def foldable: Boolean = child.foldable
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != StringType)
@@ -163,11 +164,7 @@ case class WordNGrams(child: Expression, n: Int) extends GramExpr {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_ngrams"
 
-  override protected def nullSafeEval(input: Any): Any =
-    GramOps.ngrams(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.GramOps.ngrams($c, $n)")
+  override protected def method = "ngrams"
 
   override protected def withNewChildInternal(newChild: Expression): WordNGrams =
     copy(child = newChild)
@@ -182,11 +179,7 @@ case class GramStats(child: Expression, n: Int) extends GramExpr {
     StructField("distinct_grams", LongType, nullable = false)))
   override def prettyName: String = "gram_stats"
 
-  override protected def nullSafeEval(input: Any): Any =
-    GramOps.stats(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.GramOps.stats($c, $n)")
+  override protected def method = "stats"
 
   override protected def withNewChildInternal(newChild: Expression): GramStats =
     copy(child = newChild)
@@ -204,11 +197,7 @@ case class GramRepStats(child: Expression, n: Int) extends GramExpr {
     StructField("dup_gram_chars", LongType, nullable = false)))
   override def prettyName: String = "gram_rep_stats"
 
-  override protected def nullSafeEval(input: Any): Any =
-    GramOps.repStats(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.GramOps.repStats($c, $n)")
+  override protected def method = "repStats"
 
   override protected def withNewChildInternal(newChild: Expression): GramRepStats =
     copy(child = newChild)
@@ -225,20 +214,4 @@ object GramFunctions {
 
   def gramRepStats(text: Column, n: Int): Column =
     GraftSql.column(GramRepStats(GraftSql.expression(text), n))
-
-  private def litInt(e: Expression): Int = e.eval() match {
-    case i: Int  => i
-    case l: Long => l.toInt
-    case other   => throw new IllegalArgumentException(s"n must be a literal int, got $other")
-  }
-
-  /** Idempotent SQL registration (`word_ngrams`, `gram_stats`). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_ngrams", exprs => WordNGrams(exprs.head, litInt(exprs(1))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_stats", exprs => GramStats(exprs.head, litInt(exprs(1))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gram_rep_stats", exprs => GramRepStats(exprs.head, litInt(exprs(1))), "built-in")
-  }
 }

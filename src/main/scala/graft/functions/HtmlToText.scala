@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSql}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -470,7 +469,8 @@ object HtmlText {
 /** `html_to_text(html)` → string: the extracted text (see
   * [[HtmlText]]). Null html → null.
   */
-case class HtmlToText(child: Expression) extends UnaryExpression {
+case class HtmlToText(child: Expression) extends UnaryExpression
+    with StaticKernel {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "html_to_text"
@@ -481,11 +481,8 @@ case class HtmlToText(child: Expression) extends UnaryExpression {
       s"html_to_text needs string, got $other")
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlText.extractU(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlText.extractU($c)")
+  override protected def kernel = HtmlText
+  override protected def method = "extractU"
 
   override protected def withNewChildInternal(newChild: Expression): HtmlToText =
     copy(child = newChild)
@@ -494,7 +491,8 @@ case class HtmlToText(child: Expression) extends UnaryExpression {
 /** `html_links(html)` → array<string>: href targets of anchor tags in
   * document order (see [[HtmlText.links]]). Null html → null.
   */
-case class HtmlLinks(child: Expression) extends UnaryExpression {
+case class HtmlLinks(child: Expression) extends UnaryExpression
+    with StaticKernel {
 
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
@@ -506,11 +504,8 @@ case class HtmlLinks(child: Expression) extends UnaryExpression {
       s"html_links needs string, got $other")
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlText.linksU(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlText.linksU($c)")
+  override protected def kernel = HtmlText
+  override protected def method = "linksU"
 
   override protected def withNewChildInternal(newChild: Expression): HtmlLinks =
     copy(child = newChild)
@@ -520,7 +515,8 @@ case class HtmlLinks(child: Expression) extends UnaryExpression {
   * per-block extraction with link-char counts (see
   * [[HtmlText.blocks]]). Null html → null.
   */
-case class HtmlBlocks(child: Expression) extends UnaryExpression {
+case class HtmlBlocks(child: Expression) extends UnaryExpression
+    with StaticKernel {
 
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(
@@ -538,11 +534,8 @@ case class HtmlBlocks(child: Expression) extends UnaryExpression {
       s"html_blocks needs string, got $other")
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    HtmlText.blocksU(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HtmlText.blocksU($c)")
+  override protected def kernel = HtmlText
+  override protected def method = "blocksU"
 
   override protected def withNewChildInternal(newChild: Expression): HtmlBlocks =
     copy(child = newChild)

@@ -3,10 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 import org.apache.spark.sql.{Column, GraftSql}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -250,9 +247,8 @@ object MinHashOps {
 }
 
 /** `hex_hash_array(shingles, salt)` → array<long> of 52-bit hashes. */
-case class HexHashArray(child: Expression, salt: String) extends UnaryExpression {
-  private lazy val saltUtf8 = UTF8String.fromString(salt)
-
+case class HexHashArray(child: Expression, salt: String) extends UnaryExpression
+    with StaticKernel {
   // null input elements yield null hashes
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def prettyName: String = "hex_hash_array"
@@ -263,14 +259,9 @@ case class HexHashArray(child: Expression, salt: String) extends UnaryExpression
       s"hex_hash_array needs array<string>, got $other")
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashOps.hexHashArray(input.asInstanceOf[ArrayData], saltUtf8)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val saltRef = ctx.addReferenceObj("salt", saltUtf8,
-      "org.apache.spark.unsafe.types.UTF8String")
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashOps.hexHashArray($c, $saltRef)")
-  }
+  override protected def kernel = MinHashOps
+  override protected def method = "hexHashArray"
+  override protected def constants = Seq(Literal(salt))
 
   override protected def withNewChildInternal(newChild: Expression): HexHashArray =
     copy(child = newChild)
@@ -281,21 +272,15 @@ case class HexHashArray(child: Expression, salt: String) extends UnaryExpression
   * formulation). Null input → null.
   */
 case class HexHash(child: Expression, salt: String)
-  extends UnaryExpression with ImplicitCastInputTypes {
-  private lazy val saltUtf8 = UTF8String.fromString(salt)
+  extends UnaryExpression with StaticKernel with ImplicitCastInputTypes {
 
   override def inputTypes = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "hex_hash"
 
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashOps.hexHash(input.asInstanceOf[UTF8String], saltUtf8)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val saltRef = ctx.addReferenceObj("salt", saltUtf8,
-      "org.apache.spark.unsafe.types.UTF8String")
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashOps.hexHash($c, $saltRef)")
-  }
+  override protected def kernel = MinHashOps
+  override protected def method = "hexHash"
+  override protected def constants = Seq(Literal(salt))
 
   override protected def withNewChildInternal(newChild: Expression): HexHash =
     copy(child = newChild)
@@ -305,7 +290,7 @@ case class HexHash(child: Expression, salt: String)
   * [[MinHashOps.md5Lanes]]). Never null: a null item gives k nulls.
   */
 case class Md5Lanes(child: Expression, width: Long, k: Int)
-  extends UnaryExpression with ImplicitCastInputTypes {
+  extends UnaryExpression with StaticKernel with ImplicitCastInputTypes {
 
   override def inputTypes = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
@@ -317,17 +302,11 @@ case class Md5Lanes(child: Expression, width: Long, k: Int)
       s"md5_lanes needs width > 0 and k in [1, 4], got ($width, $k)")
     else super.checkInputDataTypes()
 
-  override def eval(input: InternalRow): Any =
-    MinHashOps.md5Lanes(child.eval(input).asInstanceOf[UTF8String], width, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      ${CodeGenerator.javaType(dataType)} ${ev.value} =
-        graft.functions.MinHashOps.md5Lanes(${c.isNull} ? null : ${c.value}, ${width}L, $k);""",
-      isNull = FalseLiteral)
-  }
+  override protected def kernel = MinHashOps
+  override protected def method = "md5Lanes"
+  override protected def constants = Seq(Literal(width), Literal(k))
+  // the kernel maps a null item to k null lanes
+  override protected def propagateNull = false
 
   override protected def withNewChildInternal(newChild: Expression): Md5Lanes =
     copy(child = newChild)
@@ -335,7 +314,7 @@ case class Md5Lanes(child: Expression, width: Long, k: Int)
 
 /** `minhash_array(h1, h2, num)` → array<long> signature. */
 case class MinhashArray(left: Expression, right: Expression, num: Int)
-  extends BinaryExpression {
+  extends BinaryExpression with StaticKernel {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def prettyName: String = "minhash_array"
@@ -348,11 +327,9 @@ case class MinhashArray(left: Expression, right: Expression, num: Int)
         s"minhash_array needs (array<long>, array<long>) and num > 0, got $other")
     }
 
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    MinHashOps.minhash(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData], num)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.MinHashOps.minhash($a, $b, $num)")
+  override protected def kernel = MinHashOps
+  override protected def method = "minhash"
+  override protected def constants = Seq(Literal(num))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): MinhashArray =
@@ -366,13 +343,7 @@ case class MinhashArray(left: Expression, right: Expression, num: Int)
   * hash set probed once per token inside codegen.
   */
 case class MarkerHits(child: Expression, markers: Seq[String])
-  extends UnaryExpression {
-
-  private lazy val markerSet: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](markers.size * 2)
-    markers.foreach(m => s.add(UTF8String.fromString(m)))
-    s
-  }
+  extends UnaryExpression with StaticKernel {
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "marker_hits"
@@ -383,15 +354,34 @@ case class MarkerHits(child: Expression, markers: Seq[String])
       s"marker_hits needs array<string>, got $other")
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashOps.markerHits(input.asInstanceOf[ArrayData], markerSet)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("markers", markerSet, "java.util.HashSet")
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashOps.markerHits($c, $setRef)")
+  override protected def kernel = MinHashOps
+  override protected def method = "markerHits"
+  override protected def constants = {
+    val set = new java.util.HashSet[UTF8String](markers.size * 2)
+    markers.foreach(m => set.add(UTF8String.fromString(m)))
+    Seq(Literal(set, ObjectType(classOf[java.util.HashSet[_]])))
   }
 
   override protected def withNewChildInternal(newChild: Expression): MarkerHits =
+    copy(child = newChild)
+}
+
+/** `simhash64(tokens)` → long (see [[MinHashOps.simhash64]]). */
+case class SimHash64(child: Expression) extends UnaryExpression
+    with StaticKernel {
+  override def dataType: DataType = LongType
+  override def prettyName: String = "simhash64"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"simhash64 needs array<string>, got $other")
+  }
+
+  override protected def kernel = MinHashOps
+  override protected def method = "simhash64"
+
+  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
 }
 
@@ -402,28 +392,8 @@ case class MarkerHits(child: Expression, markers: Seq[String])
   * aggregate(tokens, ...))` which re-folded the whole token array
   * interpreted once per bit.
   */
-/** `simhash64(tokens)` → long (see [[MinHashOps.simhash64]]). */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash64 needs array<string>, got $other")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashOps.simhash64(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashOps.simhash64($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-case class SimHash16(child: Expression) extends UnaryExpression {
+case class SimHash16(child: Expression) extends UnaryExpression
+    with StaticKernel {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "simhash16"
 
@@ -433,11 +403,8 @@ case class SimHash16(child: Expression) extends UnaryExpression {
       s"simhash16 needs array<string>, got $other")
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashOps.simhash16(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashOps.simhash16($c)")
+  override protected def kernel = MinHashOps
+  override protected def method = "simhash16"
 
   override protected def withNewChildInternal(newChild: Expression): SimHash16 =
     copy(child = newChild)
@@ -449,8 +416,7 @@ case class SimHash16(child: Expression) extends UnaryExpression {
   * ticket.
   */
 case class WeightedMinKey(left: Expression, right: Expression, salt: String)
-  extends BinaryExpression {
-  private lazy val saltUtf8 = UTF8String.fromString(salt)
+  extends BinaryExpression with StaticKernel {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "weighted_min_key"
@@ -462,16 +428,9 @@ case class WeightedMinKey(left: Expression, right: Expression, salt: String)
         s"weighted_min_key needs (string, int), got $other")
     }
 
-  override protected def nullSafeEval(id: Any, weight: Any): Any =
-    MinHashOps.weightedMinKey(id.asInstanceOf[UTF8String],
-      weight.asInstanceOf[Int], saltUtf8)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val saltRef = ctx.addReferenceObj("salt", saltUtf8,
-      "org.apache.spark.unsafe.types.UTF8String")
-    defineCodeGen(ctx, ev, (id, w) =>
-      s"graft.functions.MinHashOps.weightedMinKey($id, $w, $saltRef)")
-  }
+  override protected def kernel = MinHashOps
+  override protected def method = "weightedMinKey"
+  override protected def constants = Seq(Literal(salt))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): WeightedMinKey =
@@ -479,24 +438,12 @@ case class WeightedMinKey(left: Expression, right: Expression, salt: String)
 }
 
 object WeightedMinKey {
-  /** SQL-registration builder: the salt is baked into the codegen'd
-    * kernel, so it must be a string literal — checked here for a clean
-    * AnalysisException naming the function instead of an eval()-time
-    * cast / index failure on a malformed call.
+  /** The SQL builder ([[Kernels.table]]): the salt is a constant of
+    * the kernel, so it must be a non-null string literal.
     */
   def build(exprs: Seq[Expression]): WeightedMinKey = {
-    def fail(msg: String): Nothing =
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "_LEGACY_ERROR_TEMP_3102",
-        messageParameters = Map("msg" -> msg))
-    if (exprs.length != 3)
-      fail(s"weighted_min_key(id, weight, salt) takes 3 arguments, got ${exprs.length}")
-    if (!exprs(2).foldable || exprs(2).dataType != StringType)
-      fail("weighted_min_key: salt (arg 3) must be a string literal")
-    val salt = exprs(2).eval()
-    if (salt == null)
-      fail("weighted_min_key: salt (arg 3) must not be null")
-    WeightedMinKey(exprs.head, exprs(1), salt.asInstanceOf[UTF8String].toString)
+    val a = new SqlArgs("weighted_min_key", 3 to 3, exprs)
+    WeightedMinKey(a(0), a(1), a.string(2))
   }
 }
 

@@ -44,6 +44,9 @@ import org.apache.spark.sql.types._
   *    strict improvement ≡ `ORDER BY cos DESC, cid ASC` rank 1).
   *
   * Never null: the constructor requires a non-empty centroid set.
+  *
+  * Not a [[StaticKernel]]: the generated code reads the per-instance
+  * centroid tables.
   */
 case class NearestCentroid(child: Expression, ids: Array[Long],
                            vecs: Array[Array[Double]], norms: Array[Double])

@@ -29,6 +29,9 @@ import org.apache.spark.sql.types._
   *
   * Null codes → null; a code id absent from the codebook → null
   * (defensive: never a wrong score).
+  *
+  * Not a [[StaticKernel]]: the generated code reads the per-instance
+  * code and dot tables.
   */
 case class PqAdc(child: Expression, cids: Array[Array[Long]],
                  dots: Array[Array[Double]])

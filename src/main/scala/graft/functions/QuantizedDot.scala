@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSql}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -23,7 +22,7 @@ import org.apache.spark.sql.types._
   * element or a length mismatch poisons the fold → null.
   */
 case class QuantizedDot(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryExpression with StaticKernel {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "quantized_dot"
@@ -36,27 +35,10 @@ case class QuantizedDot(left: Expression, right: Expression)
         s"quantized_dot needs (array<tinyint>, array<tinyint>), got $other")
     }
 
+  // the fold may return null (poisoned) even for non-null inputs
   override def nullable: Boolean = true
-
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    QuantizedDot.fold(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the fold may return null (poisoned) even for non-null inputs —
-    // nullSafeCodeGen with an explicit null re-check, not defineCodeGen.
-    // freshName, NOT a fixed name: two quantized_dot calls in one
-    // generated function redefine a fixed local and kick the whole
-    // expression tree back to the interpreter (the q124 recall join
-    // evaluates the expression twice in one projection)
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val boxed = ctx.freshName("qdotBoxed")
-      s"""
-         |java.lang.Long $boxed = graft.functions.QuantizedDot.fold($a, $b);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $boxed.longValue(); }
-       """.stripMargin
-    })
-  }
+  override protected def kernel = QuantizedDot
+  override protected def method = "fold"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): QuantizedDot =
@@ -82,9 +64,4 @@ object QuantizedDot {
   def qdot(a: Column, b: Column): Column =
     GraftSql.column(QuantizedDot(GraftSql.expression(a), GraftSql.expression(b)))
 
-  /** Idempotent SQL registration (the non-extensions path). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quantized_dot", exprs => QuantizedDot(exprs.head, exprs(1)),
-      "built-in")
 }

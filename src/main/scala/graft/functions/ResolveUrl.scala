@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSql}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -156,7 +155,7 @@ object UrlResolve {
   * resolution (see [[UrlResolve]]). Null in either input → null.
   */
 case class ResolveUrlExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryExpression with StaticKernel {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "resolve_url"
@@ -168,14 +167,8 @@ case class ResolveUrlExpr(left: Expression, right: Expression)
         s"resolve_url needs (string, string), got $other")
     }
 
-  override protected def nullSafeEval(base: Any, ref: Any): Any =
-    UrlResolve.resolveU(base.asInstanceOf[UTF8String],
-      ref.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (b, r) => s"graft.functions.UrlResolve.resolveU($b, $r)")
+  override protected def kernel = UrlResolve
+  override protected def method = "resolveU"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ResolveUrlExpr =

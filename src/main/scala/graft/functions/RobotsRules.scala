@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSql}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -263,12 +262,21 @@ object RobotsRules {
     } else lastLen == 0 || byteIndexOf(path, pos, pattern, lastStart, patEnd) >= 0
   }
 
-  private[functions] def rulesArrayData(content: UTF8String,
-                                        agent: String): ArrayData =
-    new GenericArrayData(rulesFor(content.toString, agent).map {
+  /** The [[RobotsRulesExpr]] kernel. */
+  def rulesArrayData(content: UTF8String, agent: UTF8String): ArrayData =
+    new GenericArrayData(rulesFor(content.toString, agent.toString).map {
       case (allow, prefix) => new GenericInternalRow(
         Array[Any](allow, UTF8String.fromString(prefix)))
     }: Array[Any])
+
+  /** The [[RobotsCrawlDelayExpr]] kernel: the delay, or null when none
+    * applies (an absent delay is a data outcome, not a null input).
+    */
+  def crawlDelayOrNull(content: UTF8String, agent: UTF8String): java.lang.Long =
+    crawlDelay(content.toString, agent.toString) match {
+      case Some(d) => d
+      case None    => null
+    }
 }
 
 /** `robots_rules(txt)` → array<struct<allow boolean, prefix string>>:
@@ -276,7 +284,7 @@ object RobotsRules {
   * text → null.
   */
 case class RobotsRulesExpr(child: Expression, agent: String)
-  extends UnaryExpression {
+  extends UnaryExpression with StaticKernel {
 
   require(agent.nonEmpty && agent == agent.toLowerCase &&
       !agent.contains(" "),
@@ -294,18 +302,9 @@ case class RobotsRulesExpr(child: Expression, agent: String)
       s"robots_rules needs string, got $other")
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    RobotsRules.rulesArrayData(input.asInstanceOf[UTF8String], agent)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("robotsRules", this,
-      classOf[RobotsRulesExpr].getName)
-    defineCodeGen(ctx, ev, c => s"$self.rules($c)")
-  }
-
-  /** Codegen callback. */
-  def rules(content: UTF8String): ArrayData =
-    RobotsRules.rulesArrayData(content, agent)
+  override protected def kernel = RobotsRules
+  override protected def method = "rulesArrayData"
+  override protected def constants = Seq(Literal(agent))
 
   override protected def withNewChildInternal(
       newChild: Expression): RobotsRulesExpr = copy(child = newChild)
@@ -315,7 +314,8 @@ case class RobotsRulesExpr(child: Expression, agent: String)
   * match (see [[RobotsRules.repMatches]]). Null in either → null.
   */
 case class RobotsMatchExpr(left: Expression, right: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
+  with StaticKernel {
 
   override def dataType: DataType = BooleanType
   override def prettyName: String = "robots_match"
@@ -327,15 +327,10 @@ case class RobotsMatchExpr(left: Expression, right: Expression)
         s"robots_match needs (string, string), got $other")
     }
 
-  override protected def nullSafeEval(path: Any, pattern: Any): Any =
-    RobotsRules.repMatches(path.asInstanceOf[UTF8String],
-      pattern.asInstanceOf[UTF8String])
-
-  // the UTF8String overload — allocation-free in the join-condition
-  // hot path (O(urls × rules) probes; ADVICE r20)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, t) =>
-      s"graft.functions.RobotsRules.repMatches($p, $t)")
+  // resolves to the UTF8String overload — allocation-free in the
+  // join-condition hot path (O(urls × rules) probes; ADVICE r20)
+  override protected def kernel = RobotsRules
+  override protected def method = "repMatches"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): RobotsMatchExpr =
@@ -348,7 +343,7 @@ case class RobotsMatchExpr(left: Expression, right: Expression)
   * group, or no delay line → null.
   */
 case class RobotsCrawlDelayExpr(child: Expression, agent: String)
-  extends UnaryExpression {
+  extends UnaryExpression with StaticKernel {
 
   require(agent.nonEmpty && agent == agent.toLowerCase &&
       !agent.contains(" "),
@@ -364,33 +359,10 @@ case class RobotsCrawlDelayExpr(child: Expression, agent: String)
       s"robots_crawl_delay needs string, got $other")
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    delayOrNull(input.asInstanceOf[UTF8String])
-
   override def nullable: Boolean = true
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("robotsCrawlDelay", this,
-      classOf[RobotsCrawlDelayExpr].getName)
-    // the callback returns a boxed Long or null (an absent delay is a
-    // DATA outcome, not a null input), so the generated code
-    // null-checks the box — nullSafeCodeGen only covers input nulls
-    nullSafeCodeGen(ctx, ev, c => {
-      val boxed = ctx.freshName("boxed")
-      s"""
-         |Object $boxed = $self.delayOrNull($c);
-         |if ($boxed == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((java.lang.Long) $boxed).longValue(); }
-       """.stripMargin
-    })
-  }
-
-  /** Codegen/eval callback: boxed Long or null. */
-  def delayOrNull(content: UTF8String): Any =
-    RobotsRules.crawlDelay(content.toString, agent) match {
-      case Some(d) => d
-      case None    => null
-    }
+  override protected def kernel = RobotsRules
+  override protected def method = "crawlDelayOrNull"
+  override protected def constants = Seq(Literal(agent))
 
   override protected def withNewChildInternal(
       newChild: Expression): RobotsCrawlDelayExpr = copy(child = newChild)

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -13,13 +10,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * h = fold(chars, 0, (h, c) => (h * 31 + c) mod (2^31 - 1))
   *
-  * Implemented as a Catalyst `UnaryExpression` WITH `doGenCode` — the
-  * hot loop stays inside whole-stage codegen as a static call, no UDF
-  * serialization, no boxing, null-safe. Iteration is over UTF-16 code
+  * Implemented as a [[StaticKernel]] — the hot loop stays inside
+  * whole-stage codegen as a static call, no UDF serialization, no
+  * boxing, null-safe. Iteration is over UTF-16 code
   * units, which equals code points for ASCII corpora (documented
   * contract, matching the oracle's per-char ascii() fold).
   */
-case class RollingHash(child: Expression) extends UnaryExpression {
+case class RollingHash(child: Expression) extends UnaryExpression
+    with StaticKernel {
 
   override def dataType: DataType = LongType
 
@@ -35,11 +33,8 @@ case class RollingHash(child: Expression) extends UnaryExpression {
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         s"rolling_hash needs a string argument, got ${child.dataType}")
 
-  override protected def nullSafeEval(input: Any): Any =
-    RollingHash.hash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.RollingHash.hash($c)")
+  override protected def kernel = RollingHash
+  override protected def method = "hash"
 
   override protected def withNewChildInternal(newChild: Expression): RollingHash =
     copy(child = newChild)
@@ -58,87 +53,5 @@ object RollingHash {
       i += 1
     }
     h
-  }
-
-  /** Idempotent session registration (the non-extensions path). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "built-in")
-}
-
-/** SparkSessionExtensions injector: enable with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` to get
-  * `rolling_hash` and the TopKPerKey planner strategy in every
-  * session, SQL included.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (exprs: Seq[Expression]) => RollingHash(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNGrams].getName, "word_ngrams"),
-      (exprs: Seq[Expression]) =>
-        WordNGrams(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      new FunctionIdentifier("gram_stats"),
-      new ExpressionInfo(classOf[GramStats].getName, "gram_stats"),
-      (exprs: Seq[Expression]) =>
-        GramStats(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      new FunctionIdentifier("gram_rep_stats"),
-      new ExpressionInfo(classOf[GramRepStats].getName, "gram_rep_stats"),
-      (exprs: Seq[Expression]) =>
-        GramRepStats(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      new FunctionIdentifier("hashed_count_vector"),
-      new ExpressionInfo(classOf[HashedCountVector].getName, "hashed_count_vector"),
-      (exprs: Seq[Expression]) =>
-        HashedCountVector(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => DotProduct(exprs.head, exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash16"),
-      new ExpressionInfo(classOf[SimHash16].getName, "simhash16"),
-      (exprs: Seq[Expression]) => SimHash16(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("weighted_min_key"),
-      new ExpressionInfo(classOf[WeightedMinKey].getName, "weighted_min_key"),
-      (exprs: Seq[Expression]) => WeightedMinKey.build(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("zorder_code"),
-      new ExpressionInfo(classOf[ZOrderCode].getName, "zorder_code"),
-      (exprs: Seq[Expression]) => ZOrderCode.build(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("quantized_dot"),
-      new ExpressionInfo(classOf[QuantizedDot].getName, "quantized_dot"),
-      (exprs: Seq[Expression]) => QuantizedDot(exprs.head, exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("hex_hash_array"),
-      new ExpressionInfo(classOf[HexHashArray].getName, "hex_hash_array"),
-      (exprs: Seq[Expression]) => HexHashArray(exprs.head,
-        exprs(1).eval().toString)))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_array"),
-      new ExpressionInfo(classOf[MinhashArray].getName, "minhash_array"),
-      (exprs: Seq[Expression]) => MinhashArray(exprs.head, exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      new FunctionIdentifier("token_window_hashes"),
-      new ExpressionInfo(classOf[TokenWindowHashes].getName,
-        "token_window_hashes"),
-      (exprs: Seq[Expression]) => TokenWindowHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((
-      new FunctionIdentifier("remove_token_spans"),
-      new ExpressionInfo(classOf[RemoveTokenSpans].getName,
-        "remove_token_spans"),
-      (exprs: Seq[Expression]) => RemoveTokenSpans(exprs.head, exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue())))
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSql}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -198,7 +197,7 @@ object Sitemap {
     out.toArray
   }
 
-  /** Codegen callback ([[SitemapEntries]]). */
+  /** The [[SitemapEntries]] kernel. */
   def entriesArrayData(xml: UTF8String): ArrayData =
     new GenericArrayData(entries(xml.toString).map { e =>
       new GenericInternalRow(Array[Any](
@@ -211,7 +210,8 @@ object Sitemap {
 /** `sitemap_entries(xml)` → array<struct<kind, loc, lastmod,
   * priority>> (see [[Sitemap.entries]]). Null xml → null.
   */
-case class SitemapEntries(child: Expression) extends UnaryExpression {
+case class SitemapEntries(child: Expression) extends UnaryExpression
+    with StaticKernel {
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("kind", StringType, nullable = false),
@@ -227,12 +227,8 @@ case class SitemapEntries(child: Expression) extends UnaryExpression {
       s"sitemap_entries needs string, got $other")
   }
 
-  override protected def nullSafeEval(input: Any): Any =
-    Sitemap.entriesArrayData(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.Sitemap.entriesArrayData($c)")
+  override protected def kernel = Sitemap
+  override protected def method = "entriesArrayData"
 
   override protected def withNewChildInternal(
       newChild: Expression): SitemapEntries = copy(child = newChild)

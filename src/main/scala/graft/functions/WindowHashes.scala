@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSql, SparkSession}
+import org.apache.spark.sql.{Column, GraftSql}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -164,7 +163,8 @@ object WindowHashOps {
 /** `token_window_hashes(text, k)` → array<long> of the k-token window
   * fingerprints in position order.
   */
-case class TokenWindowHashes(child: Expression, k: Int) extends UnaryExpression {
+case class TokenWindowHashes(child: Expression, k: Int) extends UnaryExpression
+    with StaticKernel {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "token_window_hashes"
   override def foldable: Boolean = child.foldable
@@ -177,12 +177,9 @@ case class TokenWindowHashes(child: Expression, k: Int) extends UnaryExpression 
       TypeCheckResult.TypeCheckFailure(s"$prettyName needs k >= 1, got $k")
     else TypeCheckResult.TypeCheckSuccess
 
-  override protected def nullSafeEval(input: Any): Any =
-    WindowHashOps.windowHashes(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.WindowHashOps.windowHashes($c, $k)")
+  override protected def kernel = WindowHashOps
+  override protected def method = "windowHashes"
+  override protected def constants = Seq(Literal(k))
 
   override protected def withNewChildInternal(newChild: Expression): TokenWindowHashes =
     copy(child = newChild)
@@ -193,7 +190,7 @@ case class TokenWindowHashes(child: Expression, k: Int) extends UnaryExpression 
   * [[WindowHashOps.removeSpans]] as one codegen'd expression.
   */
 case class RemoveTokenSpans(left: Expression, right: Expression, k: Int)
-  extends BinaryExpression {
+  extends BinaryExpression with StaticKernel {
 
   override def dataType: DataType = StructType(Seq(
     StructField("clean_text", StringType, nullable = false),
@@ -214,13 +211,9 @@ case class RemoveTokenSpans(left: Expression, right: Expression, k: Int)
           s"$prettyName needs (string, array<long>), got $other second")
     }
 
-  override protected def nullSafeEval(text: Any, starts: Any): Any =
-    WindowHashOps.removeSpans(
-      text.asInstanceOf[UTF8String], starts.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (t, s) => s"graft.functions.WindowHashOps.removeSpans($t, $s, $k)")
+  override protected def kernel = WindowHashOps
+  override protected def method = "removeSpans"
+  override protected def constants = Seq(Literal(k))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): RemoveTokenSpans =
@@ -236,21 +229,4 @@ object WindowHashFunctions {
   def removeTokenSpans(text: Column, starts: Column, k: Int): Column =
     GraftSql.column(RemoveTokenSpans(
       GraftSql.expression(text), GraftSql.expression(starts), k))
-
-  private def litInt(e: Expression): Int = e.eval() match {
-    case i: Int  => i
-    case l: Long => l.toInt
-    case other   => throw new IllegalArgumentException(
-      s"k must be a literal int, got $other")
-  }
-
-  /** Idempotent SQL registration. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_window_hashes",
-      exprs => TokenWindowHashes(exprs.head, litInt(exprs(1))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "remove_token_spans",
-      exprs => RemoveTokenSpans(exprs.head, exprs(1), litInt(exprs(2))), "built-in")
-  }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSql, SparkSession}
+import org.apache.spark.sql.{Column, GraftSql}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -41,7 +41,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   *    comprehension — see the q118 oracle).
   */
 case class ZOrderCode(left: Expression, right: Expression)
-  extends BinaryExpression
+  extends BinaryExpression with StaticKernel
   with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
 
   override def dataType: DataType = LongType
@@ -53,12 +53,8 @@ case class ZOrderCode(left: Expression, right: Expression)
   // ZOrderCode.zorder(col, ...) instead of failing analysis
   override def inputTypes = Seq(LongType, LongType)
 
-  override protected def nullSafeEval(x: Any, y: Any): Any =
-    ZOrderCode.interleave(x.asInstanceOf[Long], y.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (x, y) => s"graft.functions.ZOrderCode.interleave($x, $y)")
+  override protected def kernel = ZOrderCode
+  override protected def method = "interleave"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ZOrderCode =
@@ -76,6 +72,9 @@ case class ZOrderCode(left: Expression, right: Expression)
   * dominant keys. Same contract as 2-D: per-dimension range throw
   * (scale inputs with [[ZOrderCode.scaled]] — pass `bits = 62/k`),
   * null if any input is null, codes non-negative.
+  *
+  * Not a [[StaticKernel]]: its `doGenCode` fills a mutable scratch
+  * array held once per generated class.
   */
 case class ZOrderCodeN(children: Seq[Expression]) extends Expression
   with org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
@@ -217,23 +216,16 @@ object ZOrderCode {
   def zorder(cols: Column*): Column = {
     require(cols.size >= 2 && cols.size <= 8,
       s"zorder: 2-8 dimensions, got ${cols.size}")
-    val exprs = cols.map(c => GraftSql.expression(c.cast("long")))
-    GraftSql.column(
-      if (exprs.size == 2) ZOrderCode(exprs(0), exprs(1))
-      else ZOrderCodeN(exprs))
+    GraftSql.column(build(cols.map(c => GraftSql.expression(c.cast("long")))))
   }
 
-  /** Arity-dispatching builder shared by both registration paths: the
-    * binary magic-mask form at 2 args, the generic interleave at 3-8.
+  /** Arity-dispatching builder of the Column face and the SQL table:
+    * the binary magic-mask form at 2 args, the generic interleave at
+    * 3-8.
     */
   def build(exprs: Seq[Expression]): Expression =
     if (exprs.size == 2) ZOrderCode(exprs.head, exprs(1))
     else ZOrderCodeN(exprs)
-
-  /** Idempotent session registration (the non-extensions path). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zorder_code", build, "built-in")
 
   /** Rescale a bounded column into [0, 2^bits) — the normalization
     * step that makes two dimensions of DIFFERENT domain sizes

@@ -77,10 +77,4 @@ object Projections {
     ranked.join(seqDf, "__rank")
       .select((col(name) +: kept.map(col)): _*)
   }
-
-  /** P5 — standard text-transform projections used by the reference's
-    * file transforms (`plugins/example.py:43-63`). */
-  def upperCol(c: Column): Column = upper(c)
-  def lowerCol(c: Column): Column = lower(c)
-  def nonBlank(c: Column): Column = length(trim(c)) > 0
 }

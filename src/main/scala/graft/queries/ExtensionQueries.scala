@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.ext.{BoundedPairs, CentroidAggregator, Dedup, DupClusters, Multimodal, Pq, Quantize, Similarity, TextStats}
-import graft.functions.RollingHash
+import graft.functions.Kernels
 
 /** North-star ✚ queries: text analysis, dedup, similarity search over
   * `documents` / `embeddings` — each with a DuckDB oracle that replicates
@@ -1205,11 +1205,12 @@ object ExtensionQueries {
       |FROM j GROUP BY source ORDER BY source""".stripMargin
 
   /** ✚ native rolling-hash fingerprint: a custom Catalyst Expression
-    * with doGenCode (whole-stage codegen keeps the char loop inline),
-    * registered as `rolling_hash` — grouped into fingerprint buckets.
+    * (a static call inside whole-stage codegen keeps the char loop
+    * inline), registered as `rolling_hash` — grouped into fingerprint
+    * buckets.
     */
   def q41RollingFp(spark: SparkSession, dir: String): DataFrame = {
-    RollingHash.register(spark)
+    Kernels.register(spark)
     Tables(spark, dir, "documents")
       .withColumn("fp", expr("rolling_hash(text)"))
       .groupBy((col("fp") % 16).as("bucket"))

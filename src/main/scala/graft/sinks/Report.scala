@@ -84,8 +84,6 @@ object Report {
     def write(path: String, renderer: Renderer): Unit =
       java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
         renderer.render(build()))
-    /** The binary backend ([[DocxRenderer]] emits a zip, not text). */
-    def writeDocx(path: String): Unit = DocxRenderer.write(build(), path)
   }
 
   def builder(): Builder = new Builder

@@ -13,10 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Readers {
 
-  /** S3 — text lines (one row per line, `value` column). */
-  def textLines(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-
   /** S3 — whole files: (path, content) rows, for blob-level parsing
     * (the struct-text parser input shape).
     */

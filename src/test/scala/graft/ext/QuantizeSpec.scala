@@ -203,7 +203,7 @@ class QuantizeSpec extends SparkSpec {
   }
 
   test("quantized_dot is SQL-reachable after registration") {
-    graft.functions.QuantizedDot.register(spark)
+    graft.functions.Kernels.register(spark)
     val out = spark.sql(
       """SELECT quantized_dot(CAST(array(1, -2, 127) AS array<tinyint>),
         |                     CAST(array(3, 4, -127) AS array<tinyint>)) AS d"""

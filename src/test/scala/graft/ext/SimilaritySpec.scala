@@ -185,6 +185,23 @@ class SimilaritySpec extends SparkSpec {
       (lsh intersect brute).size.toDouble / brute.size should be > 0.3
   }
 
+  test("cosine compiles with several dot products over non-nullable arrays") {
+    // each dot_product call in one generated function needs its own
+    // locals; a clash fails compilation, which fallback=false surfaces
+    withConfs("spark.sql.codegen.fallback" -> "false") {
+      val got = spark.range(1, 5)
+        .select(array(col("id").cast("double"), lit(1.0)).as("a"),
+          array(lit(1.0), col("id").cast("double")).as("b"))
+        .select(Similarity.cosine(col("a"), col("b")),
+          Similarity.dot(col("a"), col("b")))
+        .collect().map(r => (r.getDouble(0), r.getDouble(1))).toSeq
+      got shouldBe (1 to 4).map { i =>
+        val norm = math.sqrt(i * i + 1.0)
+        (2.0 * i / (norm * norm), 2.0 * i)
+      }
+    }
+  }
+
   test("SRP-LSH plan has no cartesian product") {
     // lazy variant: the public entry checkpoints, truncating the plan
     val (pairs, caches, _) = Similarity.srpNearDupPairsLazy(emb, 0.9,

@@ -49,7 +49,7 @@ class DocVectorSpec extends SparkSpec {
   }
 
   test("SQL registration serves the same expression") {
-    DocVectorFunctions.register(spark)
+    Kernels.register(spark)
     Seq("a b a").toDF("t").createOrReplaceTempView("dv_t")
     val viaSql = spark.sql("SELECT hashed_count_vector(t, 8) FROM dv_t")
       .as[Seq[Double]].head()

@@ -75,7 +75,7 @@ class GramStatsSpec extends SparkSpec {
   }
 
   test("SQL registration works") {
-    GramFunctions.register(spark)
+    Kernels.register(spark)
     val r = docs.limit(1).createOrReplaceTempView("gdocs")
     val row = spark.sql(
       "SELECT word_ngrams(text, 2) AS g, gram_stats(text, 2).total_grams AS t FROM gdocs")

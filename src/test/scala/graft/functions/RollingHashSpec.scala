@@ -21,7 +21,7 @@ class RollingHashSpec extends SparkSpec {
   }
 
   test("expression works in a codegen'd plan and handles nulls") {
-    RollingHash.register(spark)
+    Kernels.register(spark)
     val df = Seq(Some("hello"), None, Some("world")).toDF("s")
       .withColumn("h", expr("rolling_hash(s)"))
     val rows = df.collect()
@@ -30,13 +30,13 @@ class RollingHashSpec extends SparkSpec {
   }
 
   test("non-string input is rejected at analysis") {
-    RollingHash.register(spark)
+    Kernels.register(spark)
     an[Exception] should be thrownBy
       Seq(1).toDF("i").selectExpr("rolling_hash(i)").collect()
   }
 
   test("literal input constant-folds at plan time") {
-    RollingHash.register(spark)
+    Kernels.register(spark)
     val df = spark.range(1).selectExpr("rolling_hash('abc') AS h")
     // after optimization the expression is gone — only a Literal remains
     df.queryExecution.optimizedPlan.toString should include("96354")
@@ -44,14 +44,22 @@ class RollingHashSpec extends SparkSpec {
     df.collect().head.getLong(0) shouldBe 96354L
   }
 
-  test("GraftExtensions injects the function") {
-    val ext = new GraftExtensions
-    // applying to the live session's extensions object is not exposed;
-    // validate the builder path compiles + the injected builder works.
-    val built = RollingHash(org.apache.spark.sql.catalyst.expressions.Literal(
-      UTF8String.fromString("abc"), org.apache.spark.sql.types.StringType))
-    built.eval(null) shouldBe 96354L
-    ext should not be null
+  test("GraftExtensions injects every table function") {
+    import org.apache.spark.sql.SparkSessionExtensions
+    import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, SimpleFunctionRegistry}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val registry = new SimpleFunctionRegistry
+    // registerFunctions is what session build runs; it is private[sql]
+    // in Scala and public in bytecode
+    ext.getClass.getMethod("registerFunctions", classOf[FunctionRegistry])
+      .invoke(ext, registry)
+    registry.listFunction().map(_.funcName).toSet shouldBe
+      Kernels.table.map(_._1).toSet
+    registry.lookupFunction(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("rolling_hash"),
+      Seq(Literal("abc"))).eval(null) shouldBe 96354L
   }
 
   test("weighted_min_key builder rejects bad arity / non-literal salt cleanly") {

@@ -57,7 +57,7 @@ class ZOrderCodeSpec extends SparkSpec {
   }
 
   test("expression evaluates in a codegen'd plan; null propagates") {
-    ZOrderCode.register(spark)
+    Kernels.register(spark)
     val df = Seq((Some(3L), Some(5L)), (None, Some(1L)), (Some(7L), None))
       .toDF("x", "y")
       .withColumn("z", expr("zorder_code(x, y)"))
@@ -72,7 +72,7 @@ class ZOrderCodeSpec extends SparkSpec {
       .select(ZOrderCode.zorder(lit(12345), lit(678)).as("z"))
       .head().getLong(0)
     viaInt shouldBe refInterleave(12345, 678)
-    ZOrderCode.register(spark)
+    Kernels.register(spark)
     val df = spark.range(1).selectExpr("zorder_code(3L, 5L) AS z")
     df.queryExecution.optimizedPlan.toString should not include "zorder_code"
     df.collect().head.getLong(0) shouldBe refInterleave(3, 5)
@@ -135,7 +135,7 @@ class ZOrderCodeSpec extends SparkSpec {
   }
 
   test("N-ary expression: codegen'd plan, null propagation, SQL arity") {
-    ZOrderCode.register(spark)
+    Kernels.register(spark)
     val df = Seq((Some(3L), Some(5L), Some(9L)), (Some(1L), None, Some(2L)))
       .toDF("x", "y", "w")
       .withColumn("z3", expr("zorder_code(x, y, w)"))
