@@ -1,7 +1,10 @@
 #!/bin/bash
-# Run a graft main class directly on the compiled classes + Spark jars.
+# Run a graft main class directly on the compiled classes of the checkout
+# this script lives in, plus the Spark jars under $SPARK_HOME.
 CLS=$1; shift
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+JARS="${SPARK_HOME:?set SPARK_HOME to the Spark install}/jars"
+CP="$ROOT/target/scala-2.13/classes:$(ls "$JARS"/*.jar | tr '\n' ':')"
 exec java \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \

@@ -18,31 +18,25 @@ import IndexFiles.Meta
   * `buckets.parquet` is append-only delta rows summed by readers, so
   * an append is O(batch): the skew guard's union bucket totals come
   * from stored counts plus the batch's counts, never from re-counting
-  * corpus rows. The two indexes differ only in values — the bucket
-  * column, the meta fields (their [[IndexFiles.Kind]]), and the frame
-  * and pair functions — so every lifecycle operation lives here once.
+  * corpus rows. The two indexes differ only in values — the meta
+  * fields (their [[IndexFiles.Kind]]), the frames function and the
+  * family's [[LshIncremental.Banding]] (bucket column, verify payload,
+  * score) — so every lifecycle operation lives here once, and every
+  * pair read runs the one [[LshIncremental]] pair plan.
   */
-private[ext] abstract class BandedIndex(val kind: IndexFiles.Kind,
-                                        bucketCol: String) {
+private[ext] abstract class BandedIndex(val kind: IndexFiles.Kind) {
 
   /** (base, banded) of `df`'s `srcCol` under the meta's params, both
     * cached; the caller unpersists them.
     */
   def frames(df: DataFrame, srcCol: String, meta: Meta): (DataFrame, DataFrame)
 
-  /** The base column the verify stage reads (persisted with `id`). */
-  def payload(meta: Meta): String
-
-  /** Verified pairs of an already-banded batch against `corpus`: the
-    * lazy pair frame, the caches to drop once it is materialized, and
-    * the cap census.
+  /** The family value under the meta's params; base persists `id` and
+    * its payload column.
     */
-  def pairs(corpus: BandedIndex.Frames, base: DataFrame, banded: DataFrame,
-            threshold: Double, maxBucketSize: Int)
-      : (DataFrame, Seq[DataFrame], LshSkew.CapCensus)
+  def banding(meta: Meta): LshIncremental.Banding
 
   private val FrameDirs = Seq("base.parquet", "banded.parquet", "buckets.parquet")
-  private val Keys = Seq("band_idx", bucketCol)
 
   /** Append-write sizing: ~4 M banded rows (~100-200 MB parquet) per
     * file — micro-batches fold in as one file per frame, bulk appends
@@ -50,13 +44,13 @@ private[ext] abstract class BandedIndex(val kind: IndexFiles.Kind,
     */
   private val RowsPerAppendFile = 4000000L
 
-  private def counts(banded: DataFrame): DataFrame =
-    banded.groupBy(Keys.map(col): _*).agg(count(lit(1)).as("bucket_n"))
+  private def counts(banded: DataFrame, meta: Meta): DataFrame =
+    banded.groupBy(banding(meta).keys.map(col): _*).agg(count(lit(1)).as("bucket_n"))
 
   /** Delta rows summed to one row per live bucket. */
-  private def aggregated(spark: SparkSession, path: String): DataFrame =
+  private def aggregated(spark: SparkSession, path: String, meta: Meta): DataFrame =
     spark.read.parquet(s"$path/buckets.parquet")
-      .groupBy(Keys.map(col): _*)
+      .groupBy(banding(meta).keys.map(col): _*)
       .agg(sum(col("bucket_n")).as("bucket_n"))
       .filter(col("bucket_n") > 0)
 
@@ -69,10 +63,10 @@ private[ext] abstract class BandedIndex(val kind: IndexFiles.Kind,
     val (base, banded) = frames(df, srcCol, meta)
     try IndexFiles.withWriterLease(spark, path, s"${kind.name}.build") {
       IndexFiles.reset(spark, kind, path, FrameDirs.map(f => s"$f.tmp"))
-      base.select(col("id"), col(payload(meta)))
+      base.select(col("id"), col(banding(meta).payload))
         .write.mode(SaveMode.Overwrite).parquet(s"$path/base.parquet")
       banded.write.mode(SaveMode.Overwrite).parquet(s"$path/banded.parquet")
-      counts(banded).write.mode(SaveMode.Overwrite).parquet(s"$path/buckets.parquet")
+      counts(banded, meta).write.mode(SaveMode.Overwrite).parquet(s"$path/buckets.parquet")
       IndexFiles.publish(spark, kind, path, meta)
     } finally {
       base.unpersist()
@@ -99,18 +93,19 @@ private[ext] abstract class BandedIndex(val kind: IndexFiles.Kind,
   def remove(spark: SparkSession, path: String, ids: DataFrame,
              maxBucketSize: Int): LshSkew.RemovalReport =
     IndexFiles.transaction(spark, kind, path, s"${kind.name}.remove") { meta =>
+      val keys = banding(meta).keys
       // the deltas AND the tombstone write read it
       val fresh = IndexFiles.freshTombstones(spark, path, ids).localCheckpoint(true)
       try {
         val deltas = spark.read.parquet(s"$path/banded.parquet")
           .join(broadcast(fresh), Seq("id"), "left_semi")
-          .groupBy(Keys.map(col): _*)
+          .groupBy(keys.map(col): _*)
           .agg((-count(lit(1))).as("bucket_n"))
           .localCheckpoint(true) // the report AND the counts write read it
         try {
           // the un-cap report reads CURRENT totals — before the append
           val uncapped = LshSkew.uncapCensus(
-            spark.read.parquet(s"$path/buckets.parquet"), deltas, Keys,
+            spark.read.parquet(s"$path/buckets.parquet"), deltas, keys,
             maxBucketSize, deltas.count())
           // the version stamps WITH the layout: a pre-tombstone build
           // must refuse this index, not serve the removed rows
@@ -132,21 +127,27 @@ private[ext] abstract class BandedIndex(val kind: IndexFiles.Kind,
                        srcCol: String, threshold: Double,
                        maxBucketSize: Int): (DataFrame, LshSkew.CapCensus) = {
     val (base, banded) = frames(newDf, srcCol, corpus.meta)
-    try materialized(corpus, base, banded, threshold, maxBucketSize)
+    try batchPairs(corpus, base, banded, threshold, maxBucketSize)
     finally {
       base.unpersist()
       banded.unpersist()
     }
   }
 
-  private def materialized(corpus: BandedIndex.Frames, base: DataFrame,
-                           banded: DataFrame, threshold: Double,
-                           maxBucketSize: Int): (DataFrame, LshSkew.CapCensus) = {
-    val (lazyPairs, caches, census) =
-      pairs(corpus, base, banded, threshold, maxBucketSize)
-    try (lazyPairs.localCheckpoint(true), census)
-    finally caches.foreach(_.unpersist())
-  }
+  private def batchPairs(corpus: BandedIndex.Frames, base: DataFrame,
+                         banded: DataFrame, threshold: Double,
+                         maxBucketSize: Int): (DataFrame, LshSkew.CapCensus) =
+    LshIncremental.materialized(LshIncremental.batchPairs(banding(corpus.meta),
+      corpus.base, corpus.banded, corpus.buckets, base, banded, threshold,
+      maxBucketSize))
+
+  /** Verified pairs WITHIN a subset of the index's ids, materialized
+    * ([[LshIncremental.pairsAmong]]).
+    */
+  def pairsAmong(corpus: BandedIndex.Frames, ids: DataFrame, threshold: Double,
+                 maxBucketSize: Int): (DataFrame, LshSkew.CapCensus) =
+    LshIncremental.materialized(LshIncremental.pairsAmong(banding(corpus.meta),
+      corpus.base, corpus.banded, corpus.buckets, ids, threshold, maxBucketSize))
 
   /** Load the index if its meta matches `want` exactly, else `build`
     * then load (a param mismatch or an incomplete index is a rebuild;
@@ -204,11 +205,11 @@ private[ext] abstract class BandedIndex(val kind: IndexFiles.Kind,
           s"this append was banding its batch (banded with $meta, index " +
           s"now $fresh) — re-run the append against the current index")
       IndexFiles.commit(spark, kind, path, fresh, marker) {
-        base.select(col("id"), col(payload(meta))).coalesce(parts)
+        base.select(col("id"), col(banding(meta).payload)).coalesce(parts)
           .write.mode(SaveMode.Append).parquet(s"$path/base.parquet")
         banded.coalesce(parts)
           .write.mode(SaveMode.Append).parquet(s"$path/banded.parquet")
-        counts(banded).coalesce(parts)
+        counts(banded, meta).coalesce(parts)
           .write.mode(SaveMode.Append).parquet(s"$path/buckets.parquet")
       }
     }
@@ -231,7 +232,7 @@ private[ext] abstract class BandedIndex(val kind: IndexFiles.Kind,
       // bucket totals are already post-removal
       val (bFiles, _, bRows, bBytes) =
         graft.ops.Compaction.census(spark, s"$path/buckets.parquet")
-      aggregated(spark, path).coalesce(IndexFiles.fileCount(bBytes, targetFileBytes))
+      aggregated(spark, path, meta).coalesce(IndexFiles.fileCount(bBytes, targetFileBytes))
         .write.mode(SaveMode.Overwrite).parquet(s"$path/buckets.parquet.tmp")
       val (bFilesAfter, _, bRowsAfter, _) =
         graft.ops.Compaction.census(spark, s"$path/buckets.parquet.tmp")
@@ -248,7 +249,7 @@ private[ext] abstract class BandedIndex(val kind: IndexFiles.Kind,
   def compactBuckets(spark: SparkSession, path: String): Unit =
     IndexFiles.transaction(spark, kind, path, s"${kind.name}.compactBuckets") { meta =>
       IndexFiles.clear(spark, path, Seq("buckets.parquet.tmp"))
-      aggregated(spark, path)
+      aggregated(spark, path, meta)
         .write.mode(SaveMode.Overwrite).parquet(s"$path/buckets.parquet.tmp")
       IndexFiles.swap(spark, kind, path,
         Seq("buckets.parquet.tmp" -> "buckets.parquet"), Nil, meta)
@@ -277,11 +278,12 @@ private[ext] abstract class BandedIndex(val kind: IndexFiles.Kind,
           if (writer.isDefined) index
           else {
             val (b, bd, bk) = LshIncremental.subtractBatch(
-              index.base, index.banded, index.buckets, bBase, Keys)
+              index.base, index.banded, index.buckets, bBase,
+              banding(index.meta).keys)
             index.copy(base = b, banded = bd, buckets = bk)
           }
         val (out, census) =
-          materialized(corpus, bBase, bBanded, threshold, maxBucketSize)
+          batchPairs(corpus, bBase, bBanded, threshold, maxBucketSize)
         onCensus(census, batchId)
         onPairs(out, batchId)
         if (appendBatches)

@@ -174,30 +174,15 @@ object Dedup {
       shingleWidth: Int = 1, numHashes: Int = 24,
       numBands: Int = 3, threshold: Double = 0.9,
       maxBucketSize: Int = LshSkew.DefaultMaxBucketSize,
-      verifyOn: VerifyOn = VerifyOn.HashSets): (DataFrame, LshSkew.CapCensus) = {
-    val (pairs, caches, census) = lshNearDupPairsLazy(df, textCol, idCol,
-      shingleWidth, numHashes, numBands, threshold, maxBucketSize, verifyOn)
-    // Materialize eagerly so the intermediate caches can be released
-    // immediately — long-lived sessions otherwise accumulate signature
-    // frames until eviction pressure degrades the executor cache. The
-    // checkpointed pair list is tiny relative to the shingle frames.
-    // unpersist in finally: a failed/cancelled materialization must
-    // not leave the caches pinned.
-    try (pairs.localCheckpoint(true), census)
-    finally caches.foreach(_.unpersist())
-  }
+      verifyOn: VerifyOn = VerifyOn.HashSets): (DataFrame, LshSkew.CapCensus) =
+    LshIncremental.materialized(lshNearDupPairsLazy(df, textCol, idCol,
+      shingleWidth, numHashes, numBands, threshold, maxBucketSize, verifyOn))
 
-  /** Lazy variant of [[lshNearDupPairs]]: returns the un-materialized
-    * pair plan, the persisted intermediates the caller must
-    * unpersist after its action, and the skew-guard census. Exists so
-    * tests can assert plan shape (no cartesian product) before
-    * checkpointing truncates lineage.
-    */
   /** The shared signature half of the LSH pipeline: (base, banded)
     * where base = (id, shingles, two-md5 battery) and banded =
     * (id, band_idx, band_hash) posexploded — both persisted. Factored
-    * out so every banded consumer (the fused and staged pair paths,
-    * the incremental index, and the 8 M-doc bucket census in
+    * out so every banded consumer (the full pair path, the
+    * incremental index, and the 8 M-doc bucket census in
     * BASELINE.md §"Corpus-scale cap census") sees the SAME banded
     * frame, by construction rather than by copy. Callers own the
     * unpersist of both frames.
@@ -246,242 +231,28 @@ object Dedup {
     (base, banded)
   }
 
-  /** [[lshNearDupPairsWithStats]] with STAGED pair generation: the
-    * band-bucket self-join runs band-at-a-time — `numBands` sequential
-    * smaller self-joins, each over ≤ 1/numBands of the banded rows,
-    * each materialized (id pairs only) before the next starts — instead
-    * of one fused join over all bands at once.
-    *
-    * Identical output by construction: a candidate pair meets in band b
-    * iff it meets in band b of the fused join (the join key includes
-    * `band_idx`, so the fused plan never pairs across bands either);
-    * per-band distinct + a cross-band dropDuplicates reproduce the
-    * fused plan's global dedup, and the verify join runs once over the
-    * unioned candidates.
-    *
-    * When to use — narrower than it sounds (measured, BASELINE.md
-    * §"Staged band processing (round 12)"): on a healthy CAPPED corpus
-    * the candidate self-join staging splits is only ~20% of the pair
-    * stage's shuffle bytes — the pair dedup and shingle-verify joins
-    * (which need every band's candidates together) carry the rest and
-    * all of the memory spill, so staging there is wall-neutral but
-    * pays +7% shuffle write and +2.6 GB spill for nothing; the FUSED
-    * path is the right default. Staging earns its keep only where the
-    * candidate join IS the dominant term: degenerate/[[LshSkew.NoCap]]
-    * corpora with giant buckets, where capping in-flight volume at the
-    * largest single band (~1/numBands) genuinely bounds peak footprint.
+  /** Lazy variant of [[lshNearDupPairs]]: returns the un-materialized
+    * pair plan, the persisted intermediates the caller must
+    * unpersist after its action, and the skew-guard census. Exists so
+    * tests can assert plan shape (no cartesian product) before
+    * checkpointing truncates lineage.
     */
-  def lshNearDupPairsStagedWithStats(
-      df: DataFrame, textCol: String, idCol: String,
-      shingleWidth: Int = 1, numHashes: Int = 24,
-      numBands: Int = 3, threshold: Double = 0.9,
-      maxBucketSize: Int = LshSkew.DefaultMaxBucketSize,
-      verifyOn: VerifyOn = VerifyOn.HashSets): (DataFrame, LshSkew.CapCensus) = {
-    val (base, banded) = bandedFrame(df, textCol, idCol,
-      shingleWidth, numHashes, numBands, verifyOn)
-    val perBand = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      var census = LshSkew.CapCensus.none(maxBucketSize)
-      (0 until numBands).foreach { bandIdx =>
-        val band = banded.filter(col("band_idx") === bandIdx)
-        // per-band capping ≡ global capping: buckets are keyed by
-        // (band_idx, band_hash), so no bucket spans bands and the
-        // censuses sum exactly
-        val (capped, guardCaches, bandCensus) = LshSkew.capBuckets(band,
-          Seq("band_idx", "band_hash"), maxBucketSize,
-          s"lshNearDupPairsStaged band $bandIdx")
-        census = LshSkew.CapCensus(
-          census.droppedBuckets + bandCensus.droppedBuckets,
-          census.droppedRows + bandCensus.droppedRows, maxBucketSize)
-        // unpersist the band's guard caches in a finally — if the
-        // join/count below throws, an in-flight band must not leak its
-        // skew-guard frames into the executor cache for the session's
-        // lifetime (the outer finally covers perBand/base/banded only)
-        try {
-          val a = capped.select(col("band_hash"), col("id").as("id_a"))
-          val b = capped.select(col("band_hash"), col("id").as("id_b"))
-          // persist(DISK_ONLY) + count: the BARRIER that keeps band i's
-          // join out of flight while band i+1 runs. DISK_ONLY on purpose
-          // — this mode exists to RELIEVE memory pressure, and parking
-          // each band's candidate list in the block-manager heap
-          // (localCheckpoint's MEMORY_AND_DISK) was measured to OOM an
-          // 8 g probe JVM at 8 M docs where the fused path survives; the
-          // lists are read back exactly once by the verify join below.
-          val pairs = a.join(b, "band_hash")
-            .filter(col("id_a") < col("id_b"))
-            .select(col("id_a"), col("id_b"))
-            .dropDuplicates("id_a", "id_b")
-            .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-          perBand += pairs
-          pairs.count() // materialize: band i completes before i+1 starts
-        } finally guardCaches.foreach(_.unpersist())
-      }
-      val candidates = perBand.reduce(_ union _)
-        .dropDuplicates("id_a", "id_b")
-      val verified =
-        verifyPairs(candidates, base, threshold, verifyOn).localCheckpoint(true)
-      (verified, census)
-    } finally {
-      perBand.foreach(_.unpersist())
-      base.unpersist()
-      banded.unpersist()
-    }
-  }
-
   private[graft] def lshNearDupPairsLazy(
       df: DataFrame, textCol: String, idCol: String,
       shingleWidth: Int, numHashes: Int,
       numBands: Int, threshold: Double,
       maxBucketSize: Int = LshSkew.DefaultMaxBucketSize,
-      verifyOn: VerifyOn = VerifyOn.HashSets): (DataFrame, Seq[DataFrame], LshSkew.CapCensus) = {
-    val (base, banded) = bandedFrame(df, textCol, idCol,
-      shingleWidth, numHashes, numBands, verifyOn)
-    val (capped, guardCaches, census) = LshSkew.capBuckets(banded,
-      Seq("band_idx", "band_hash"), maxBucketSize, "lshNearDupPairs")
-    val a = capped.select(col("band_idx"), col("band_hash"), col("id").as("id_a"))
-    val b = capped.select(col("band_idx"), col("band_hash"), col("id").as("id_b"))
-    val candidates = a.join(b, Seq("band_idx", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    (verifyPairs(candidates, base, threshold, verifyOn),
-      Seq(base, banded) ++ guardCaches, census)
-  }
+      verifyOn: VerifyOn = VerifyOn.HashSets): LshIncremental.Plan =
+    LshIncremental.selfJoin(banding(verifyOn), bandedFrame(df, textCol, idCol,
+      shingleWidth, numHashes, numBands, verifyOn), threshold, maxBucketSize)
 
-  /** Incremental near-dup: pairs involving at least one document of a
-    * NEW batch, computed against a prebuilt corpus index — the frames
-    * [[LshIndex]] persists (verify base, banded rows, per-bucket
-    * counts). Returns exactly the pairs [[lshNearDupPairs]] over
-    * corpus ∪ batch (same params/cap) would return RESTRICTED to pairs
-    * with ≥ 1 batch id — proven by construction: a full-run pair
-    * (x, y) survives iff x, y share a capped (band, hash) bucket of
-    * the union, and every union bucket containing a batch row is
-    * reproduced here from the stored counts + the batch's rows.
-    *
-    * The 100 TB shape — this is the path that makes corpus-growth
-    * dedup O(batch), not O(corpus²) or even O(corpus shuffle):
-    *  - capping uses the STORED per-bucket counts, so union totals
-    *    need counts only for buckets the batch touches (a bucket with
-    *    no batch row cannot produce a batch pair, dropped or not) —
-    *    one map-side semi-filtered scan of the counts frame, no
-    *    corpus-side shuffle;
-    *  - the candidate join streams the corpus banded frame once
-    *    against the batch side (EXPLICIT size-guarded broadcast hint —
-    *    plan-pinned in LshIndexSpec);
-    *  - the verify joins pull payloads for matched pair ids only, with
-    *    AQE broadcasting the (typically small) candidate side at
-    *    runtime. This is the one corpus-frame consumer that CAN
-    *    shuffle: a candidate set past the broadcast threshold
-    *    (quadratic in bucket overlap) falls back to a sort-merge join
-    *    over the base payload — un-hinted on purpose, because forcing
-    *    a broadcast of an unbounded candidate set is the worse failure.
-    * No corpus text is re-shingled, and the banded/counts frames are
-    * consumed strictly map-side; the corpus-side cost is the three
-    * frame scans plus, only in the oversized-candidate regime, the
-    * verify join's base shuffle.
-    *
-    * The returned census covers the buckets the BATCH touches (the
-    * only ones that can affect this batch's pairs); corpus-only
-    * degenerate buckets were already visible in the build-time run.
-    *
-    * Caller contract (documented on [[LshIndex]]): ids unique across
-    * corpus and batch, and the batch shingled with the index's params
-    * (enforced by [[LshIndex.incrementalPairs]] reading them from the
-    * index meta).
-    *
-    * Lazy: returns the un-materialized pair plan, the persisted
-    * batch-side intermediates the caller must unpersist after its
-    * action, and the census — so tests can pin the plan SHAPE (the
-    * batch-side broadcasts and the shuffle-free corpus scans are the
-    * operator's whole scale argument, and a drift there should fail a
-    * spec, not a 100 TB run). The persisted index serves the same plan
-    * through [[BandedIndex.incrementalPairs]].
+  /** The MinHash family's [[LshIncremental.Banding]]: band-hash buckets,
+    * the [[VerifyOn]]-selected payload — shingle strings (exact) or
+    * their 52-bit hash sets (same set algebra over 8-byte elements) —
+    * and exact [[jaccard]]. The full pair path, [[LshIndex]]'s
+    * incremental and subset paths, and its streaming fold-in all run
+    * through the one pair plan with this value.
     */
-  private[graft] def lshNearDupPairsIncrementalLazy(
-      corpusBase: DataFrame, corpusBanded: DataFrame, corpusBuckets: DataFrame,
-      newDf: DataFrame, textCol: String, idCol: String,
-      shingleWidth: Int, numHashes: Int, numBands: Int,
-      threshold: Double, maxBucketSize: Int,
-      verifyOn: VerifyOn): (DataFrame, Seq[DataFrame], LshSkew.CapCensus) = {
-    val (newBase, newBanded) = bandedFrame(newDf, textCol, idCol,
-      shingleWidth, numHashes, numBands, verifyOn)
-    val (pairs, caches, census) = lshNearDupPairsIncrementalFromFrames(
-      corpusBase, corpusBanded, corpusBuckets, newBase, newBanded,
-      threshold, maxBucketSize, verifyOn)
-    (pairs, Seq(newBase, newBanded) ++ caches, census)
-  }
-
-  /** The incremental pair plan over ALREADY-banded batch frames (the
-    * [[bandedFrame]] output, persisted, owned by the caller — the
-    * streaming fold-in bands each micro-batch exactly once and feeds
-    * the same frames to BOTH the pair run and the index append).
-    * Returned caches are this function's internal intermediates only.
-    */
-  private[graft] def lshNearDupPairsIncrementalFromFrames(
-      corpusBase: DataFrame, corpusBanded: DataFrame, corpusBuckets: DataFrame,
-      newBase: DataFrame, newBanded: DataFrame,
-      threshold: Double, maxBucketSize: Int,
-      verifyOn: VerifyOn): (DataFrame, Seq[DataFrame], LshSkew.CapCensus) = {
-    // candidate generation + union-bucket capping live in the shared
-    // key-generic [[LshIncremental.candidates]] (one definition with
-    // the SRP embedding path) — see its scaladoc for the per-stage
-    // scale argument (stored-counts capping, size-guarded batch-side
-    // broadcast, corpus frames consumed map-side)
-    val (candidates, caches, census) = LshIncremental.candidates(
-      corpusBanded, corpusBuckets, newBanded,
-      Seq("band_idx", "band_hash"), maxBucketSize)
-    val payload = payloadColumn(verifyOn)
-    val unionBase = corpusBase.select(col("id"), col(payload))
-      .unionByName(newBase.select(col("id"), col(payload)))
-    // the verify joins stay UN-hinted on purpose: the candidate set's
-    // size is runtime-data-dependent (quadratic in bucket overlap), so
-    // AQE's runtime decision is the safe broadcaster there
-    (verifyPairs(candidates, unionBase, threshold, verifyOn),
-      caches.toSeq, census)
-  }
-
-  /** Verified near-dup pairs WITHIN a subset of already-indexed ids,
-    * served purely from the persisted index frames (no text, no
-    * re-shingling — the payload column carries the verify sets). The
-    * candidate plan is [[LshIncremental.candidatesAmong]] (see its
-    * scaladoc for the exactness and map-side scale arguments); the
-    * verify stage is the ONE shared [[verifyPairs]] definition, its
-    * joins un-hinted for the same AQE reason as the incremental path.
-    * Output equals the full [[lshNearDupPairs]] over the corpus the
-    * frames describe, restricted to subset×subset pairs (same
-    * threshold and cap).
-    */
-  private[graft] def lshNearDupPairsAmongFrames(
-      corpusBase: DataFrame, corpusBanded: DataFrame, corpusBuckets: DataFrame,
-      ids: DataFrame, threshold: Double, maxBucketSize: Int,
-      verifyOn: VerifyOn): (DataFrame, LshSkew.CapCensus) = {
-    val (candidates, caches, census) = LshIncremental.candidatesAmong(
-      corpusBanded, corpusBuckets, ids,
-      Seq("band_idx", "band_hash"), maxBucketSize)
-    val pairs =
-      try verifyPairs(candidates, corpusBase, threshold, verifyOn)
-        .localCheckpoint(true)
-      finally caches.foreach(_.unpersist())
-    (pairs, census)
-  }
-
-  /** Rejoin-and-verify shared by the fused and staged pair paths — ONE
-    * definition, so the staged path's identical-output contract is
-    * structural rather than copy-kept. The verify payload column is
-    * [[VerifyOn]]-selected: shingle strings (exact) or their 52-bit
-    * hash sets (same set algebra over 8-byte elements); either way the
-    * arrays attach AFTER pair dedup, so only the two verify joins —
-    * never the band explode or the candidate self-join — carry them.
-    */
-  private def verifyPairs(candidates: DataFrame, base: DataFrame,
-                          threshold: Double,
-                          verifyOn: VerifyOn = VerifyOn.HashSets): DataFrame = {
-    val payload = payloadColumn(verifyOn)
-    candidates
-      .join(base.select(col("id").as("id_a"), col(payload).as("sh_a")), "id_a")
-      .join(base.select(col("id").as("id_b"), col(payload).as("sh_b")), "id_b")
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
+  private[graft] def banding(verifyOn: VerifyOn): LshIncremental.Banding =
+    LshIncremental.Banding("band_hash", payloadColumn(verifyOn), "jaccard", jaccard)
 }

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Persisted MinHash-LSH corpus index — the "shingle once, dedup every
   * batch" production shape behind [[Dedup.lshNearDupPairs]]: at corpus
@@ -11,9 +10,9 @@ import org.apache.spark.sql.functions._
   * [[incrementalPairs]] against them — O(batch) work plus three
   * map-side corpus-frame scans, no corpus re-shingling, no corpus-side
   * shuffle, no corpus×corpus pair regeneration (see
-  * [[Dedup.lshNearDupPairsIncrementalLazy]] for the per-stage
-  * argument). [[append]] then folds the deduped batch into the index so
-  * the next batch sees it as corpus.
+  * [[LshIncremental]] for the per-stage argument). [[append]] then
+  * folds the deduped batch into the index so the next batch sees it
+  * as corpus.
   *
   * Same compute-once-reload contract as the S8 parquet cache
   * (`processors/_impl/plotting_impl.py:126-147`,
@@ -75,16 +74,12 @@ object LshIndex {
       s"no LSH index at $dir: missing/incomplete (no _lsh_meta.json)"
   }
 
-  private val Impl = new BandedIndex(Kind, "band_hash") {
+  private val Impl = new BandedIndex(Kind) {
     def frames(df: DataFrame, textCol: String, m: IndexFiles.Meta) =
       Dedup.bandedFrame(df, textCol, m.str("idCol"), m.int("shingleWidth"),
         m.int("numHashes"), m.int("numBands"), payloadVerifyOn(m.str("payload")))
-    def payload(m: IndexFiles.Meta): String = m.str("payload")
-    def pairs(corpus: BandedIndex.Frames, base: DataFrame, banded: DataFrame,
-              threshold: Double, maxBucketSize: Int) =
-      Dedup.lshNearDupPairsIncrementalFromFrames(corpus.base, corpus.banded,
-        corpus.buckets, base, banded, threshold, maxBucketSize,
-        payloadVerifyOn(corpus.meta.str("payload")))
+    def banding(m: IndexFiles.Meta) =
+      Dedup.banding(payloadVerifyOn(m.str("payload")))
   }
 
   private def meta(idCol: String, shingleWidth: Int, numHashes: Int,
@@ -95,6 +90,10 @@ object LshIndex {
   private def index(f: BandedIndex.Frames): Index = Index(f.base, f.banded,
     f.buckets, f.meta.str("idCol"), f.meta.int("shingleWidth"), f.meta.int("numHashes"),
     f.meta.int("numBands"), payloadVerifyOn(f.meta.str("payload")))
+
+  private def frames(i: Index): BandedIndex.Frames = BandedIndex.Frames(
+    meta(i.idCol, i.shingleWidth, i.numHashes, i.numBands, i.verifyOn),
+    i.base, i.banded, i.buckets)
 
   // forward mapping is THE shared one (Dedup.payloadColumn) so the
   // persisted base column can never drift from what the verify stage
@@ -226,10 +225,7 @@ object LshIndex {
                        threshold: Double = 0.9,
                        maxBucketSize: Int = LshSkew.DefaultMaxBucketSize)
       : (DataFrame, LshSkew.CapCensus) =
-    Impl.incrementalPairs(BandedIndex.Frames(meta(index.idCol,
-        index.shingleWidth, index.numHashes, index.numBands, index.verifyOn),
-        index.base, index.banded, index.buckets),
-      newDf, textCol, threshold, maxBucketSize)
+    Impl.incrementalPairs(frames(index), newDf, textCol, threshold, maxBucketSize)
 
   /** Verified near-dup pairs WITHIN a subset of already-indexed ids,
     * served purely from the index frames — no text, no re-shingling
@@ -244,7 +240,7 @@ object LshIndex {
     * [[DupClusters.removeFromLabeling]]: after a takedown, the
     * touched components' surviving members are re-paired through this
     * — O(subset) with the corpus frames scanned once map-side
-    * ([[LshIncremental.candidatesAmong]]).
+    * ([[LshIncremental.pairsAmong]]).
     *
     * `ids`: any frame whose FIRST column is the document id.
     */
@@ -252,10 +248,7 @@ object LshIndex {
                  threshold: Double = 0.9,
                  maxBucketSize: Int = LshSkew.DefaultMaxBucketSize)
       : (DataFrame, LshSkew.CapCensus) =
-    Dedup.lshNearDupPairsAmongFrames(
-      index.base, index.banded, index.buckets,
-      ids.select(col(ids.columns.head).as("id")).distinct(),
-      threshold, maxBucketSize, index.verifyOn)
+    Impl.pairsAmong(frames(index), ids, threshold, maxBucketSize)
 
   /** Fold a batch into the index: append its base/banded rows and its
     * bucket-count DELTAS, under the same banding params (read from the

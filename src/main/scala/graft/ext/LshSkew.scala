@@ -216,30 +216,41 @@ object LshSkew {
         .agg(count(lit(1)).as("bucket_n"))
         .filter(col("bucket_n") > maxBucketSize)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // one aggregate over the (tiny, cached) guard frame doubles as
-      // its materializing action AND the census the caller gets back
-      val censusRow = oversized
-        .agg(count(lit(1)), coalesce(sum(col("bucket_n")), lit(0L))).head()
-      val census =
-        CapCensus(censusRow.getLong(0), censusRow.getLong(1), maxBucketSize)
-      if (!census.anyDropped) {
+      overCap(oversized, "bucket_n", keyCols, maxBucketSize) match {
         // nothing over the cap (the common healthy-corpus case — the
-        // measured 8 M-doc census drops zero buckets at the default):
-        // an anti-join against an empty guard is the identity, so skip
-        // it — the pair plan loses a broadcast + join, and the census
-        // aggregate above stays as the guard's whole price
-        oversized.unpersist()
-        (banded, Nil, census)
-      } else {
-        log.warn(s"$what: dropped ${census.droppedBuckets} bucket(s) " +
-          s"(${census.droppedRows} banded rows) over " +
-          s"maxBucketSize=$maxBucketSize from candidate generation")
-        val guardKeys = oversized.select(keys: _*)
-        val guard =
-          if (census.droppedBuckets <= MaxBroadcastKeys) broadcast(guardKeys)
-          else guardKeys
-        (banded.join(guard, keyCols, "left_anti"), Seq(oversized), census)
+        // measured 8 M-doc census drops zero buckets at the default)
+        case (census, None) => (banded, Nil, census)
+        case (census, Some(guard)) =>
+          log.warn(s"$what: dropped ${census.droppedBuckets} bucket(s) " +
+            s"(${census.droppedRows} banded rows) over " +
+            s"maxBucketSize=$maxBucketSize from candidate generation")
+          (banded.join(guard, keyCols, "left_anti"), Seq(oversized), census)
       }
+    }
+  }
+
+  /** The census of `dropped` — persisted over-cap buckets, each sized
+    * by `sizeCol` — and, when any dropped, the guard keys to anti-join
+    * them out with (broadcast up to [[MaxBroadcastKeys]] keys). One
+    * aggregate over the small cached frame is both its materializing
+    * action and the census. A zero-drop census unpersists `dropped`
+    * and returns no guard: an anti-join against an empty guard is the
+    * identity, so the pair plan skips it and the census aggregate is
+    * the guard's whole price. Otherwise the caller owns `dropped`.
+    */
+  private[ext] def overCap(dropped: DataFrame, sizeCol: String,
+                           keyCols: Seq[String], maxBucketSize: Int)
+      : (CapCensus, Option[DataFrame]) = {
+    val row = dropped
+      .agg(count(lit(1)), coalesce(sum(col(sizeCol)), lit(0L))).head()
+    val census = CapCensus(row.getLong(0), row.getLong(1), maxBucketSize)
+    if (!census.anyDropped) {
+      dropped.unpersist()
+      (census, None)
+    } else {
+      val keys = dropped.select(keyCols.map(col): _*)
+      (census,
+        Some(if (census.droppedBuckets <= MaxBroadcastKeys) broadcast(keys) else keys))
     }
   }
 }

@@ -71,16 +71,9 @@ object SemDedup {
       vecs: DataFrame, centroids: DataFrame, threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxClusterSize: Int = LshSkew.DefaultMaxBucketSize)
-      : (DataFrame, LshSkew.CapCensus) = {
-    val (pairs, caches, census) = semanticDupPairsLazy(vecs, centroids,
-      threshold, idCol, vecCol, maxClusterSize)
-    // Materialize so the cached assignment frame can be released now —
-    // the pair list is tiny relative to the (id, vec) corpus frame.
-    // unpersist in finally: a failed materialization must not leave
-    // the caches pinned (the Dedup.lshNearDupPairsWithStats rule).
-    try (pairs.localCheckpoint(true), census)
-    finally caches.foreach(_.unpersist())
-  }
+      : (DataFrame, LshSkew.CapCensus) =
+    LshIncremental.materialized(semanticDupPairsLazy(vecs, centroids,
+      threshold, idCol, vecCol, maxClusterSize))
 
   /** Lazy variant: un-materialized pair plan, the persisted
     * intermediates the caller must unpersist after its action, and

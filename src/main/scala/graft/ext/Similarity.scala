@@ -263,18 +263,40 @@ object Similarity {
     * sign bits (bit p set iff round(v·plane, 6) >= 0 — rounded so an
     * at-the-boundary dot can't flip between engines on summation-order
     * ulps). Map-side only; broadcast-free (planes are plan literals).
+    *
+    * A null vector has no buckets (null, so it explodes to no band
+    * rows): banding it as all-negative would put it in a real bucket,
+    * counting toward that bucket's cap. A vector whose length is not
+    * `dims` fails the query — it has no defined projection.
     */
   def srpBuckets(vec: Column, numBands: Int, planesPerBand: Int,
                  dims: Int): Column = {
+    require(numBands >= 1, s"srpBuckets: numBands ($numBands) must be >= 1")
+    // one bit per plane in a 64-bit bucket id: `1L << 64` is `1L` on
+    // the JVM, so a 65th plane would alias plane 0's bit
+    require(planesPerBand >= 1 && planesPerBand <= 64,
+      s"srpBuckets: planesPerBand ($planesPerBand) must be in 1..64")
+    require(dims >= 1, s"srpBuckets: dims ($dims) must be >= 1")
     val planes = srpPlanes(numBands * planesPerBand, dims)
     val vd = vec.cast("array<double>")
-    array((0 until numBands).map { b =>
+    val buckets = array((0 until numBands).map { b =>
       (0 until planesPerBand).map { p =>
         val plane = array(planes(b * planesPerBand + p).map(lit): _*)
         when(round(dot(vd, plane), 6) >= 0.0, lit(1L << p)).otherwise(0L)
       }.reduce(_ + _)
     }: _*)
+    when(vd.isNotNull,
+      when(size(vd) === dims, buckets).otherwise(raise_error(
+        lit(s"srpBuckets: a vector's length is not dims ($dims)"))))
   }
+
+  /** The SRP family's [[LshIncremental.Banding]]: sign buckets, the
+    * double vectors as verify payload, exact [[cosine]]. The full pair
+    * path, [[SrpIndex]]'s incremental and subset paths, and its
+    * streaming fold-in all run through the one pair plan with it.
+    */
+  private[graft] val banding: LshIncremental.Banding =
+    LshIncremental.Banding("bucket", "v", "cosine", cosine)
 
   /** SRP-LSH near-duplicate pairs — the embedding analog of the
     * MinHash-LSH text path (and the scale path behind the brute-force
@@ -307,103 +329,45 @@ object Similarity {
       numBands: Int, planesPerBand: Int, dims: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
-      maxBucketSize: Int = LshSkew.DefaultMaxBucketSize): (DataFrame, LshSkew.CapCensus) = {
-    val (pairs, caches, census) = srpNearDupPairsLazy(df, threshold, numBands,
-      planesPerBand, dims, idCol, vecCol, maxBucketSize)
-    // materialize then release the bucketed cache (the Dedup.lshNearDupPairs
-    // discipline): the pair list is tiny next to the bucketed corpus.
-    // unpersist in finally — a failed/cancelled checkpoint must not pin
-    // the corpus in the executor cache for the session's lifetime
-    try (pairs.localCheckpoint(true), census)
-    finally caches.foreach(_.unpersist())
-  }
+      maxBucketSize: Int = LshSkew.DefaultMaxBucketSize): (DataFrame, LshSkew.CapCensus) =
+    LshIncremental.materialized(srpNearDupPairsLazy(df, threshold, numBands,
+      planesPerBand, dims, idCol, vecCol, maxBucketSize))
 
   /** Lazy variant: un-materialized pair plan + the persisted
-    * intermediate the caller must unpersist (exists so tests can
+    * intermediates the caller must unpersist (exists so tests can
     * assert plan shape before checkpointing truncates lineage) + the
-    * skew-guard census.
+    * skew-guard census. It bands through [[srpFrames]], the frames
+    * [[SrpIndex]] persists, so full ≡ index holds by construction.
     */
   private[graft] def srpNearDupPairsLazy(
       df: DataFrame, threshold: Double,
       numBands: Int, planesPerBand: Int, dims: Int,
       idCol: String, vecCol: String,
-      maxBucketSize: Int = LshSkew.DefaultMaxBucketSize): (DataFrame, Seq[DataFrame], LshSkew.CapCensus) = {
-    // persist: the banded explode plus BOTH verify joins re-reference
-    // this frame — without a cache the scan and the full
-    // numBands×planesPerBand dot-product battery run three times
-    val bucketed = df
-      .select(col(idCol).as("id"), col(vecCol).as("v"),
-        srpBuckets(col(vecCol), numBands, planesPerBand, dims).as("buckets"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = bucketed
-      .select(col("id"), posexplode(col("buckets")).as(Seq("band_idx", "bucket")))
-    val (capped, guardCaches, census) = LshSkew.capBuckets(banded,
-      Seq("band_idx", "bucket"), maxBucketSize, "srpNearDupPairs")
-    val a = capped.select(col("band_idx"), col("bucket"), col("id").as("id_a"))
-    val b = capped.select(col("band_idx"), col("bucket"), col("id").as("id_b"))
-    val pairs = a.join(b, Seq("band_idx", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .join(bucketed.select(col("id").as("id_a"), col("v").as("v_a")), "id_a")
-      .join(bucketed.select(col("id").as("id_b"), col("v").as("v_b")), "id_b")
-      .withColumn("cosine", cosine(col("v_a"), col("v_b")))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
-    (pairs, bucketed +: guardCaches, census)
-  }
+      maxBucketSize: Int = LshSkew.DefaultMaxBucketSize): LshIncremental.Plan =
+    LshIncremental.selfJoin(banding, srpFrames(df, idCol, vecCol, numBands,
+      planesPerBand, dims), threshold, maxBucketSize)
 
   /** The SRP analog of [[Dedup.bandedFrame]]: (base, banded) where
     * base = (id, v array<double>) — the verify payload per vector —
     * and banded = (id, band_idx, bucket), both persisted (the counts,
     * the candidate join, and both verify joins re-reference them).
-    * Callers own the unpersist. Values are BIT-IDENTICAL to the full
-    * [[srpNearDupPairsLazy]] path's by construction: same
-    * [[srpBuckets]] planes (deterministic md5 derivation), same
-    * exact float→double cast — which is what lets [[SrpIndex]] prove
-    * incremental ≡ full-recompute-restricted with a hash equality.
+    * Callers own the unpersist. The same [[srpBuckets]] planes
+    * (deterministic md5 derivation) and the exact float→double cast
+    * serve the full path and [[SrpIndex]], which is what lets the
+    * index prove incremental ≡ full-recompute-restricted with a hash
+    * equality.
     */
   private[graft] def srpFrames(df: DataFrame, idCol: String, vecCol: String,
                                numBands: Int, planesPerBand: Int,
                                dims: Int): (DataFrame, DataFrame) = {
+    // built first: a bad banding must fail before anything is cached
+    val buckets = srpBuckets(col("v"), numBands, planesPerBand, dims)
     val base = df
       .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val banded = base
-      .select(col("id"), posexplode(
-        srpBuckets(col("v"), numBands, planesPerBand, dims))
-        .as(Seq("band_idx", "bucket")))
+      .select(col("id"), posexplode(buckets).as(Seq("band_idx", "bucket")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     (base, banded)
-  }
-
-  /** Incremental SRP near-dup over ALREADY-banded batch frames against
-    * persisted corpus frames (the [[SrpIndex]] layout) — the embedding
-    * twin of [[Dedup.lshNearDupPairsIncrementalFromFrames]], sharing
-    * its candidate machinery ([[LshIncremental.candidates]]: stored-
-    * counts union capping, size-guarded batch-side broadcast, corpus
-    * frames consumed map-side) with only the verify step differing:
-    * exact cosine over the stored double vectors instead of Jaccard
-    * over shingle-hash sets. The verify joins stay UN-hinted for the
-    * same reason as the text path's — candidate volume is runtime-
-    * data-dependent, so AQE is the safe broadcaster there.
-    */
-  private[graft] def srpNearDupPairsIncrementalFromFrames(
-      corpusBase: DataFrame, corpusBanded: DataFrame, corpusBuckets: DataFrame,
-      newBase: DataFrame, newBanded: DataFrame,
-      threshold: Double, maxBucketSize: Int)
-      : (DataFrame, Seq[DataFrame], LshSkew.CapCensus) = {
-    val (candidates, caches, census) = LshIncremental.candidates(
-      corpusBanded, corpusBuckets, newBanded,
-      Seq("band_idx", "bucket"), maxBucketSize)
-    val unionBase = corpusBase.select(col("id"), col("v"))
-      .unionByName(newBase.select(col("id"), col("v")))
-    val pairs = candidates
-      .join(unionBase.select(col("id").as("id_a"), col("v").as("v_a")), "id_a")
-      .join(unionBase.select(col("id").as("id_b"), col("v").as("v_b")), "id_b")
-      .withColumn("cosine", cosine(col("v_a"), col("v_b")))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
-    (pairs, caches, census)
   }
 }

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Persisted SRP-LSH embedding index — [[LshIndex]]'s twin for the
   * EMBEDDING near-dup path ([[Similarity.srpNearDupPairs]]): at corpus
@@ -15,8 +14,8 @@ import org.apache.spark.sql.functions._
   * compute-once-reload contract as the S8 parquet cache
   * (`processors/_impl/plotting_impl.py:126-147`,
   * [[graft.sinks.Exporters.cached]]). It is the same [[BandedIndex]]
-  * as [[LshIndex]] with a different bucket column, meta and frame and
-  * pair functions, under the same [[IndexFiles]] protocol:
+  * as [[LshIndex]] with a different meta, frames function and
+  * [[LshIncremental.Banding]], under the same [[IndexFiles]] protocol:
   *
   * {{{
   *   <path>/_srp_meta.json     format version + banding params
@@ -63,20 +62,13 @@ object SrpIndex {
       Seq("version", "idCol", "numBands", "planesPerBand", "dims")) {
     def missing(dir: String): String =
       s"no SRP index at $dir: missing/incomplete (no _srp_meta.json)"
-    override def corrupt(dir: String, text: String): String =
-      s"SrpIndex meta at $dir exists but is truncated/corrupt (killed " +
-        "writer?) — the index is incomplete; rebuild it"
   }
 
-  private val Impl = new BandedIndex(Kind, "bucket") {
+  private val Impl = new BandedIndex(Kind) {
     def frames(df: DataFrame, vecCol: String, m: IndexFiles.Meta) =
       Similarity.srpFrames(df, m.str("idCol"), vecCol, m.int("numBands"),
         m.int("planesPerBand"), m.int("dims"))
-    def payload(m: IndexFiles.Meta): String = "v"
-    def pairs(corpus: BandedIndex.Frames, base: DataFrame, banded: DataFrame,
-              threshold: Double, maxBucketSize: Int) =
-      Similarity.srpNearDupPairsIncrementalFromFrames(corpus.base,
-        corpus.banded, corpus.buckets, base, banded, threshold, maxBucketSize)
+    def banding(m: IndexFiles.Meta) = Similarity.banding
   }
 
   private def meta(idCol: String, numBands: Int, planesPerBand: Int,
@@ -86,6 +78,9 @@ object SrpIndex {
   private def index(f: BandedIndex.Frames): Index = Index(f.base, f.banded,
     f.buckets, f.meta.str("idCol"), f.meta.int("numBands"),
     f.meta.int("planesPerBand"), f.meta.int("dims"))
+
+  private def frames(i: Index): BandedIndex.Frames = BandedIndex.Frames(
+    meta(i.idCol, i.numBands, i.planesPerBand, i.dims), i.base, i.banded, i.buckets)
 
   /** Build (or overwrite) the index at `path` from `df`'s `vecCol`.
     * One corpus pass: project → sign buckets → band explode, then the
@@ -158,15 +153,13 @@ object SrpIndex {
                        threshold: Double = 0.9,
                        maxBucketSize: Int = LshSkew.DefaultMaxBucketSize)
       : (DataFrame, LshSkew.CapCensus) =
-    Impl.incrementalPairs(BandedIndex.Frames(meta(index.idCol, index.numBands,
-        index.planesPerBand, index.dims), index.base, index.banded, index.buckets),
-      newDf, vecCol, threshold, maxBucketSize)
+    Impl.incrementalPairs(frames(index), newDf, vecCol, threshold, maxBucketSize)
 
   /** Verified near-dup pairs WITHIN a subset of already-indexed ids,
     * served purely from the index frames — [[LshIndex.pairsAmong]]'s
     * exact contract for the embedding index (no vectors re-projected:
-    * the base payload carries them; same shared
-    * [[LshIncremental.candidatesAmong]] machinery, cosine verify).
+    * the base payload carries them; the same shared
+    * [[LshIncremental.pairsAmong]] plan, cosine verify).
     * Equals the full [[Similarity.srpNearDupPairs]] over the index's
     * (survivor) corpus restricted to subset×subset, same threshold
     * and cap. The maintenance primitive behind
@@ -179,24 +172,8 @@ object SrpIndex {
   def pairsAmong(index: Index, ids: DataFrame,
                  threshold: Double = 0.9,
                  maxBucketSize: Int = LshSkew.DefaultMaxBucketSize)
-      : (DataFrame, LshSkew.CapCensus) = {
-    val idsN = ids.select(col(ids.columns.head).as("id")).distinct()
-    val (candidates, caches, census) = LshIncremental.candidatesAmong(
-      index.banded, index.buckets, idsN, Seq("band_idx", "bucket"),
-      maxBucketSize)
-    val pairs =
-      try candidates
-        .join(index.base.select(col("id").as("id_a"), col("v").as("v_a")),
-          "id_a")
-        .join(index.base.select(col("id").as("id_b"), col("v").as("v_b")),
-          "id_b")
-        .withColumn("cosine", Similarity.cosine(col("v_a"), col("v_b")))
-        .filter(col("cosine") >= threshold)
-        .select(col("id_a"), col("id_b"), col("cosine"))
-        .localCheckpoint(true)
-      finally caches.foreach(_.unpersist())
-    (pairs, census)
-  }
+      : (DataFrame, LshSkew.CapCensus) =
+    Impl.pairsAmong(frames(index), ids, threshold, maxBucketSize)
 
   /** Fold a batch into the index: append its base/banded rows and its
     * bucket-count DELTAS under the meta's params. After append,

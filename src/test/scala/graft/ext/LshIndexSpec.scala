@@ -220,9 +220,12 @@ class LshIndexSpec extends SparkSpec {
       withConfs(
         "spark.sql.adaptive.enabled" -> "false",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-        val (pairs, caches, _) = Dedup.lshNearDupPairsIncrementalLazy(
-          index.base, index.banded, index.buckets, batch, "text", "doc_id",
-          1, 8, 2, 0.5, LshSkew.DefaultMaxBucketSize, Dedup.VerifyOn.HashSets)
+        val (bBase, bBanded) = Dedup.bandedFrame(batch, "text", "doc_id",
+          1, 8, 2, Dedup.VerifyOn.HashSets)
+        val (pairs, planCaches, _) = LshIncremental.batchPairs(
+          Dedup.banding(Dedup.VerifyOn.HashSets), index.base, index.banded,
+          index.buckets, bBase, bBanded, 0.5, LshSkew.DefaultMaxBucketSize)
+        val caches = Seq(bBase, bBanded) ++ planCaches
         try {
           val plan = pairs.queryExecution.executedPlan
           def scansUnder(p: SparkPlan, what: String): Int = p.collect {

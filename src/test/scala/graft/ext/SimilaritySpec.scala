@@ -211,4 +211,46 @@ class SimilaritySpec extends SparkSpec {
       not include "CartesianProduct"
     finally caches.foreach(_.unpersist())
   }
+
+  test("SRP banding rejects parameters it cannot honour, naming each") {
+    // numBands = 0 bands nothing (0 pairs, no error); planesPerBand = 0
+    // has no bits to sum; a 65th plane's `1L << 64` is `1L`, aliasing
+    // plane 0's bit; dims = 0 has no projection
+    val sub = emb.filter(col("vec_id") < 40)
+    Seq((0, 4, 64, "numBands"), (2, 0, 64, "planesPerBand"),
+        (2, 65, 64, "planesPerBand"), (2, 4, 0, "dims")).foreach {
+      case (bands, planes, dims, param) =>
+        withClue(s"bands=$bands planes=$planes dims=$dims: ") {
+          val e = intercept[IllegalArgumentException] {
+            Similarity.srpNearDupPairs(sub, 0.9, bands, planes, dims)
+          }
+          e.getMessage should include(param)
+        }
+    }
+    // the edge of the range still bands: 64 planes fill the bucket id
+    Similarity.srpNearDupPairs(sub, 0.9, 1, 64, 64).count() should be >= 0L
+  }
+
+  test("srpFrames: a null vector has no band rows, a wrong-length one fails") {
+    import spark.implicits._
+    val good = emb.filter(col("vec_id") < 4)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+    val withNull = good.unionByName(
+      Seq((99L, null: Seq[Double])).toDF("vec_id", "embedding"))
+    val (base, banded) = Similarity.srpFrames(withNull, "vec_id", "embedding",
+      2, 4, 64)
+    try {
+      val ids = banded.select("id").distinct().collect().map(_.getLong(0)).toSet
+      ids shouldBe (0L until 4L).toSet
+      banded.count() shouldBe 4L * 2
+    } finally { base.unpersist(); banded.unpersist() }
+
+    val short = Seq((7L, Seq(1.0, 2.0, 3.0))).toDF("vec_id", "embedding")
+    val (sBase, sBanded) = Similarity.srpFrames(short, "vec_id", "embedding",
+      2, 4, 8)
+    try {
+      val e = intercept[Exception](sBanded.collect())
+      e.getMessage should include("dims (8)")
+    } finally { sBase.unpersist(); sBanded.unpersist() }
+  }
 }

@@ -303,10 +303,9 @@ class SrpIndexSpec extends SparkSpec {
         val (bBase, bBanded) = Similarity.srpFrames(batch, "vec_id",
           "embedding", Bands, Planes, Dims)
         try {
-          val (pairs, caches, _) =
-            Similarity.srpNearDupPairsIncrementalFromFrames(
-              index.base, index.banded, index.buckets, bBase, bBanded,
-              Thr, LshSkew.DefaultMaxBucketSize)
+          val (pairs, caches, _) = LshIncremental.batchPairs(
+            Similarity.banding, index.base, index.banded, index.buckets,
+            bBase, bBanded, Thr, LshSkew.DefaultMaxBucketSize)
           try {
             val plan = pairs.queryExecution.executedPlan
             def scansUnder(p: SparkPlan, what: String): Int = p.collect {
@@ -391,6 +390,24 @@ class SrpIndexSpec extends SparkSpec {
         threshold = Thr, maxBucketSize = 30)
       after._2 shouldBe before._2
       rows(after._1) shouldBe rows(before._1)
+    } finally delete(root)
+  }
+
+  test("build rejects a banding it cannot honour, before writing anything") {
+    val root = tmp()
+    try {
+      Seq((0, Planes, Dims, "numBands"), (Bands, 0, Dims, "planesPerBand"),
+          (Bands, 65, Dims, "planesPerBand"), (Bands, Planes, 0, "dims")).foreach {
+        case (bands, planes, dims, param) =>
+          withClue(s"bands=$bands planes=$planes dims=$dims: ") {
+            val e = intercept[IllegalArgumentException] {
+              SrpIndex.build(spark, s"$root/idx", corpus, "vec_id", "embedding",
+                bands, planes, dims)
+            }
+            e.getMessage should include(param)
+          }
+      }
+      new java.io.File(s"$root/idx").exists() shouldBe false
     } finally delete(root)
   }
 }

@@ -2,12 +2,10 @@ package graft.ext
 
 import graft.SparkSpec
 
-/** Staged band-at-a-time LSH pair generation
-  * ([[Dedup.lshNearDupPairsStagedWithStats]]) — the spill-headroom
-  * execution mode of the candidate-pair stage (BASELINE.md §"Staged
-  * band processing"). Contract: IDENTICAL output to the fused default
-  * on every fixture, including under a binding cap, with the per-band
-  * censuses summing to the fused census.
+/** The LSH pair stage's verify payload ([[Dedup.VerifyOn]]): the
+  * default 52-bit hash sets must give the exact shingle-string
+  * reference's output, and the hash-set base frame must carry no
+  * strings.
   */
 class StagedLshSpec extends SparkSpec {
   import spark.implicits._
@@ -29,42 +27,17 @@ class StagedLshSpec extends SparkSpec {
     df.select($"id_a", $"id_b", $"jaccard").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
 
-  test("staged output is bit-identical to the fused default") {
-    val (fused, fusedCensus) = Dedup.lshNearDupPairsWithStats(
-      docs, "text", "doc_id")
-    val (staged, stagedCensus) = Dedup.lshNearDupPairsStagedWithStats(
-      docs, "text", "doc_id")
-    asPairs(staged) shouldBe asPairs(fused)
-    staged.count() should be > 0L // the fixture genuinely produces pairs
-    stagedCensus shouldBe fusedCensus
-  }
-
-  test("staged under a binding cap: same drops, same survivors as fused") {
-    // cap 5: the 11-doc byte-identical cluster's bucket (all 3 bands)
-    // is dropped; smaller buckets survive
-    val (fused, fusedCensus) = Dedup.lshNearDupPairsWithStats(
-      docs, "text", "doc_id", maxBucketSize = 5)
-    val (staged, stagedCensus) = Dedup.lshNearDupPairsStagedWithStats(
-      docs, "text", "doc_id", maxBucketSize = 5)
-    stagedCensus.anyDropped shouldBe true
-    stagedCensus shouldBe fusedCensus
-    asPairs(staged) shouldBe asPairs(fused)
-  }
-
   test("HashSets verify is bit-identical to Shingles on a collision-free corpus") {
     // 52-bit hashes collide at P ≈ s²/2⁵³ per pair — never on a test
-    // corpus, so the two verify payloads must agree exactly, for both
-    // the fused and staged paths. Shingles must be EXPLICIT here: the
+    // corpus, so the two verify payloads must agree exactly. Shingles
+    // must be EXPLICIT here: the
     // default is HashSets since r13, and an omitted arg would compare
     // HashSets against itself (leaving the string branch untested)
     val (strings, _) = Dedup.lshNearDupPairsWithStats(docs, "text", "doc_id",
       verifyOn = Dedup.VerifyOn.Shingles)
     val (hashes, _) = Dedup.lshNearDupPairsWithStats(docs, "text", "doc_id",
       verifyOn = Dedup.VerifyOn.HashSets)
-    val (stagedHashes, _) = Dedup.lshNearDupPairsStagedWithStats(
-      docs, "text", "doc_id", verifyOn = Dedup.VerifyOn.HashSets)
     asPairs(hashes) shouldBe asPairs(strings)
-    asPairs(stagedHashes) shouldBe asPairs(strings)
   }
 
   test("HashSets base frame carries no shingle strings") {
