@@ -512,20 +512,16 @@ object IvfIndex {
     }
   }
 
-  /** Search a loaded index: [[Similarity.ivfKnnPreassigned]] when
-    * assignments were saved, otherwise assign `corpus` on the fly
-    * (which then must be provided).
+  /** Search a loaded index: [[Similarity.ivfKnnPreassigned]] over the
+    * saved assignments, or over `corpus` assigned on the fly
+    * ([[Similarity.assignToCentroids]]) when none were saved.
     */
   def search(index: Index, queries: DataFrame, k: Int, nprobe: Int,
              corpus: Option[DataFrame] = None): DataFrame =
-    index.assignments match {
-      case Some(assigned) =>
-        Similarity.ivfKnnPreassigned(assigned, index.centroids, queries,
-          k, nprobe, index.idCol, index.vecCol)
-      case None =>
-        val c = corpus.getOrElse(sys.error(
-          "IvfIndex.search: index saved without assignments — pass the corpus"))
-        Similarity.ivfKnn(c, index.centroids, queries, k, nprobe,
-          index.idCol, index.vecCol)
-    }
+    Similarity.ivfKnnPreassigned(
+      index.assignments.getOrElse(Similarity.assignToCentroids(
+        corpus.getOrElse(sys.error(
+          "IvfIndex.search: index saved without assignments — pass the corpus")),
+        index.centroids, index.idCol, index.vecCol)),
+      index.centroids, queries, k, nprobe, index.idCol, index.vecCol)
 }

@@ -39,7 +39,6 @@ object Keywords {
     */
   def tfidfTopK(docs: DataFrame, textCol: String, idCol: String, k: Int,
                 broadcastDf: Boolean = true): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
     val terms = docs.select(col(idCol),
       explode(split(col(textCol), " ")).as("term"))
     val tf = terms.groupBy(col(idCol), col("term"))

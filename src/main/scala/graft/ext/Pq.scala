@@ -28,6 +28,10 @@ import org.apache.spark.sql.functions._
   * argmax expressions over slices — no shuffle, no join); ADC search
   * is a scan of the m-codes table + the same partial top-k tail the
   * float/int8 paths use. Nothing corpus-sized ever shuffles.
+  *
+  * The searches run the one kNN plan in [[Knn]]: the exact-dot scorer
+  * for [[bruteDotKnn]] and the rerank tail, and the per-query step
+  * with the ADC score (probe-gated for the IVF faces) otherwise.
   */
 object Pq {
 
@@ -142,6 +146,18 @@ object Pq {
     }: _*))
   }
 
+  /** The exact inner-product scorer over the double-cast vectors. */
+  private def dotScorer(vecCol: String): Knn.Scorer =
+    Knn.Scorer(_.cast("array<double>"), col(vecCol).cast("array<double>"),
+      "dot", graft.functions.DotProduct.dot)
+
+  /** Driver-side queries as a (query_id, q_vec) frame. */
+  private def queryFrame(spark: org.apache.spark.sql.SparkSession,
+                         queries: Seq[(Long, Array[Double])]): DataFrame = {
+    import spark.implicits._
+    queries.toDF("query_id", "q_vec")
+  }
+
   /** ADC top-k: score every encoded row against every query (queries
     * are a driver-side handful, like the centroid matrices) in one
     * scan — per-query ADC columns, posexplode, then the family's
@@ -153,15 +169,9 @@ object Pq {
              idCol: String = "vec_id",
              codesCol: String = "pq_codes"): DataFrame = {
     require(queries.nonEmpty, "pq adcKnn: no queries")
-    val qids = array(queries.map(q => lit(q._1)): _*)
-    val scores = array(queries.map { case (_, qv) =>
-      graft.functions.PqAdc.score(col(codesCol), codebooks, qv) }: _*)
-    val scored = encoded
-      .select(col(idCol).as("neighbor_id"),
-        posexplode(scores).as(Seq("qi", "adc_dot")))
-      .withColumn("query_id", element_at(qids, col("qi") + 1))
-      .filter(col("adc_dot").isNotNull)
-    Similarity.rankTopK(scored, "query_id", k, "adc_dot")
+    Knn.perQuery(encoded, queries, k, idCol, "adc_dot") { case (_, qv) =>
+      graft.functions.PqAdc.score(col(codesCol), codebooks, qv)
+    }
   }
 
   /** Exact inner-product brute top-k over the FLOAT corpus — PQ's
@@ -171,18 +181,9 @@ object Pq {
     */
   def bruteDotKnn(corpusF: DataFrame, queries: Seq[(Long, Array[Double])],
                   k: Int, idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame = {
-    val spark = corpusF.sparkSession
-    import spark.implicits._
-    val qdf = broadcast(queries.toDF("query_id", "q_vec"))
-    Similarity.rankTopK(
-      corpusF.select(col(idCol).as("neighbor_id"),
-          col(vecCol).cast("array<double>").as("c_vec"))
-        .crossJoin(qdf)
-        .withColumn("dot",
-          graft.functions.DotProduct.dot(col("q_vec"), col("c_vec"))),
-      "query_id", k, "dot")
-  }
+                  vecCol: String = "embedding"): DataFrame =
+    Knn.brute(corpusF, queryFrame(corpusF.sparkSession, queries),
+      dotScorer(vecCol), k, idCol, "query_id")
 
   /** IVF × PQ — the full production ANN composition (FAISS's IVF-PQ
     * shape, assembled from the engine's own parts): float centroid
@@ -192,13 +193,12 @@ object Pq {
     * (32× fewer bytes than floats here) and scores by ADC inside the
     * probed clusters only.
     *
-    * Probe sets are computed WITH the column cosine (crossJoin over
-    * the broadcast centroid frame + window rank — the exact dataflow
-    * the IVF oracles replay) and collected: queries are a driver-side
-    * handful, so the probe table is queries × nprobe rows. The search
-    * itself is ONE map-side scan of the coded corpus: per query, ADC
-    * scores gated on probed-cluster membership, then the family's
-    * partial top-k tail.
+    * Probe sets come from the shared [[Knn.probes]] (the exact
+    * dataflow the IVF oracles replay) and are collected: queries are a
+    * driver-side handful, so the probe table is queries × nprobe rows.
+    * The search itself is ONE map-side scan of the coded corpus: per
+    * query, ADC scores gated on probed-cluster membership, then the
+    * family's partial top-k tail.
     *
     * @param encodedAssigned (idCol, pq_codes, centroid_id) — [[encode]]
     *                        over an assigned corpus (or a loaded
@@ -208,38 +208,44 @@ object Pq {
                 codebooks: Codebooks, queries: Seq[(Long, Array[Double])],
                 k: Int, nprobe: Int,
                 idCol: String = "vec_id", vecCol: String = "embedding",
-                codesCol: String = "pq_codes"): DataFrame = {
-    require(queries.nonEmpty, "pq ivfAdcKnn: no queries")
-    val spark = encodedAssigned.sparkSession
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
-    val qdf = queries.map { case (id, v) => (id, v.toSeq) }
-      .toDF("query_id", "q_vec")
-    val c = centroids.select(col(idCol).as("centroid_id"),
-      col(vecCol).cast("array<double>").as("cent_vec"))
-    val qw = Window.partitionBy(col("query_id"))
-      .orderBy(col("qc_cos").desc, col("centroid_id"))
-    val probeRows = qdf.crossJoin(broadcast(c))
-      .withColumn("qc_cos", Similarity.cosine(col("q_vec"), col("cent_vec")))
-      .withColumn("qc_rank", row_number().over(qw))
-      .filter(col("qc_rank") <= nprobe)
-      .select(col("query_id"), col("centroid_id")).collect()
-    val probes: Map[Long, Set[Long]] = probeRows.toSeq
-      .groupBy(_.getLong(0)).map { case (q, rs) =>
-        (q, rs.map(_.getLong(1)).toSet) }
-    val qids = array(queries.map(q => lit(q._1)): _*)
-    val scores = array(queries.map { case (qid, qv) =>
+                codesCol: String = "pq_codes"): DataFrame =
+    probedAdc("ivfAdcKnn", encodedAssigned, centroids, codebooks, queries,
+      k, nprobe, idCol, vecCol, codesCol, "centroid_id", residual = false)
+
+  /** The two IVF × PQ faces: per query, the ADC score of rows in its
+    * probed clusters — plus, for `residual` codes, the per-cluster
+    * constant `dot(q, centroid)` as a CASE over the probed clusters
+    * (none otherwise: a zero constant would turn a -0.0 score into
+    * +0.0).
+    */
+  private def probedAdc(face: String, encodedAssigned: DataFrame,
+                        centroids: DataFrame, codebooks: Codebooks,
+                        queries: Seq[(Long, Array[Double])], k: Int,
+                        nprobe: Int, idCol: String, vecCol: String,
+                        codesCol: String, centIdCol: String,
+                        residual: Boolean): DataFrame = {
+    require(queries.nonEmpty, s"pq $face: no queries")
+    val probes = Knn.probeSets(Knn.probes(centroids,
+      queryFrame(encodedAssigned.sparkSession, queries), nprobe, idCol, vecCol))
+    val cents: Map[Long, Array[Double]] =
+      if (!residual) Map.empty
+      else centroids.select(col(idCol), col(vecCol).cast("array<double>"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toMap
+    Knn.perQuery(encodedAssigned, queries, k, idCol, "adc_dot") { case (qid, qv) =>
       val probed = probes.getOrElse(qid, Set.empty[Long])
       if (probed.isEmpty) lit(null).cast("double")
-      else when(col("centroid_id").isInCollection(probed),
-        graft.functions.PqAdc.score(col(codesCol), codebooks, qv))
-    }: _*)
-    val scored = encodedAssigned
-      .select(col(idCol).as("neighbor_id"),
-        posexplode(scores).as(Seq("qi", "adc_dot")))
-      .filter(col("adc_dot").isNotNull)
-      .withColumn("query_id", element_at(qids, col("qi") + 1))
-    Similarity.rankTopK(scored, "query_id", k, "adc_dot")
+      else {
+        val adc = graft.functions.PqAdc.score(col(codesCol), codebooks, qv)
+        val score = if (!residual) adc else probed.toSeq.sorted.map { cid =>
+          val cv = cents.getOrElse(cid, throw new IllegalArgumentException(
+            s"pq $face: probed centroid $cid not in frame"))
+          // ascending-index dot: the same fold list_dot_product runs
+          when(col(centIdCol) === cid,
+            lit(qv.indices.foldLeft(0.0)((acc, i) => acc + qv(i) * cv(i))))
+        }.reduceRight((a, b) => a.otherwise(b)) + adc
+        when(col(centIdCol).isInCollection(probed), score)
+      }
+    }
   }
 
   /** RESIDUAL frame (FAISS IVF-PQ's actual encoding): each assigned
@@ -293,60 +299,9 @@ object Pq {
                         nprobe: Int, idCol: String = "vec_id",
                         vecCol: String = "embedding",
                         codesCol: String = "pq_codes",
-                        centIdCol: String = "centroid_id"): DataFrame = {
-    require(queries.nonEmpty, "pq ivfResidualAdcKnn: no queries")
-    val spark = encodedAssigned.sparkSession
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
-    val qdf = queries.map { case (id, v) => (id, v.toSeq) }
-      .toDF("query_id", "q_vec")
-    val centRows = centroids.select(col(idCol).as(centIdCol),
-        col(vecCol).cast("array<double>").as("cent_vec"))
-      .orderBy(col(centIdCol)).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val c = centroids.select(col(idCol).as(centIdCol),
-      col(vecCol).cast("array<double>").as("cent_vec"))
-    val qw = Window.partitionBy(col("query_id"))
-      .orderBy(col("qc_cos").desc, col(centIdCol))
-    val probeRows = qdf.crossJoin(broadcast(c))
-      .withColumn("qc_cos", Similarity.cosine(col("q_vec"), col("cent_vec")))
-      .withColumn("qc_rank", row_number().over(qw))
-      .filter(col("qc_rank") <= nprobe)
-      .select(col("query_id"), col(centIdCol)).collect()
-    val probes: Map[Long, Set[Long]] = probeRows.toSeq
-      .groupBy(_.getLong(0)).map { case (q, rs) =>
-        (q, rs.map(_.getLong(1)).toSet) }
-    // ascending-index driver dot — the same fold list_dot_product runs
-    def dotAsc(a: Array[Double], b: Array[Double]): Double = {
-      var acc = 0.0
-      var i = 0
-      while (i < a.length) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
-    val qids = array(queries.map(q => lit(q._1)): _*)
-    val scores = array(queries.map { case (qid, qv) =>
-      val probed = probes.getOrElse(qid, Set.empty[Long])
-      if (probed.isEmpty) lit(null).cast("double")
-      else {
-        // per-probed-cluster constant dot(q, centroid), as a CASE
-        val qcDot = probed.toSeq.sorted.map { cid =>
-          val cv = centRows.find(_._1 == cid).getOrElse(
-            throw new IllegalArgumentException(
-              s"pq ivfResidualAdcKnn: probed centroid $cid not in frame"))._2
-          when(col(centIdCol) === cid, lit(dotAsc(qv, cv)))
-        }.reduceRight((a, b) => a.otherwise(b))
-        when(col(centIdCol).isInCollection(probed),
-          qcDot + graft.functions.PqAdc.score(col(codesCol),
-            resCodebooks, qv))
-      }
-    }: _*)
-    val scored = encodedAssigned
-      .select(col(idCol).as("neighbor_id"),
-        posexplode(scores).as(Seq("qi", "adc_dot")))
-      .filter(col("adc_dot").isNotNull)
-      .withColumn("query_id", element_at(qids, col("qi") + 1))
-    Similarity.rankTopK(scored, "query_id", k, "adc_dot")
-  }
+                        centIdCol: String = "centroid_id"): DataFrame =
+    probedAdc("ivfResidualAdcKnn", encodedAssigned, centroids, resCodebooks,
+      queries, k, nprobe, idCol, vecCol, codesCol, centIdCol, residual = true)
 
   /** Two-stage rerank (the q124 rerankKnn pattern at the PQ rung): a
     * WIDE ADC pass over the codes, then an exact float dot re-rank of
@@ -358,21 +313,9 @@ object Pq {
                 codebooks: Codebooks, queries: Seq[(Long, Array[Double])],
                 k: Int, candidates: Int,
                 idCol: String = "vec_id", vecCol: String = "embedding",
-                codesCol: String = "pq_codes"): DataFrame = {
-    require(candidates >= k,
-      s"pq rerankKnn: candidates ($candidates) must be >= k ($k)")
-    val spark = encoded.sparkSession
-    import spark.implicits._
-    val wide = adcKnn(encoded, codebooks, queries, candidates,
-        idCol, codesCol)
-      .select(col("query_id"), col("neighbor_id"))
-    val qdf = broadcast(queries.toDF("query_id", "q_vec"))
-    val scored = wide
-      .join(corpusF.select(col(idCol).as("neighbor_id"),
-        col(vecCol).cast("array<double>").as("c_vec")), Seq("neighbor_id"))
-      .join(qdf, Seq("query_id"))
-      .withColumn("dot",
-        graft.functions.DotProduct.dot(col("q_vec"), col("c_vec")))
-    Similarity.rankTopK(scored, "query_id", k, "dot")
-  }
+                codesCol: String = "pq_codes"): DataFrame =
+    Knn.rerank("pq rerankKnn",
+      adcKnn(encoded, codebooks, queries, candidates, idCol, codesCol),
+      corpusF, queryFrame(encoded.sparkSession, queries), dotScorer(vecCol),
+      k, candidates, idCol, "query_id")
 }

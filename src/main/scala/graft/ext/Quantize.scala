@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Int8 scalar quantization for the embedding family (north-star ✚) —
@@ -32,7 +31,8 @@ import org.apache.spark.sql.functions._
   * is only needed to [[dequantize]] back to approximate floats.
   *
   * All operators here are MAP-SIDE (quantization is a scan); the
-  * ranking tails run the same partial top-k as the float path.
+  * searches are the int8 scorer over the one kNN plan in [[Knn]], the
+  * float path's probe ranking, scoring steps and partial top-k.
   *
   * Input contract: vector elements must be FINITE. A NaN element
   * makes the scale NaN and poisons that vector's codes (both engines
@@ -96,6 +96,13 @@ object Quantize {
       .drop(vecCol)
   }
 
+  /** The int8 scorer: [[quantizedCosine]] of the codes in `q_vec` (the
+    * [[quantize]] face), with the exact integer [[qdot]] alongside;
+    * queries arrive coded.
+    */
+  private val codes: Knn.Scorer = Knn.Scorer(identity, col("q_vec"), "qcos",
+    quantizedCosine, extra = Seq("qdot" -> qdot))
+
   /** Brute-force top-k over int8 codes — [[Similarity.bruteForceKnn]]'s
     * quantized twin: queries quantized and broadcast, the corpus
     * quantized in the scan (or pass a pre-quantized table via
@@ -112,17 +119,9 @@ object Quantize {
     def coded(df: DataFrame): DataFrame =
       if (preQuantized) df
       else quantize(df, vecCol = vecCol)
-    val q = coded(queries)
-      .select(col(idCol).as(queryIdCol), col("q_vec").as("qq_vec"))
-    val scored = coded(corpus)
-      .select(col(idCol).as("neighbor_id"), col("q_vec").as("qc_vec"))
-      .crossJoin(broadcast(q))
-      .withColumn("qdot", qdot(col("qq_vec"), col("qc_vec")))
-      .withColumn("qcos", quantizedCosine(col("qq_vec"), col("qc_vec")))
-    // partial-top-k tail (r17, shared with the float path): the scored
-    // cross product never shuffles — see Similarity.bruteForceKnn
-    Similarity.rankTopK(scored, queryIdCol, k, "qcos",
-      extraCols = Seq("qdot"))
+    Knn.brute(coded(corpus),
+      Knn.queries(coded(queries), idCol, "q_vec", queryIdCol),
+      codes, k, idCol, queryIdCol)
   }
 
   /** Two-stage rerank — the pattern that buys int8's 2×-wall / 3.5×-
@@ -141,28 +140,20 @@ object Quantize {
   def rerankKnn(corpusQ: DataFrame, corpusF: DataFrame, queries: DataFrame,
                 k: Int, candidates: Int,
                 idCol: String = "vec_id", vecCol: String = "embedding",
-                queryIdCol: String = "query_id"): DataFrame = {
-    require(candidates >= k,
-      s"rerankKnn: candidates ($candidates) must be >= k ($k)")
-    val wide = bruteForceKnnQuantized(corpusQ, quantize(queries, vecCol),
-        candidates, idCol, vecCol, queryIdCol, preQuantized = true)
-      .select(col(queryIdCol), col("neighbor_id"))
-    val scored = wide
-      .join(corpusF.select(col(idCol).as("neighbor_id"),
-        col(vecCol).as("c_vec")), Seq("neighbor_id"))
-      .join(broadcast(queries.select(col(idCol).as(queryIdCol),
-        col(vecCol).as("q_vec"))), Seq(queryIdCol))
-      .withColumn("cosine", Similarity.cosine(col("q_vec"), col("c_vec")))
-    Similarity.rankTopK(scored, queryIdCol, k, "cosine")
-  }
+                queryIdCol: String = "query_id"): DataFrame =
+    Knn.rerank("rerankKnn",
+      bruteForceKnnQuantized(corpusQ, quantize(queries, vecCol),
+        candidates, idCol, vecCol, queryIdCol, preQuantized = true),
+      corpusF, Knn.queries(queries, idCol, vecCol, queryIdCol),
+      Similarity.scorer(vecCol), k, candidates, idCol, queryIdCol)
 
   /** IVF × int8 — the full production composition: centroid pruning
-    * ([[Similarity.ivfKnnPreassigned]]'s probe logic, FLOAT — the
-    * centroid matrix is tiny and probe ranking costs nothing) over a
-    * persisted QUANTIZED assigned corpus, so the corpus-sized part of
-    * the search — scanning the probed clusters' vectors — moves int8
-    * codes, 4× fewer bytes than the float path, and scores on exact
-    * integer dots.
+    * (the shared float probe ranking, [[Knn.probes]] — the centroid
+    * matrix is tiny and probe ranking costs nothing) over a persisted
+    * QUANTIZED assigned corpus, so the corpus-sized part of the search
+    * — scanning the probed clusters' vectors — moves int8 codes, 4×
+    * fewer bytes than the float path, and scores on exact integer
+    * dots. Each probe row's float query is coded in place.
     *
     * @param assignedQ (idCol, q_vec, centroid_id) — [[quantize]] of
     *                  [[Similarity.assignToCentroids]]'s output (or of
@@ -173,25 +164,8 @@ object Quantize {
   def ivfKnnQuantized(assignedQ: DataFrame, centroids: DataFrame,
                       queries: DataFrame, k: Int, nprobe: Int,
                       idCol: String = "vec_id",
-                      vecCol: String = "embedding"): DataFrame = {
-    val c = centroids.select(col(idCol).as("centroid_id"),
-      col(vecCol).as("cent_vec"))
-    val qw = Window.partitionBy(col("query_id"))
-      .orderBy(col("qc_cos").desc, col("centroid_id"))
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-      .crossJoin(broadcast(c))
-      .withColumn("qc_cos", Similarity.cosine(col("q_vec"), col("cent_vec")))
-      .withColumn("qc_rank", row_number().over(qw))
-      .filter(col("qc_rank") <= nprobe)
-      .withColumn("qq_vec",
-        quantizeInt8(col("q_vec"), int8Scale(col("q_vec"))))
-      .select(col("query_id"), col("qq_vec"), col("centroid_id"))
-    Similarity.rankTopK(assignedQ
-      .withColumnRenamed(idCol, "neighbor_id")
-      .join(broadcast(probes), Seq("centroid_id"))
-      .withColumn("qdot", qdot(col("qq_vec"), col("q_vec")))
-      .withColumn("qcos", quantizedCosine(col("qq_vec"), col("q_vec"))),
-      "query_id", k, "qcos", extraCols = Seq("qdot"))
-  }
+                      vecCol: String = "embedding"): DataFrame =
+    Knn.probed(assignedQ, centroids, Knn.queries(queries, idCol, vecCol),
+      nprobe, codes.copy(queryCode = v => quantizeInt8(v, int8Scale(v))), k,
+      idCol, vecCol)
 }

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Embedding similarity search (north-star ✚): brute-force cosine top-k
@@ -15,6 +14,10 @@ import org.apache.spark.sql.functions._
   * Scale design: the query/centroid side is always the broadcast side —
   * the corpus never shuffles for scoring, only for the per-query top-k
   * (a window over candidates, which IVF keeps small).
+  *
+  * The kNN faces here are the float scorer over the one search plan
+  * in [[Knn]] (probe ranking, scoring, top-k), which the int8
+  * ([[Quantize]]) and PQ ([[Pq]]) faces share.
   */
 object Similarity {
 
@@ -42,6 +45,10 @@ object Similarity {
       .otherwise(least(greatest(dot(ad, bd) / denom, lit(-1.0)), lit(1.0)))
   }
 
+  /** The float scorer: [[cosine]] of the raw vectors. */
+  private[ext] def scorer(vecCol: String): Knn.Scorer =
+    Knn.Scorer(identity, col(vecCol), "cosine", cosine)
+
   /** Brute-force top-k: score every (query, corpus) pair, keep the k
     * best per query (ties broken by corpus id). Queries are broadcast;
     * the corpus is scanned once, map-side.
@@ -58,33 +65,9 @@ object Similarity {
     */
   def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int,
                     idCol: String = "vec_id", vecCol: String = "embedding",
-                    queryIdCol: String = "query_id"): DataFrame = {
-    val q = queries.select(col(idCol).as(queryIdCol), col(vecCol).as("q_vec"))
-    val scored = corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-      .crossJoin(broadcast(q))
-      .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
-    rankTopK(scored, queryIdCol, k, "cosine")
-  }
-
-  /** Shared kNN tail: prune to the score columns (the vectors must
-    * never reach an exchange), exact partial top-k per query, then
-    * stamp `rank` with a window over the ≤ k·queries survivors.
-    */
-  private[ext] def rankTopK(scored: DataFrame, queryIdCol: String, k: Int,
-                            scoreCol: String,
-                            extraCols: Seq[String] = Nil): DataFrame = {
-    val pruned = scored.select(
-      (Seq(queryIdCol, "neighbor_id", scoreCol) ++ extraCols).map(col): _*)
-    val shrunk = graft.plans.TopK.topKPerKey(pruned, Seq(queryIdCol),
-      scoreCol, k, desc = true, tiebreak = Seq("neighbor_id"))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col(scoreCol).desc, col("neighbor_id"))
-    shrunk
-      .withColumn("rank", row_number().over(w))
-      .select((Seq(queryIdCol, "neighbor_id", "rank") ++ extraCols :+
-        scoreCol).map(col): _*)
-  }
+                    queryIdCol: String = "query_id"): DataFrame =
+    Knn.brute(corpus, Knn.queries(queries, idCol, vecCol, queryIdCol),
+      scorer(vecCol), k, idCol, queryIdCol)
 
   /** Assign every corpus vector to its nearest centroid (argmax cosine,
     * smaller centroid id as tiebreak) — a pure MAP-SIDE scan: the
@@ -206,8 +189,8 @@ object Similarity {
   def ivfKnn(corpus: DataFrame, centroids: DataFrame, queries: DataFrame,
              k: Int, nprobe: Int,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfKnnPreassigned(assignToCentroids(corpus, centroids, idCol, vecCol),
-      centroids, queries, k, nprobe, idCol, vecCol)
+    Knn.probed(assignToCentroids(corpus, centroids, idCol, vecCol), centroids,
+      Knn.queries(queries, idCol, vecCol), nprobe, scorer(vecCol), k, idCol, vecCol)
 
   /** [[ivfKnn]] over an ALREADY-ASSIGNED corpus — the serve path of
     * "train once, serve many batches": assignment is the only
@@ -222,26 +205,9 @@ object Similarity {
   def ivfKnnPreassigned(assigned: DataFrame, centroids: DataFrame,
                         queries: DataFrame, k: Int, nprobe: Int,
                         idCol: String = "vec_id",
-                        vecCol: String = "embedding"): DataFrame = {
-    val c = centroids.select(col(idCol).as("centroid_id"), col(vecCol).as("cent_vec"))
-    val qw = Window.partitionBy(col("query_id"))
-      .orderBy(col("qc_cos").desc, col("centroid_id"))
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-      .crossJoin(broadcast(c))
-      .withColumn("qc_cos", cosine(col("q_vec"), col("cent_vec")))
-      .withColumn("qc_rank", row_number().over(qw))
-      .filter(col("qc_rank") <= nprobe)
-      .select(col("query_id"), col("q_vec"), col("centroid_id"))
-    // same partial-top-k tail as bruteForceKnn (r17): the probed
-    // clusters' scored candidates — nprobe/numCentroids of the corpus
-    // per query — never shuffle; only ≤ k rows/query/partition do
-    rankTopK(assigned
-      .withColumnRenamed(idCol, "neighbor_id")
-      .join(broadcast(probes), Seq("centroid_id"))
-      .withColumn("cosine", cosine(col("q_vec"), col(vecCol))),
-      "query_id", k, "cosine")
-  }
+                        vecCol: String = "embedding"): DataFrame =
+    Knn.probed(assigned, centroids,
+      Knn.queries(queries, idCol, vecCol), nprobe, scorer(vecCol), k, idCol, vecCol)
 
   /** Deterministic Rademacher (±1) hyperplanes for sign-random-
     * projection LSH: sign(p, i) = +1 iff the first hex digit of
@@ -264,10 +230,12 @@ object Similarity {
     * at-the-boundary dot can't flip between engines on summation-order
     * ulps). Map-side only; broadcast-free (planes are plan literals).
     *
-    * A null vector has no buckets (null, so it explodes to no band
-    * rows): banding it as all-negative would put it in a real bucket,
-    * counting toward that bucket's cap. A vector whose length is not
-    * `dims` fails the query — it has no defined projection.
+    * A null vector, or one with a null element, has no buckets (null,
+    * so it explodes to no band rows): its dots are null, so banding it
+    * would put it in the all-negative bucket, counting toward that
+    * bucket's cap, though its cosine with every vector is null. A
+    * vector whose length is not `dims` fails the query — it has no
+    * defined projection.
     */
   def srpBuckets(vec: Column, numBands: Int, planesPerBand: Int,
                  dims: Int): Column = {
@@ -286,8 +254,9 @@ object Similarity {
       }.reduce(_ + _)
     }: _*)
     when(vd.isNotNull,
-      when(size(vd) === dims, buckets).otherwise(raise_error(
-        lit(s"srpBuckets: a vector's length is not dims ($dims)"))))
+      when(size(vd) =!= dims, raise_error(
+          lit(s"srpBuckets: a vector's length is not dims ($dims)")))
+        .when(!exists(vd, _.isNull), buckets))
   }
 
   /** The SRP family's [[LshIncremental.Banding]]: sign buckets, the

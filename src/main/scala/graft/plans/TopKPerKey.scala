@@ -143,11 +143,14 @@ object TopK {
 
   /** Exact top-k rows per key, ordered by `orderCol` (desc by default)
     * with `tiebreak` columns ascending — a total order, so the result
-    * set equals the window-function formulation exactly.
+    * set equals the window-function formulation exactly. `k` must be
+    * at least 1, checked here, before any job: the exec's bounded
+    * queue has no head to compare against at size 0.
     */
   def topKPerKey(df: DataFrame, keyCols: Seq[String], orderCol: String,
                  k: Int, desc: Boolean = true,
                  tiebreak: Seq[String] = Nil): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
     val spark = df.sparkSession
     ensureStrategy(spark)
     val analyzed = df.queryExecution.analyzed

@@ -3511,6 +3511,33 @@ object ExtensionQueries {
       graft.functions.BpeModel.Gpt2ishPretokenizer.replace("'", "''"),
       ByteBpeMergesQ150)
 
+  /** The `n` lowest vec_ids' vectors as driver-side PQ queries. */
+  private def pqQueries(e: DataFrame, n: Int): Seq[(Long, Array[Double])] =
+    e.filter(col("vec_id") < n)
+      .select(col("vec_id"), col("embedding").cast("array<double>"))
+      .orderBy(col("vec_id")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+
+  /** A PQ gate's output: `knn`'s top-k rows with the 6-dp ADC score and
+    * `recall<k>`, the share of each query's exact inner-product top-k
+    * ([[Pq.bruteDotKnn]]) that it found.
+    */
+  private def withDotRecall(knn: DataFrame, e: DataFrame,
+                            queries: Seq[(Long, Array[Double])],
+                            k: Int): DataFrame = {
+    val truth = Pq.bruteDotKnn(e, queries, k)
+      .select(col("query_id"), col("neighbor_id"))
+    val recall = knn.select(col("query_id"), col("neighbor_id"))
+      .join(truth, Seq("query_id", "neighbor_id"))
+      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hits"))
+    knn.join(broadcast(recall), Seq("query_id"), "left")
+      .select(col("query_id"), col("rank"), col("neighbor_id"),
+        round(col("adc_dot"), 6).as("adc_dot"),
+        round(coalesce(col("n_hits"), lit(0L)).cast("double") / k.toDouble, 2)
+          .as(s"recall$k"))
+      .orderBy(col("query_id"), col("rank"))
+  }
+
   /** ✚ product quantization + ADC search ([[graft.ext.Pq]],
     * [[graft.functions.PqAdc]]) — the ANN memory ladder's next rung
     * after int8 (q124): m=8 per-subspace codebooks trained with the
@@ -3532,22 +3559,8 @@ object ExtensionQueries {
     val e = clusteredVecs(spark, dir)
     val cbs = GateFixtures.pqCodebooks(spark, dir)
     val encoded = Pq.encode(e, cbs, dims = 64)
-    val queries = e.filter(col("vec_id") < 3)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .orderBy(col("vec_id")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-    val adc = Pq.adcKnn(encoded, cbs, queries, k = 10)
-    val truth = Pq.bruteDotKnn(e, queries, k = 10)
-      .select(col("query_id"), col("neighbor_id"))
-    val recall = adc.select(col("query_id"), col("neighbor_id"))
-      .join(truth, Seq("query_id", "neighbor_id"))
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hits"))
-    adc.join(broadcast(recall), Seq("query_id"), "left")
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("adc_dot"), 6).as("adc_dot"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double") / 10.0, 2)
-          .as("recall10"))
-      .orderBy(col("query_id"), col("rank"))
+    val queries = pqQueries(e, 3)
+    withDotRecall(Pq.adcKnn(encoded, cbs, queries, k = 10), e, queries, 10)
   }
 
   /** One Lloyd assignment round against codebook CTE `cb`, emitting
@@ -3697,23 +3710,10 @@ object ExtensionQueries {
     val centroids = e.filter(col("vec_id") < 8)
     val encodedAssigned = Pq.encode(
       Similarity.assignToCentroids(e, centroids), cbs, dims = 64)
-    val queries = e.filter(col("vec_id") < 3)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .orderBy(col("vec_id")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+    val queries = pqQueries(e, 3)
     val knn = Pq.ivfAdcKnn(encodedAssigned, centroids, cbs, queries,
       k = 5, nprobe = 2)
-    val truth = Pq.bruteDotKnn(e, queries, k = 5)
-      .select(col("query_id"), col("neighbor_id"))
-    val recall = knn.select(col("query_id"), col("neighbor_id"))
-      .join(truth, Seq("query_id", "neighbor_id"))
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hits"))
-    knn.join(broadcast(recall), Seq("query_id"), "left")
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("adc_dot"), 6).as("adc_dot"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double") / 5.0, 2)
-          .as("recall5"))
-      .orderBy(col("query_id"), col("rank"))
+    withDotRecall(knn, e, queries, 5)
   }
 
   val q147Sql: String =
@@ -4158,23 +4158,10 @@ object ExtensionQueries {
     val seeds = res.filter(col("vec_id") >= 8 && col("vec_id") < 24)
     val resCbs = Pq.trainCodebooks(res, seeds, m = 8, dims = 64, iters = 2)
     val encodedAssigned = Pq.encode(res, resCbs, dims = 64)
-    val queries = e.filter(col("vec_id") < 3)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .orderBy(col("vec_id")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+    val queries = pqQueries(e, 3)
     val knn = Pq.ivfResidualAdcKnn(encodedAssigned, centroids, resCbs,
       queries, k = 10, nprobe = 2)
-    val truth = Pq.bruteDotKnn(e, queries, k = 10)
-      .select(col("query_id"), col("neighbor_id"))
-    val recall = knn.select(col("query_id"), col("neighbor_id"))
-      .join(truth, Seq("query_id", "neighbor_id"))
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hits"))
-    knn.join(broadcast(recall), Seq("query_id"), "left")
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("adc_dot"), 6).as("adc_dot"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double") / 10.0, 2)
-          .as("recall10"))
-      .orderBy(col("query_id"), col("rank"))
+    withDotRecall(knn, e, queries, 10)
   }
 
   val q152Sql: String = {

@@ -105,6 +105,31 @@ class PqSpec extends SparkSpec {
     an[IllegalArgumentException] should be thrownBy
       Pq.rerankKnn(corpus, corpus, IndexedSeq.empty, Seq((0L, new Array[Double](64))),
         k = 10, candidates = 5)
+    val qs = queriesOf(corpus, 2)
+    val centroids = corpus.filter(col("vec_id") < 8)
+    an[IllegalArgumentException] should be thrownBy
+      Pq.bruteDotKnn(corpus, qs, k = 0)
+    val oneCode = IndexedSeq.fill(4)(Seq((0L, new Array[Double](16))))
+    an[IllegalArgumentException] should be thrownBy
+      Pq.adcKnn(Pq.encode(corpus, oneCode, dims), oneCode, qs, k = 0)
+    an[IllegalArgumentException] should be thrownBy
+      Pq.ivfAdcKnn(corpus, centroids, IndexedSeq.empty, qs, k = 5, nprobe = 0)
+    an[IllegalArgumentException] should be thrownBy
+      Pq.ivfResidualAdcKnn(corpus, centroids, IndexedSeq.empty, qs, k = 5, nprobe = 0)
+  }
+
+  test("ivfAdcKnn probing every centroid equals adcKnn") {
+    val c = corpus.cache()
+    val cbs = Pq.trainCodebooks(c, c.filter(col("vec_id") < 8),
+      m = 4, dims = dims, iters = 2)
+    val centroids = c.filter(col("vec_id") < 8)
+    val qs = queriesOf(c, 3)
+    val all = Pq.ivfAdcKnn(Pq.encode(Similarity.assignToCentroids(c, centroids),
+        cbs, dims), centroids, cbs, qs, k = 5, nprobe = 8)
+      .collect().map(_.toSeq).sortBy(_.toString)
+    all shouldBe Pq.adcKnn(Pq.encode(c, cbs, dims), cbs, qs, k = 5)
+      .collect().map(_.toSeq).sortBy(_.toString)
+    c.unpersist()
   }
 
   test("PqAdc has value equality over its tables (canonicalization seam)") {

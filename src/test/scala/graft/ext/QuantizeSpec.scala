@@ -150,6 +150,17 @@ class QuantizeSpec extends SparkSpec {
     overlap should be >= 0.9
   }
 
+  test("ivfKnnQuantized probing every centroid equals bruteForceKnnQuantized") {
+    val queries = emb.filter(col("vec_id") < 5)
+    val centroids = emb.filter(col("vec_id") < 8)
+    val all = Quantize.ivfKnnQuantized(
+        Quantize.quantize(Similarity.assignToCentroids(emb, centroids)),
+        centroids, queries, k = 10, nprobe = 8)
+      .collect().map(_.toSeq).sortBy(_.toString)
+    all shouldBe Quantize.bruteForceKnnQuantized(emb, queries, k = 10)
+      .collect().map(_.toSeq).sortBy(_.toString)
+  }
+
   test("rerankKnn: candidates >= corpus equals float brute exactly; " +
     "3k-wide pass recovers at least the plain int8 recall") {
     val n = emb.count().toInt

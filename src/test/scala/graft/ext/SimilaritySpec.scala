@@ -159,6 +159,32 @@ class SimilaritySpec extends SparkSpec {
     trainedRecall should be >= recall(seeds) - 0.1
   }
 
+  test("kNN faces reject k < 1 and nprobe < 1 at plan construction, naming each") {
+    val queries = emb.filter(col("vec_id") < 3)
+    val centroids = emb.filter(col("vec_id") < 8)
+    def rejects(param: String)(search: => Any): Unit =
+      intercept[IllegalArgumentException](search).getMessage should include(
+        s"$param must be >= 1")
+    rejects("k")(Similarity.bruteForceKnn(emb, queries, k = 0))
+    rejects("k")(Similarity.bruteForceKnn(emb, queries, k = -1))
+    rejects("k")(Quantize.bruteForceKnnQuantized(emb, queries, k = 0))
+    rejects("nprobe")(Similarity.ivfKnn(emb, centroids, queries, k = 5, nprobe = 0))
+    rejects("nprobe")(Quantize.ivfKnnQuantized(
+      Quantize.quantize(Similarity.assignToCentroids(emb, centroids)),
+      centroids, queries, k = 5, nprobe = 0))
+  }
+
+  test("IVF probing every centroid equals brute force") {
+    val queries = emb.filter(col("vec_id") < 5)
+    val centroids = emb.filter(col("vec_id") < 8)
+    val all = Similarity.ivfKnnPreassigned(
+        Similarity.assignToCentroids(emb, centroids), centroids, queries,
+        k = 10, nprobe = 8)
+      .collect().map(_.toSeq).sortBy(_.toString)
+    all shouldBe Similarity.bruteForceKnn(emb, queries, k = 10)
+      .collect().map(_.toSeq).sortBy(_.toString)
+  }
+
   test("SRP planes are deterministic ±1 and engine-rebuildable") {
     val p1 = Similarity.srpPlanes(4, 16)
     val p2 = Similarity.srpPlanes(4, 16)
@@ -235,8 +261,10 @@ class SimilaritySpec extends SparkSpec {
     import spark.implicits._
     val good = emb.filter(col("vec_id") < 4)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+    val holed = Seq(98L).toDF("vec_id").select(col("vec_id"), array((0 until 64)
+      .map(i => if (i == 1) lit(null).cast("double") else lit(1.0)): _*).as("embedding"))
     val withNull = good.unionByName(
-      Seq((99L, null: Seq[Double])).toDF("vec_id", "embedding"))
+      Seq((99L, null: Seq[Double])).toDF("vec_id", "embedding")).unionByName(holed)
     val (base, banded) = Similarity.srpFrames(withNull, "vec_id", "embedding",
       2, 4, 64)
     try {
